@@ -15,6 +15,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_editor_spark.boundary import stage_boundary
 from parquet_editor_spark.litexpr import lit_doubles as _lit_doubles
 from parquet_editor_spark.operators import query as q
 
@@ -27,23 +28,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
         return load_parquet_nanos(spark, f"{sf_dir}/events.parquet")
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _seam(df: DataFrame) -> DataFrame:
-    """Eager stage boundary for deep-composed DAGs: materialize a
-    bounded-cardinality intermediate (host graph / robots table —
-    ≤ host-cardinality rows) and TRUNCATE its lineage, so every
-    downstream reference — pagerank's 2^iters unrolled recurrence,
-    the rules/delays/ages fan-out — replans over a table leaf instead
-    of re-walking the full extraction subplan.  Values are untouched
-    (same rows, same order source); this is the curation-DAG
-    checkpoint convention applied at the frontier stage seams.
-    Local default: executor-local checkpoint; set
-    ``SPARK_GRAFT_CHECKPOINT_DIR`` for reliable production
-    checkpoints (see ``parquet_editor_spark.boundary``)."""
-    from parquet_editor_spark.boundary import stage_boundary
-
-    return stage_boundary(df)
 
 
 def _revenue_exact() -> "F.Column":
@@ -4398,7 +4382,7 @@ def _v5_curation_kept(
     # the codec walks and the URL/robots tier ONCE and truncates them
     # out of all three references' analyzed plans; at 100 TB this
     # boundary is a checkpointed table between pipeline stages
-    capped = _seam(U.host_cap(allowed, "host", 3, ["doc_id"]))
+    capped = stage_boundary(U.host_cap(allowed, "host", 3, ["doc_id"]))
 
     d = F.col("doc_id")
     pieces = [
@@ -4469,7 +4453,7 @@ def q_pipeline_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # second boundary: the pack reads the id table twice (placement +
     # ids join) — persist the tokenized frame for the same reason
-    toks = _seam(  # pack references the id stream twice
+    toks = stage_boundary(  # pack references the id stream twice
         TP.bpe_tokenize(gated, "doc_id", "norm", _BPE_MERGES, _BPE_VOCAB)
     )
     blocks = TP.pack_id_blocks(
@@ -4541,7 +4525,7 @@ def q_pipeline_curation_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__margin") > 0)
         .select("doc_id", _bpe_norm("text").alias("norm"))
     )
-    toks = _seam(  # pack references the id stream twice
+    toks = stage_boundary(  # pack references the id stream twice
         TP.bpe_tokenize(gated, "doc_id", "norm", _BPE_MERGES, _BPE_VOCAB)
     )
     blocks = TP.pack_id_blocks(
@@ -4642,7 +4626,7 @@ def q_pipeline_curation_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__margin") > F.lit(t_star))
         .select("doc_id", _bpe_norm("text").alias("norm"))
     )
-    toks = _seam(  # pack references the id stream twice
+    toks = stage_boundary(  # pack references the id stream twice
         TP.bpe_tokenize(gated, "doc_id", "norm", _BPE_MERGES, _BPE_VOCAB)
     )
     blocks = TP.pack_id_blocks(
@@ -4701,7 +4685,7 @@ def q_pipeline_curation_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
     # front half ONCE and truncates it out of all three references'
     # analyzed plans (the v9 handoff rule, r16); at 100 TB this is a
     # checkpointed table between pipeline stages
-    kept = _seam(_v5_curation_kept(spark, sf_dir, plant_run=True))
+    kept = stage_boundary(_v5_curation_kept(spark, sf_dir, plant_run=True))
     ssd = D.substring_dedup(
         kept, "id", "kept_text", min_len=40, k=8, w=4
     )
@@ -4718,7 +4702,7 @@ def q_pipeline_curation_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", _bpe_norm("kept_text").alias("norm"))
     )
 
-    toks = _seam(  # pack references the id stream twice
+    toks = stage_boundary(  # pack references the id stream twice
         TP.bpe_tokenize(gated, "doc_id", "norm", _BPE_MERGES, _BPE_VOCAB)
     )
     blocks = TP.pack_id_blocks(
@@ -4812,8 +4796,8 @@ def _v9_fim_stream(spark: SparkSession, sf_dir: str):
     # subtree) — the analyzed plan alone OOMs the driver.  At 100 TB
     # these are exactly the materialized tables a pipeline writes
     # between stages; lineage truncation is the point, not a cache.
-    kept = _seam(_v5_curation_kept(spark, sf_dir, plant_run=True))
-    ssd = _seam(
+    kept = stage_boundary(_v5_curation_kept(spark, sf_dir, plant_run=True))
+    ssd = stage_boundary(
         D.substring_dedup(kept, "id", "kept_text", min_len=40, k=8, w=4)
         .select("id", "kept_text")
     )
@@ -4842,7 +4826,7 @@ def _v9_fim_stream(spark: SparkSession, sf_dir: str):
             "doc_id",
         )
     )
-    gated = _seam(gated)  # counts/weights/selection all re-read it
+    gated = stage_boundary(gated)  # counts/weights/selection all re-read it
     counts = gated.groupBy("lang").agg(
         F.count("*").cast("long").alias("n_docs")
     )
@@ -4931,8 +4915,8 @@ def _v10_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `fimmed` once more — over live lineage each reference re-expands
     # the whole curated front (~190 exchanges in the analyzed plan);
     # materialized, the downstream plan starts at the boundary
-    sel = _seam(sel)
-    fimmed = _seam(fimmed)
+    sel = stage_boundary(sel)
+    fimmed = stage_boundary(fimmed)
     srcd = sel.select(
         F.concat(
             F.lit("src"), (F.col("doc_id") % 4).cast("string")
@@ -5049,7 +5033,7 @@ def _v11_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the v10 handoff rule: the trainer's vocab pass, the tokenize
     # pass and the pack all re-read the selected corpus — over live
     # lineage each reference re-expands the curated front
-    sel = _seam(sel)
+    sel = stage_boundary(sel)
     learned = sorted(
         TP.byte_bpe_train(
             sel.select("kept_text"), "kept_text", n_merges=8
@@ -7339,7 +7323,7 @@ def q_outlink_graph_rank(
         "src",
         U.url_host(U.resolve_url("page_url", "href")).alias("dst"),
     )
-    edges = _seam(  # host-pair cardinality; see crawl_frontier_v4
+    edges = stage_boundary(  # host-pair cardinality; see crawl_frontier_v4
         links.filter(F.col("src") != F.col("dst"))
         .distinct()
         .select("src", "dst", F.lit(1.0).alias("w"))
@@ -7581,7 +7565,7 @@ def q_crawl_frontier_v3(
             ).alias("robots"),
         )
     )
-    hosts = _seam(hosts)  # sitemap discovery + rules + delays re-read
+    hosts = stage_boundary(hosts)  # sitemap discovery + rules + delays re-read
     # discovery -> deterministic per-sitemap XML "fetch" -> <loc>s
     disc = U.robots_sitemaps(hosts, "host", "robots")
     xml = F.when(
@@ -7650,7 +7634,7 @@ def q_crawl_frontier_v3(
             ).alias("canon_url")
         )
     )
-    frontier = _seam(  # bloom probe + robots filter re-read it
+    frontier = stage_boundary(  # bloom probe + robots filter re-read it
         locs.unionByName(outl)
         .distinct()
         .select(
@@ -7780,7 +7764,7 @@ def q_crawl_frontier_v4(
     # unrolled iterations re-read the materialized pairs AND replan
     # over a table leaf instead of re-walking the extraction subplan
     # once per recurrence reference
-    edges = _seam(
+    edges = stage_boundary(
         links.select(
             U.url_host("page_url").alias("src"),
             U.url_host("canon_url").alias("dst"),
@@ -7793,7 +7777,7 @@ def q_crawl_frontier_v4(
         F.col("node").alias("host"), F.col("rank").alias("host_rank")
     )
     k = F.col("k")
-    hosts = _seam(  # host-sized; read by rules, delays and ages
+    hosts = stage_boundary(  # host-sized; read by rules, delays and ages
         docs.select((d % 13).alias("k"))
         .distinct()
         .select(
@@ -7948,7 +7932,7 @@ def q_crawl_frontier_v5(
     tgt = scored.groupBy("canon_url").agg(
         F.sum("rel").cast("long").alias("rel_sum")
     )
-    edges = _seam(
+    edges = stage_boundary(
         links.select(
             U.url_host("page_url").alias("src"),
             U.url_host("canon_url").alias("dst"),
@@ -7985,7 +7969,7 @@ def q_crawl_frontier_v5(
         D.bloom_build(day2, "key", n_words=16, k=4),
     )
     k = F.col("k")
-    hosts = _seam(  # host-sized; read by rules, delays and ages
+    hosts = stage_boundary(  # host-sized; read by rules, delays and ages
         docs.select((d % 13).alias("k"))
         .distinct()
         .select(
@@ -8379,7 +8363,7 @@ def q_crawl_frontier_v2(
     # multi-consumer boundary (robots filter + host derivation):
     # eager seam so the extraction subtree runs once AND is analyzed
     # once (the v5 rule, r16 seam form)
-    frontier = _seam(frontier)
+    frontier = stage_boundary(frontier)
     hosts = frontier.select("host").distinct().select(
         "host",
         F.concat(
@@ -8392,7 +8376,7 @@ def q_crawl_frontier_v2(
         ).alias("robots"),
     )
     # hosts feeds both the rule parse and the delay parse
-    hosts = _seam(hosts)
+    hosts = stage_boundary(hosts)
     rules = U.robots_rules(hosts, "host", "robots")
     allowed = U.robots_allowed(frontier, rules, "host", "path").filter(
         F.col("allowed") == 1
@@ -10937,7 +10921,7 @@ def q_ivfadc_rerank_depth_sweep(
         encoded, cents, books, qset, "vec_id", "embedding",
         topk=40, nprobe=3, round_to=6, cell_round=6,
     )
-    scored = _seam(  # four sweep points re-read the |Q|·40 scored
+    scored = stage_boundary(  # four sweep points re-read the |Q|·40 scored
         S.exact_score_pairs(  # pairs; the seam also truncates the
             emb,  # index-build lineage out of the 4-way union plan
             qset,
@@ -10993,7 +10977,7 @@ def q_ivfadc_rerank_depth_sweep(
         .filter(F.col("__r") <= 5)
         .select(F.col("q.qid").alias("query_id"), "neighbor_id")
     )
-    exact = _seam(exact)  # |Q|*5 rows; truncates the brute-force plan
+    exact = stage_boundary(exact)  # |Q|*5 rows; truncates the brute-force plan
 
     outs = []
     for kp in (5, 10, 20, 40):
@@ -11218,7 +11202,7 @@ def q_winnow_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both self-join sides re-derived the O(len·k) gram hashing
     # through live lineage (~4 hash passes per run) — materialize the
     # fingerprint table once (the substring_dedup r17 rule)
-    fps = _seam(D.winnow_fingerprints(docs, "doc_id", "text", k=8, w=4))
+    fps = stage_boundary(D.winnow_fingerprints(docs, "doc_id", "text", k=8, w=4))
     dfreq = fps.groupBy("fp").agg(F.count("*").alias("__n"))
     kept = fps.join(
         dfreq.filter((F.col("__n") >= 2) & (F.col("__n") <= 20)),
@@ -13635,7 +13619,7 @@ def q_pagerank_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     trans = ev.select(
         "event_type", F.lag("event_type").over(w).alias("prev")
     ).filter(F.col("prev").isNotNull())
-    edges = _seam(  # event-type-pair cardinality; see crawl_frontier_v4
+    edges = stage_boundary(  # event-type-pair cardinality; see crawl_frontier_v4
         trans.groupBy(
             F.col("prev").alias("src"), F.col("event_type").alias("dst")
         ).agg(F.count("*").cast("double").alias("w"))

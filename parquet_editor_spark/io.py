@@ -481,13 +481,6 @@ def _footer_nanos_cols(path: str):
         return None
 
 
-def _footer_has_nanos(path: str) -> bool:
-    """True when the footer carries NANOS anywhere — or when the probe
-    can't tell (the tolerant path is always correct)."""
-    cols = _footer_nanos_cols(path)
-    return cols is None or bool(cols)
-
-
 def load_parquet_nanos(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan tolerant of TIMESTAMP(NANOS) columns.
 

@@ -11,13 +11,18 @@ Scale design (SURVEY.md §4 "custom work"):
 
 * ``with_rid`` NEVER uses a global ``row_number()`` window — that is a
   single-partition sort, the canonical 100 TB anti-pattern. Instead it
-  uses the zip-with-index decomposition: per-partition counts (a
-  #partitions-row aggregate), cumulative offsets broadcast to every
-  task, then a no-shuffle per-partition local rank. O(n) work, two
-  narrow passes, no data shuffle.
+  uses the zip-with-index decomposition entirely in the JVM:
+  ``monotonically_increasing_id`` (partition index + local rank) is
+  pinned by a persist, per-partition counts (a #partitions-row
+  aggregate) give cumulative offsets broadcast to every task, and
+  the ordinal is id minus a per-partition delta. O(n) work, two
+  narrow passes, no data shuffle, no Python worker.
 * ``ordered_rid`` (rank by key columns) range-partitions first —
   Spark's sampled range partitioner — then applies the same offset
   trick, so even a total order never serializes through one task.
+* Row deletes and paste splices re-rank by ordinal arithmetic that
+  binds the incoming ``__rid`` once (``_rerank``), so a page filter
+  pushed through k uncompacted re-ranks grows linearly in k.
 * Point edits compose as ``when()`` projections (an edit OVERLAY).
   Chained edits deepen the plan, not the data; ``compact()``
   checkpoints the overlay into a materialized DataFrame when the
@@ -44,69 +49,45 @@ RID = "__rid"
 def _rid_from_partition_offsets(df: DataFrame) -> DataFrame:
     """Zip-with-index: rid = cumulative-offset(partition) + local index.
 
-    One narrow ``mapInPandas`` pass annotates each row with its
-    partition id and local row number; that result is PERSISTED so the
-    partition layout is pinned (``spark_partition_id`` is NOT stable
-    across separate evaluations of an unpinned plan — e.g. a local
-    collection can re-split differently per job). A #partitions-row
-    aggregate then yields cumulative offsets, joined back broadcast.
+    ``monotonically_increasing_id`` already encodes the (partition
+    index, local row index) pair as ``(pid << 33) + lrn``, so one JVM
+    projection annotates each row — no Python worker. That result is
+    PERSISTED so the partition layout is pinned (the id is
+    nondeterministic: a local collection can re-split differently per
+    job). A #partitions-row aggregate then yields cumulative offsets,
+    joined back broadcast, and ``rid = mid - ((pid << 33) - offset)``.
     No data shuffle, no sort, O(n) work; the per-partition scan order
     defines the ordinal, matching the reference's "order = load order"
     model. On a cluster the persist would be MEMORY_AND_DISK over
     executors — the same code path."""
-    from pyspark import StorageLevel, TaskContext
+    from pyspark import StorageLevel
 
-    spark = df.sparkSession
-    ann_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("__pid", T.IntegerType(), False),
-            T.StructField("__lrn", T.LongType(), False),
-        ]
-    )
-
-    def add_lrn(batches):
-        # TaskContext gives the real partition index inside the worker;
-        # spark_partition_id() is unreliable across re-evaluations of
-        # local/Arrow plans.
-        pid = TaskContext.get().partitionId()
-        seen = 0
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["__pid"] = pid
-            pdf["__lrn"] = range(seen, seen + len(pdf))
-            seen += len(pdf)
-            yield pdf
-
-    annotated = df.mapInPandas(add_lrn, schema=ann_schema).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    counts = annotated.groupBy("__pid").agg(F.count("*").alias("__n")).collect()
-    offsets, acc = [], 0
-    for r in sorted(counts, key=lambda r: r["__pid"]):
-        offsets.append((r["__pid"], acc))
-        acc += r["__n"]
-    if not offsets:
-        offsets = [(0, 0)]
-    # JVM VALUES relation (r17 — litexpr.values_df): the broadcast of
-    # a Python-parallelized local relation runs one job over
-    # defaultParallelism python slices per with_rid call; a JVM
-    # LocalRelation broadcasts driver-side
     from parquet_editor_spark.litexpr import values_df
 
+    annotated = df.withColumn("__mid", F.monotonically_increasing_id()).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    pid = F.shiftright(F.col("__mid"), 33)
+    counts = annotated.groupBy(pid.alias("__pid")).agg(F.count("*").alias("__n")).collect()
+    # per partition: (pid << 33) - offset, subtracted from the id below
+    deltas, acc = [], 0
+    for r in sorted(counts, key=lambda r: r["__pid"]):
+        deltas.append(f"({int(r['__pid'])}L,{(int(r['__pid']) << 33) - acc}L)")
+        acc += r["__n"]
+    # a JVM VALUES relation broadcasts driver-side (litexpr.values_df);
+    # every row's partition has a delta — both sides read the same pin
     off_df = values_df(
-        spark,
-        [f"({int(p)},{int(o)}L)" for p, o in offsets],
-        "col1 AS ___pid, col2 AS __off",
+        df.sparkSession, deltas or ["(0L,0L)"], "col1 AS __pid, col2 AS __delta"
     )
     out = (
-        annotated.join(F.broadcast(off_df), annotated["__pid"] == off_df["___pid"], "left")
-        .withColumn(RID, F.coalesce(F.col("__off"), F.lit(0)) + F.col("__lrn"))
+        annotated.join(F.broadcast(off_df), pid == off_df["__pid"])
+        .withColumn(RID, F.col("__mid") - F.col("__delta"))
         .select(RID, *df.columns)
     )
     # expose the pinned cache so a session-level owner can release it
-    # when the rid'd frame is discarded (EditorSession does on rebind);
-    # without this handle every with_rid call leaks one persisted copy
+    # when the rid'd frame is discarded (EditorSession does on rebind
+    # and drop_table); without this handle every with_rid call leaks
+    # one persisted copy
     out._pes_rid_base = annotated
     return out
 
@@ -245,27 +226,30 @@ def get_cell(df: DataFrame, rid: int, column: str):
 # row ops (delete / cut / paste splice) — main.py:48-65, main.pyc:122-126
 # ---------------------------------------------------------------------------
 
-def _shift_expr(rids: Sequence[int]) -> Column:
-    """How many of ``rids`` sit at-or-below each row — computed with a
-    broadcast array literal + higher-order filter, so deleting k rows
-    costs one narrow projection (k is edit-sized, not data-sized).
-    The literal renders as ONE SQL expression (r17 — litexpr: one
-    Py4J round-trip per edit batch instead of one per rid)."""
-    return F.size(
-        F.filter(lit_longs(int(r) for r in rids), lambda x: x < F.col(RID))
-    )
+def _rerank(fn) -> Column:
+    """New ``__rid`` as ``fn(old __rid)``, with the old ordinal bound
+    ONCE through a lambda. Filter pushdown substitutes every reference
+    to ``__rid`` with the expression below it, so a re-rank naming it
+    n times multiplies a pushed page filter by n per uncompacted
+    delete or paste; bound once, the filter grows linearly."""
+    return F.transform(F.array(F.col(RID)), fn)[0]
 
 
 def delete_rows(df: DataFrame, rids: Iterable[int]) -> DataFrame:
     """Positional delete (main.pyc:122-126) + dense re-rank.
 
-    Re-rank is ordinal arithmetic (rid minus deleted-below count), not
-    a re-sort: no shuffle, stays a narrow projection."""
+    Re-rank is ordinal arithmetic (rid minus deleted-below count, from
+    a broadcast array literal + higher-order filter), not a re-sort:
+    no shuffle, stays a narrow projection. The literal renders as ONE
+    SQL expression (litexpr: one Py4J round-trip per edit batch)."""
     rids = sorted(set(int(r) for r in rids))
     if not rids:
         return df
     kept = df.filter(~F.col(RID).isin(rids))
-    return kept.withColumn(RID, F.col(RID) - _shift_expr(rids))
+    gone = lit_longs(rids)
+    return kept.withColumn(
+        RID, _rerank(lambda r: r - F.size(F.filter(gone, lambda x: x < r)))
+    )
 
 
 def cut_rows(df: DataFrame, rids: Iterable[int]) -> tuple[DataFrame, DataFrame]:
@@ -294,7 +278,7 @@ def paste_rows(df: DataFrame, clip: DataFrame, pos: int) -> DataFrame:
     if k == 0:
         return df
     shifted = df.withColumn(
-        RID, F.when(F.col(RID) >= pos, F.col(RID) + k).otherwise(F.col(RID))
+        RID, _rerank(lambda r: F.when(r >= pos, r + k).otherwise(r))
     )
     clip_at = clip.withColumn(RID, F.col(RID) + F.lit(pos))
     return shifted.unionByName(clip_at)

@@ -34,8 +34,6 @@ dependency, and automatic in local mode.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -117,14 +115,6 @@ def _decode_real(payload: bytes, codec: str):
         "in this environment — use the built-in codecs (png, jpeg, "
         "gif, bmp, tiff) or codec='fake' for pipeline testing"
     )
-
-
-def _decode_fake(payload: bytes) -> tuple[int, int, int]:
-    """Deterministic fake decode: (width, height, channels) derived
-    from the payload digest — stable across runs/engines, no pixel
-    pretence."""
-    d = hashlib.md5(payload).digest()
-    return 16 + d[0] % 1024, 16 + d[1] % 1024, 1 + d[2] % 4
 
 
 def decode_meta(

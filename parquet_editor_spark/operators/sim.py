@@ -64,23 +64,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
-def with_unit_vector(df: DataFrame, vec_col: str, out: str) -> DataFrame:
-    """Stage a pre-normalized copy of the vector column: cosine then
-    reduces to ONE dot-product fold per pair instead of three (dot +
-    two norms), and each row's norm is computed once, not once per
-    pair. Zero-norm vectors normalize to NULL (cosine undefined).
-    The norm lands in a real intermediate column so the per-element
-    division references an attribute, not a re-evaluated expression."""
-    staged = df.withColumn("__norm", l2_norm(F.col(vec_col)))
-    return staged.withColumn(
-        out,
-        F.when(
-            F.col("__norm") > 0,
-            F.transform(F.col(vec_col), lambda x: x.cast("double") / F.col("__norm")),
-        ),
-    ).drop("__norm")
-
-
 def sq_euclidean(a: Column, b: Column) -> Column:
     """Σ (aᵢ−bᵢ)² — matches the k-means quantizer's metric."""
     return F.aggregate(

@@ -162,6 +162,7 @@ class EditorSession:
         self._undo: dict[str, list[DataFrame]] = {}
         self._redo: dict[str, list[DataFrame]] = {}
         self._edit_depth: dict[str, int] = {}
+        self._clipboard: Optional[DataFrame] = None
 
     # -- catalog -----------------------------------------------------
     def names(self) -> list[str]:
@@ -206,52 +207,64 @@ class EditorSession:
         df.createOrReplaceTempView(name)
         return df
 
-    def _release_rid_frame(self, name: str) -> None:
-        cached = self._rid_frames.pop(name, None)
-        base = getattr(cached, "_pes_rid_base", None)
+    @staticmethod
+    def _release(df: Optional[DataFrame]) -> None:
+        """Unpersist the ordinal pin ``with_rid`` attached to ``df``."""
+        base = getattr(df, "_pes_rid_base", None)
         if base is not None:
             base.unpersist()
+
+    def _release_rid_frame(self, name: str) -> None:
+        self._release(self._rid_frames.pop(name, None))
 
     def _rid_frame(self, name: str):
         """Per-binding cached ordinal view: with_rid pins a persisted
         copy of the table to keep ordinals stable, so it must be built
         ONCE per binding and released on rebind — rebuilding it per
-        preview page would leak one materialized copy per page."""
-        if name not in self._rid_frames:
-            from parquet_editor_spark.operators.edit import with_rid
+        preview page would leak one materialized copy per page.
 
-            self._rid_frames[name] = with_rid(self._tables[name])
+        A binding that already carries ``__rid`` is its own ordinal view
+        and is not cached: its pin belongs to the binding history, which
+        later edits derive from, and is released by ``drop_table``."""
+        from parquet_editor_spark.operators.edit import RID, with_rid
+
+        df = self._tables[name]
+        if RID in df.columns:
+            return df
+        if name not in self._rid_frames:
+            self._rid_frames[name] = with_rid(df)
         return self._rid_frames[name]
 
     def drop_table(self, name: str) -> None:
-        self._tables.pop(name, None)
-        self._undo.pop(name, None)
-        self._redo.pop(name, None)
+        """Close a table: every binding in its history goes, and with
+        them every ordinal pin a ``with_rid`` binding persisted."""
+        history = [self._tables.pop(name, None)]
+        history += self._undo.pop(name, []) + self._redo.pop(name, [])
+        for df in history:
+            self._release(df)
         self._release_rid_frame(name)
         self.spark.catalog.dropTempView(name)
 
     # -- undo / redo -------------------------------------------------
-    def undo(self, name: str) -> DataFrame:
-        stack = self._undo.get(name) or []
+    def _step(self, name: str, back: dict, forth: dict, verb: str) -> DataFrame:
+        """Pop ``name``'s previous binding off ``back`` and push the
+        current one onto ``forth`` — undo and redo are this one move
+        in opposite directions."""
+        stack = back.get(name) or []
         if not stack:
-            raise IndexError(f"nothing to undo for table {name!r}")
-        self._redo.setdefault(name, []).append(self._tables[name])
+            raise IndexError(f"nothing to {verb} for table {name!r}")
+        forth.setdefault(name, []).append(self._tables[name])
         df = stack.pop()
         self._tables[name] = df
         self._release_rid_frame(name)  # ordinal view belongs to the old binding
         df.createOrReplaceTempView(name)
         return df
 
+    def undo(self, name: str) -> DataFrame:
+        return self._step(name, self._undo, self._redo, "undo")
+
     def redo(self, name: str) -> DataFrame:
-        stack = self._redo.get(name) or []
-        if not stack:
-            raise IndexError(f"nothing to redo for table {name!r}")
-        self._undo.setdefault(name, []).append(self._tables[name])
-        df = stack.pop()
-        self._tables[name] = df
-        self._release_rid_frame(name)
-        df.createOrReplaceTempView(name)
-        return df
+        return self._step(name, self._redo, self._undo, "redo")
 
     def can_undo(self, name: str) -> bool:
         return bool(self._undo.get(name))
@@ -359,7 +372,7 @@ class EditorSession:
         """Paste the clipboard at a position (main.py:58-65)."""
         from parquet_editor_spark.operators import edit as E
 
-        if getattr(self, "_clipboard", None) is None:
+        if self._clipboard is None:
             raise ValueError("clipboard is empty; cut rows first")
         return self.bind(name, E.paste_rows(self._tables[name], self._clipboard, pos))
 

@@ -107,14 +107,6 @@ def _expand_key(key: bytes) -> list[bytes]:
     return [b"".join(words[4 * r : 4 * r + 4]) for r in range(nr + 1)]
 
 
-def _shift_rows(s: bytearray) -> None:
-    # state is column-major: byte (row r, col c) at index 4*c + r
-    for r in range(1, 4):
-        row = [s[4 * c + r] for c in range(4)]
-        for c in range(4):
-            s[4 * c + r] = row[(c + r) % 4]
-
-
 def _inv_shift_rows(s: bytearray) -> None:
     for r in range(1, 4):
         row = [s[4 * c + r] for c in range(4)]

@@ -106,6 +106,29 @@ def test_paste_middle(sdf, pdf):
     pd.testing.assert_frame_equal(got, want)
 
 
+def test_uncompacted_rerank_plans_grow_linearly(spark):
+    """Each delete/paste re-rank binds the incoming ``__rid`` once, so
+    a page filter pushed down through k uncompacted re-ranks grows
+    linearly in k. A re-rank naming ``__rid`` twice (delete) or three
+    times (paste) made the optimised plan grow geometrically."""
+    from pyspark.sql import functions as F
+
+    base = E.with_rid(spark.range(40).toDF("i"))
+    clip, _ = E.cut_rows(base, [5])
+
+    def page_plan_len(k):
+        df = base
+        for _ in range(k):
+            df = E.delete_rows(df, [1, 3])
+        for _ in range(k):
+            df = E.paste_rows(df, clip, 2)
+        page = df.filter((F.col(E.RID) >= 10) & (F.col(E.RID) < 20))
+        return len(page._jdf.queryExecution().optimizedPlan().toString())
+
+    l0, l2, l4 = page_plan_len(0), page_plan_len(2), page_plan_len(4)
+    assert l4 - l2 <= 2 * (l2 - l0), (l0, l2, l4)
+
+
 def test_add_column_typed_defaults(sdf, pdf):
     # bool→False, int→0, float→0.0, else None (main.pyc:104-111)
     out = E.add_column(sdf, "nb", "bool", pos=1)

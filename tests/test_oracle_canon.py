@@ -3,14 +3,16 @@ is load-bearing infrastructure (it is what caught the HUGEINT, DECIMAL
 and tie-ordering divergences in r3) — pin its rendering rules."""
 
 import importlib.util
+import os
 import sys
 
 import numpy as np
 import pandas as pd
 import pytest
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 spec = importlib.util.spec_from_file_location(
-    "check_oracle", "/root/repo/tools/check_oracle.py"
+    "check_oracle", os.path.join(REPO, "tools", "check_oracle.py")
 )
 co = importlib.util.module_from_spec(spec)
 sys.modules["check_oracle"] = co
@@ -62,7 +64,7 @@ def test_compare_is_row_order_insensitive():
 
 
 def test_expected_divergent_set_matches_entry_probes():
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as M
 
     qs = set(M.queries())

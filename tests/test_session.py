@@ -61,6 +61,26 @@ def test_drop_table_releases_rid_cache(sess, sf_dir):
     assert "t" not in sess._rid_frames
 
 
+def test_drop_table_releases_every_ordinal_pin(sess, sf_dir):
+    """The with_rid pin stays held while edits derive from it, and
+    closing the document returns the persisted-RDD count to its
+    pre-load value: the pin sits in the undo history once edits follow
+    it, and drop_table must release it from there too. Five edits stay
+    below COMPACT_EVERY, whose localCheckpoint is not a persist and is
+    not released by unpersist."""
+    jsc = sess.spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    sess.load("t", f"{sf_dir}/region.parquet")
+    sess.with_rid("t")
+    sess.preview("t", n=3)  # a view of the pinned binding itself
+    for k in range(5):
+        sess.set_cell("t", k, "r_name", f"edit {k}")
+    sess.preview("t", n=3)
+    assert jsc.getPersistentRDDs().size() == before + 1
+    sess.drop_table("t")
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_new_edit_invalidates_redo(sess, sf_dir):
     sess.load("t", f"{sf_dir}/region.parquet")
     sess.bind("t", sess.get("t").limit(3))

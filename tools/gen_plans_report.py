@@ -7,9 +7,11 @@ Usage: python tools/gen_plans_report.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -42,7 +44,7 @@ def main() -> None:
         except Exception as e:  # pragma: no cover
             rows.append((name, f"error: {e}", "", "", ""))
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(
             "# PLANS — physical-plan scorecard (generated)\n\n"
             "Per driver query at sf0.01: does the plan push filters into the\n"
