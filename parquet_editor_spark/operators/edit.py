@@ -15,8 +15,12 @@ Scale design (SURVEY.md §4 "custom work"):
   ``monotonically_increasing_id`` (partition index + local rank) is
   pinned by a persist, per-partition counts (a #partitions-row
   aggregate) give cumulative offsets broadcast to every task, and
-  the ordinal is id minus a per-partition delta. O(n) work, two
-  narrow passes, no data shuffle, no Python worker.
+  the ordinal is id minus a per-partition delta. O(n) work, no data
+  shuffle, no Python worker. The FINISHED ``__rid`` frame is what
+  stays pinned: it is persisted and built once at ``with_rid`` time,
+  the id pin is released, and every later view, edit, save and plot
+  plans from a cached leaf that already holds ``__rid`` instead of
+  re-running the offset join.
 * ``ordered_rid`` (rank by key columns) range-partitions first —
   Spark's sampled range partitioner — then applies the same offset
   trick, so even a total order never serializes through one task.
@@ -52,14 +56,20 @@ def _rid_from_partition_offsets(df: DataFrame) -> DataFrame:
     ``monotonically_increasing_id`` already encodes the (partition
     index, local row index) pair as ``(pid << 33) + lrn``, so one JVM
     projection annotates each row — no Python worker. That result is
-    PERSISTED so the partition layout is pinned (the id is
-    nondeterministic: a local collection can re-split differently per
-    job). A #partitions-row aggregate then yields cumulative offsets,
-    joined back broadcast, and ``rid = mid - ((pid << 33) - offset)``.
-    No data shuffle, no sort, O(n) work; the per-partition scan order
-    defines the ordinal, matching the reference's "order = load order"
-    model. On a cluster the persist would be MEMORY_AND_DISK over
-    executors — the same code path."""
+    PERSISTED so the partition layout holds while the ordinal is built
+    (the id is nondeterministic: a local collection can re-split
+    differently per job). A #partitions-row aggregate then yields
+    cumulative offsets, joined back broadcast, and
+    ``rid = mid - ((pid << 33) - offset)``.
+
+    The joined ``__rid`` frame is then persisted itself and built
+    eagerly while the id pin still holds; after that the id pin is
+    released. What stays pinned is exactly one copy: the finished
+    ordinal frame, exposed as ``_pes_rid_base`` so its owner can
+    release it. No data shuffle, no sort, O(n) work; the per-partition
+    scan order defines the ordinal, matching the reference's "order =
+    load order" model. On a cluster the persists are MEMORY_AND_DISK
+    over executors — the same code path."""
     from pyspark import StorageLevel
 
     from parquet_editor_spark.litexpr import values_df
@@ -83,12 +93,19 @@ def _rid_from_partition_offsets(df: DataFrame) -> DataFrame:
         annotated.join(F.broadcast(off_df), pid == off_df["__pid"])
         .withColumn(RID, F.col("__mid") - F.col("__delta"))
         .select(RID, *df.columns)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # expose the pinned cache so a session-level owner can release it
-    # when the rid'd frame is discarded (EditorSession does on rebind
-    # and drop_table); without this handle every with_rid call leaks
-    # one persisted copy
-    out._pes_rid_base = annotated
+    # build the ordinal pin while the id pin still holds, then drop the
+    # id pin: a loaded cache no longer reads the plan beneath it. The
+    # noop sink computes every partition in one job; count() would add
+    # an aggregation stage and a job for its result
+    out.write.format("noop").mode("overwrite").save()
+    annotated.unpersist()
+    # expose the pin so a session-level owner can release it when the
+    # rid'd frame is discarded (EditorSession does on rebind and
+    # drop_table); without this handle every with_rid call leaks one
+    # persisted copy
+    out._pes_rid_base = out
     return out
 
 

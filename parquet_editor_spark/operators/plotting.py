@@ -29,11 +29,18 @@ def line_series(
     """Line-plot series (main.pyc:371-374: index vs numeric columns),
     stride-downsampled so at most ~max_points rows reach the client
     regardless of table size. x = the row ordinal (the reference plots
-    against the pandas index)."""
-    cols = list(cols or q.numeric_columns(df))
+    against the pandas index): the frame's own ``__rid`` when it has
+    one and no ``order`` is given, so the plot follows the editor's
+    row order after cuts, pastes and deletes."""
+    cols = list(cols or [c for c in q.numeric_columns(df) if c != RID])
     if not cols:
         raise ValueError("no numeric columns to plot")  # main.pyc:405-416
-    d = with_rid(df.select(*cols), order) if order is None else with_rid(df, list(order)).select(RID, *cols)
+    if order is not None:
+        d = with_rid(df, list(order)).select(RID, *cols)
+    elif RID in df.columns:
+        d = df.select(RID, *cols)
+    else:
+        d = with_rid(df.select(*cols))
     n = d.count()
     stride = max(1, math.ceil(n / max_points))
     return (

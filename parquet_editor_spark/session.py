@@ -321,9 +321,17 @@ class EditorSession:
 
         df = self._tables[name]
         if kind == "line":
-            pdf = P.line_series(
-                df, kw.get("cols"), kw.get("max_points", 1000)
-            ).toPandas()
+            # x follows the editor's row order: the binding's ordinal
+            # view, shared with preview and released with the binding;
+            # the polyline joins points in frame order, so the
+            # plot-sized frame is sorted by x on the driver
+            pdf = (
+                P.line_series(
+                    self._rid_frame(name), kw.get("cols"), kw.get("max_points", 1000)
+                )
+                .toPandas()
+                .sort_values("x")
+            )
             return P.render_line_svg(pdf, title=kw.get("title", name))
         if kind == "scatter":
             x, y = kw["x"], kw["y"]
@@ -362,10 +370,15 @@ class EditorSession:
 
     def cut_rows(self, name: str, rids) -> DataFrame:
         """Cut to the session clipboard (main.py:53-56)."""
+        from parquet_editor_spark.boundary import stage_boundary
         from parquet_editor_spark.operators import edit as E
 
         clip, rest = E.cut_rows(self._tables[name], rids)
-        self._clipboard = clip
+        # snapshot the clip: pasted while still derived from the pre-cut
+        # frame, each cut/paste pair would carry that frame twice and
+        # the plan would double per pair; a snapshot also outlives the
+        # table it was cut from
+        self._clipboard = stage_boundary(clip)
         return self.bind(name, rest)
 
     def paste_rows(self, name: str, pos: int) -> DataFrame:
@@ -394,16 +407,23 @@ class EditorSession:
         The page is the ordinal RANGE ``[offset, offset+n)`` — never
         ``filter(...).limit(n)``, which takes n arbitrary rows in
         partition order and made pages beyond the first
-        nondeterministic (r3 bug fix, pinned in test_session)."""
+        nondeterministic (r3 bug fix, pinned in test_session). The
+        at most ``n`` rows of the range are ordered by ``__rid`` on the
+        driver: a Spark ``orderBy`` would add a range-sampling job and
+        a shuffle to every view for a page-sized sort."""
         # EVERY page goes through the cached ordinal view — page 0 via
         # bare limit(n) would take n rows in physical partition order,
         # which can disagree with the ordinal order after a splice
         # (union-appended rows carry interleaved rids), duplicating or
-        # dropping rows across page boundaries
-        return (
+        # dropping rows across page boundaries; the range filter plus
+        # the driver-side sort below is one Spark job
+        page = (
             self._rid_frame(name)
             .filter(f"__rid >= {offset} AND __rid < {offset + n}")
-            .orderBy("__rid")
-            .drop("__rid")
             .toPandas()
+        )
+        return (
+            page.sort_values("__rid")
+            .drop(columns="__rid")
+            .reset_index(drop=True)
         )

@@ -44,6 +44,50 @@ def test_rid_no_global_sort_in_plan(sdf):
     assert "Exchange SinglePartition" not in plan
 
 
+def _persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize(
+    "make, ids",
+    [
+        (lambda spark: spark.createDataFrame([], "id long"), []),
+        # 8 partitions over 10 ids, 4 rows left: most partitions empty
+        (lambda spark: spark.range(0, 10, 1, 8).filter("id % 3 = 0"), [0, 3, 6, 9]),
+    ],
+    ids=["empty", "empty_partitions"],
+)
+def test_rid_dense_with_empty_partitions(spark, make, ids):
+    """Dense 0..n-1 ordinals in scan order when the frame or some of
+    its partitions hold no rows, served from the pinned ``__rid``
+    frame itself."""
+    out = E.with_rid(make(spark))
+    got = sorted((r["__rid"], r["id"]) for r in out.collect())
+    assert got == list(enumerate(ids))
+    assert out.storageLevel.useMemory
+    out._pes_rid_base.unpersist()
+
+
+def test_with_rid_pins_one_frame_released_by_drop_table(spark):
+    """``with_rid`` leaves exactly one persisted RDD, the finished
+    ``__rid`` frame (the id pin it builds from is released), and
+    closing the document releases that one."""
+    from parquet_editor_spark.session import EditorSession
+
+    before = _persisted(spark)
+    out = E.with_rid(spark.range(0, 100, 1, 4).toDF("v"))
+    assert _persisted(spark) == before + 1
+    assert out.storageLevel.useMemory
+    out._pes_rid_base.unpersist()
+    assert _persisted(spark) == before
+    sess = EditorSession(spark)
+    sess.bind("t", spark.range(0, 100, 1, 4).toDF("v"))
+    sess.with_rid("t")
+    assert _persisted(spark) == before + 1
+    sess.drop_table("t")
+    assert _persisted(spark) == before
+
+
 def test_ordered_rid_follows_keys(spark, pdf):
     shuffled = pdf.sample(frac=1.0, random_state=7)
     df = E.ordered_rid(spark.createDataFrame(shuffled), ["i"])

@@ -2,6 +2,7 @@
 reference declares undo/redo but never implemented it, SURVEY.md §0.2),
 load/save/pivot entry points."""
 
+import pandas as pd
 import pytest
 
 from parquet_editor_spark.session import EditorSession
@@ -258,3 +259,95 @@ def test_preview_page0_follows_ordinals_after_splice(spark):
     assert list(page0["s"]) == ["r0", "r1", "pasted", "r2"]
     page1 = sess.preview("t", n=4, offset=4)
     assert list(page1["s"]) == ["r3", "r4", "r5"]
+
+
+def _jobs(spark, group, fn):
+    """``fn()``'s result and the number of Spark jobs it ran, counted by
+    job group once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_page_view_and_save_run_one_job_each(sess, sf_dir, tmp_path):
+    """After the ordinal pin is built, a page view and a save each run
+    a single Spark job: both read the pinned ``__rid`` frame instead of
+    re-running the offset join, and the page is ordered on the driver
+    instead of by a sampled global sort."""
+    sess.load("t", f"{sf_dir}/lineitem.parquet")
+    sess.with_rid("t")
+    for k in range(3):
+        sess.set_cell("t", k, "l_returnflag", f"E{k}")
+    page, jobs = _jobs(sess.spark, "pes-test-view", lambda: sess.preview("t", n=20, offset=1))
+    assert jobs == 1
+    assert list(page["l_returnflag"][:2]) == ["E1", "E2"]
+    _, jobs = _jobs(sess.spark, "pes-test-save", lambda: sess.save("t", str(tmp_path / "t.parquet")))
+    assert jobs == 1
+    sess.drop_table("t")
+
+
+def test_cut_paste_pairs_grow_the_plan_linearly(sess, spark):
+    """The clipboard is a snapshot taken at cut time. A clip still
+    derived from the pre-cut frame carried that frame into the paste a
+    second time, so the page-view plan doubled with every uncompacted
+    cut/paste pair."""
+    sess.bind("t", spark.range(0, 40, 1, 4).toDF("v"))
+    sess.with_rid("t")
+    want = list(range(40))
+    lens = {}
+    for k in range(1, 7):
+        sess.cut_rows("t", [3, 7])
+        sess.paste_rows("t", 0)
+        want = [want[3], want[7]] + [v for i, v in enumerate(want) if i not in (3, 7)]
+        page = sess.get("t").filter("__rid >= 10 AND __rid < 20")
+        lens[k] = len(page._jdf.queryExecution().optimizedPlan().toString())
+    assert lens[6] < 6 * lens[3], lens
+    assert sess.preview("t", n=40)["v"].tolist() == want
+    sess.drop_table("t")
+
+
+def test_line_plot_follows_editor_row_order(sess, spark):
+    """The line plot's x is the editor's row ordinal: after a cut and a
+    paste it lists rows in the order the page view shows them."""
+    from parquet_editor_spark.operators import plotting as P
+
+    sess.bind("t", spark.createDataFrame([(float(i),) for i in range(10)], "v double"))
+    sess.with_rid("t")
+    sess.cut_rows("t", [8, 9])
+    sess.paste_rows("t", 0)
+    shown = sess.preview("t", n=10)["v"].tolist()
+    assert shown == [8.0, 9.0] + [float(i) for i in range(8)]
+    series = P.line_series(sess.get("t"), ["v"]).toPandas().sort_values("x")
+    assert series["x"].tolist() == list(range(10))
+    assert series["v"].tolist() == shown
+    want = P.render_line_svg(pd.DataFrame({"x": range(10), "v": shown}), title="t")
+    assert sess.plot("t", kind="line", cols=["v"]) == want
+    sess.drop_table("t")
+
+
+def test_line_plots_pin_nothing_past_the_binding(sess, spark):
+    """Line plots reuse the binding's ordinal view: repeated plots add
+    no persisted RDD, and closing the table returns the count to its
+    value before the table was opened."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    sess.bind("t", spark.range(0, 50, 1, 4).selectExpr("id * 1.5 AS v"))
+    for _ in range(3):
+        sess.plot("t", kind="line", cols=["v"])
+    assert jsc.getPersistentRDDs().size() == before + 1
+    sess.preview("t", n=5)
+    assert jsc.getPersistentRDDs().size() == before + 1
+    sess.drop_table("t")
+    assert jsc.getPersistentRDDs().size() == before
+    sess.bind("u", spark.range(0, 50, 1, 4).selectExpr("id * 1.5 AS v"))
+    sess.with_rid("u")
+    for _ in range(3):
+        sess.plot("u", kind="line", cols=["v"])
+    assert jsc.getPersistentRDDs().size() == before + 1
+    sess.drop_table("u")
+    assert jsc.getPersistentRDDs().size() == before
