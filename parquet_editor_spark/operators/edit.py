@@ -20,7 +20,8 @@ Scale design (SURVEY.md §4 "custom work"):
   stays pinned: it is persisted and built once at ``with_rid`` time,
   the id pin is released, and every later view, edit, save and plot
   plans from a cached leaf that already holds ``__rid`` instead of
-  re-running the offset join.
+  re-running the offset join. ``EditorSession`` binds that frame in
+  place of the table, so its binding history owns the pin.
 * ``ordered_rid`` (rank by key columns) range-partitions first —
   Spark's sampled range partitioner — then applies the same offset
   trick, so even a total order never serializes through one task.
@@ -64,12 +65,12 @@ def _rid_from_partition_offsets(df: DataFrame) -> DataFrame:
 
     The joined ``__rid`` frame is then persisted itself and built
     eagerly while the id pin still holds; after that the id pin is
-    released. What stays pinned is exactly one copy: the finished
-    ordinal frame, exposed as ``_pes_rid_base`` so its owner can
-    release it. No data shuffle, no sort, O(n) work; the per-partition
-    scan order defines the ordinal, matching the reference's "order =
-    load order" model. On a cluster the persists are MEMORY_AND_DISK
-    over executors — the same code path."""
+    released. What stays pinned is exactly one copy: the returned
+    frame, which its owner releases with ``unpersist()``. No data
+    shuffle, no sort, O(n) work; the per-partition scan order defines
+    the ordinal, matching the reference's "order = load order" model.
+    On a cluster the persists are MEMORY_AND_DISK over executors — the
+    same code path."""
     from pyspark import StorageLevel
 
     from parquet_editor_spark.litexpr import values_df
@@ -101,26 +102,17 @@ def _rid_from_partition_offsets(df: DataFrame) -> DataFrame:
     # an aggregation stage and a job for its result
     out.write.format("noop").mode("overwrite").save()
     annotated.unpersist()
-    # expose the pin so a session-level owner can release it when the
-    # rid'd frame is discarded (EditorSession does on rebind and
-    # drop_table); without this handle every with_rid call leaks one
-    # persisted copy
-    out._pes_rid_base = out
     return out
 
 
-def with_rid(df: DataFrame, order: Optional[Sequence[str]] = None) -> DataFrame:
-    """Attach a dense 0-based ``__rid`` ordinal.
-
-    ``order=None`` → scan order (cheap, no shuffle — the editor's
-    "row N as loaded" identity). ``order=[cols...]`` → total order by
-    those columns via ``ordered_rid``.
+def with_rid(df: DataFrame) -> DataFrame:
+    """Attach a dense 0-based ``__rid`` ordinal in scan order (cheap, no
+    shuffle — the editor's "row N as loaded" identity); a total order
+    by columns is ``ordered_rid``.
     Idempotent: an existing ``__rid`` is trusted and kept.
     """
     if RID in df.columns:
         return df
-    if order:
-        return ordered_rid(df, order)
     return _rid_from_partition_offsets(df)
 
 
@@ -129,11 +121,10 @@ def ordered_rid(df: DataFrame, order: Sequence[str]) -> DataFrame:
     window: range-repartition on the keys (sampled range partitioner →
     balanced partitions), sort within partitions, then partition-offset
     arithmetic. Equivalent to ``row_number().over(orderBy(...))`` but
-    scales to arbitrary row counts."""
-    if RID in df.columns:
-        df = df.drop(RID)
+    scales to arbitrary row counts. An existing ``__rid`` is replaced,
+    and may be a key: ``[RID]`` closes the gaps in it, keeping its order."""
     arranged = df.repartitionByRange(*[F.col(c) for c in order]).sortWithinPartitions(*order)
-    return _rid_from_partition_offsets(arranged)
+    return _rid_from_partition_offsets(strip_rid(arranged))
 
 
 def strip_rid(df: DataFrame) -> DataFrame:
@@ -302,11 +293,12 @@ def paste_rows(df: DataFrame, clip: DataFrame, pos: int) -> DataFrame:
 
 
 def insert_rows(df: DataFrame, rows: Sequence[dict], pos: int) -> DataFrame:
-    """Insert literal rows at a position (editor "add row")."""
-    spark = df.sparkSession
-    schema = T.StructType([f for f in df.schema.fields if f.name != RID])
-    clip = with_rid(spark.createDataFrame([tuple(r.get(f.name) for f in schema.fields) for r in rows], schema))
-    return paste_rows(df, clip, pos)
+    """Insert literal rows at a position (editor "add row"). The rows
+    carry their ordinals 0..k-1 from the driver, so nothing is pinned."""
+    fields = [f for f in df.schema.fields if f.name != RID]
+    schema = T.StructType([T.StructField(RID, T.LongType(), False), *fields])
+    data = [(k, *(r.get(f.name) for f in fields)) for k, r in enumerate(rows)]
+    return paste_rows(df, df.sparkSession.createDataFrame(data, schema), pos)
 
 
 def selection_summary(df: DataFrame, rids: Iterable[int]) -> DataFrame:

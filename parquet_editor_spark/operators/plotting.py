@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parquet_editor_spark.operators import query as q
-from parquet_editor_spark.operators.edit import RID, with_rid
+from parquet_editor_spark.operators.edit import RID, ordered_rid, with_rid
 
 
 def line_series(
@@ -31,21 +31,29 @@ def line_series(
     regardless of table size. x = the row ordinal (the reference plots
     against the pandas index): the frame's own ``__rid`` when it has
     one and no ``order`` is given, so the plot follows the editor's
-    row order after cuts, pastes and deletes."""
+    row order after cuts, pastes and deletes.
+
+    Otherwise the ordinal is built here and pinned only while the
+    strided rows are collected: the result is then a local frame of
+    those rows, so nothing stays persisted once it is consumed."""
     cols = list(cols or [c for c in q.numeric_columns(df) if c != RID])
     if not cols:
         raise ValueError("no numeric columns to plot")  # main.pyc:405-416
-    if order is not None:
-        d = with_rid(df, list(order)).select(RID, *cols)
-    elif RID in df.columns:
-        d = df.select(RID, *cols)
-    else:
-        d = with_rid(df.select(*cols))
-    n = d.count()
-    stride = max(1, math.ceil(n / max_points))
-    return (
-        d.filter(F.col(RID) % stride == 0)
-        .select(F.col(RID).alias("x"), *cols)
+    if order is None and RID in df.columns:
+        return _strided(df.select(RID, *cols), max_points)
+    pinned = ordered_rid(df, list(order)) if order is not None else with_rid(df.select(*cols))
+    try:
+        series = _strided(pinned.select(RID, *cols), max_points)
+        return df.sparkSession.createDataFrame(series.collect(), series.schema)
+    finally:
+        pinned.unpersist()
+
+
+def _strided(d: DataFrame, max_points: int) -> DataFrame:
+    """Every ``ceil(n / max_points)``-th ordinal of ``d`` as ``x``."""
+    stride = max(1, math.ceil(d.count() / max_points))
+    return d.filter(F.col(RID) % stride == 0).select(
+        F.col(RID).alias("x"), *[c for c in d.columns if c != RID]
     )
 
 

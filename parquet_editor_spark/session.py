@@ -16,9 +16,12 @@ DataFrame. That single design decision buys:
 from __future__ import annotations
 
 import os
+import weakref
 from typing import Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from parquet_editor_spark.operators import edit as E
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -142,6 +145,11 @@ class EditorSession:
     (``PandasModel.update_data``, main.pyc:96-100) to rebind + undo
     push. ``undo``/``redo`` honestly implement the README's declared
     but unimplemented capability (readme.md:12, SURVEY.md §0.2).
+
+    One ordinal path: views, line plots and positional edits read the
+    binding through ``with_rid``, the one place the session pins. The
+    session trusts only a ``__rid`` it made: ``with_rid`` re-ranks any
+    other. History owns the pins: see ``_release``.
     """
 
     #: point edits before the overlay is checkpointed (SURVEY.md §4
@@ -158,11 +166,14 @@ class EditorSession:
         self.spark = spark or get_spark()
         self.settings = settings or SessionSettings.load()
         self._tables: dict[str, DataFrame] = {}
-        self._rid_frames: dict[str, DataFrame] = {}
         self._undo: dict[str, list[DataFrame]] = {}
         self._redo: dict[str, list[DataFrame]] = {}
         self._edit_depth: dict[str, int] = {}
         self._clipboard: Optional[DataFrame] = None
+        # frames whose __rid the session made, mapped to whether
+        # with_rid pinned them; a __rid from anywhere else (a frame
+        # built from get() or SQL) may have gaps and is re-ranked
+        self._ordinal: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
     # -- catalog -----------------------------------------------------
     def names(self) -> list[str]:
@@ -174,22 +185,18 @@ class EditorSession:
     def bind(self, name: str, df: DataFrame, *, undoable: bool = True) -> DataFrame:
         """Rebind ``name`` to ``df``; previous binding goes on the undo
         stack (the reference's ``update_data`` model reset, main.pyc:96-100,
-        but reversible).
-
-        Every COMPACT_EVERY undoable rebinds the overlay is compacted
-        HERE — the single choke point every mutation route (set_cell,
-        delete_rows, paste, external ``bind(E.set_cell(...))`` callers)
-        passes through — so a 10k-edit session keeps a bounded plan
-        without anyone remembering to call ``compact()`` (r5 verdict
-        item 7: the set_cell-only trigger missed direct-bind edits)."""
+        but reversible). Every COMPACT_EVERY undoable rebinds the overlay
+        is compacted HERE, the one choke point of session edits and
+        external ``bind(E.set_cell(...))`` calls alike, so a long edit
+        session keeps a bounded plan without a ``compact()`` call."""
+        gone = self._redo.pop(name, []) if undoable else []
         if undoable and name in self._tables:
             self._undo.setdefault(name, []).append(self._tables[name])
-            self._redo.pop(name, None)
             depth = self._edit_depth.get(name, 0) + 1
             if depth >= self.COMPACT_EVERY:
-                from parquet_editor_spark.operators import edit as E
-
-                df = E.compact(df)
+                df, edited = E.compact(df), df
+                if edited in self._ordinal:  # a checkpoint keeps the ordinals
+                    self._ordinal[df] = False
                 depth = 0
             self._edit_depth[name] = depth
         elif name not in self._tables:
@@ -203,47 +210,48 @@ class EditorSession:
         # COMPACT_EVERY edits defer auto-compaction indefinitely
         # (r6 ADVICE item 4).
         self._tables[name] = df
-        self._release_rid_frame(name)  # stale ordinals for the old binding
-        df.createOrReplaceTempView(name)
+        self._register(name, df)
+        self._release(gone)  # the discarded redo stack left history
         return df
 
-    @staticmethod
-    def _release(df: Optional[DataFrame]) -> None:
-        """Unpersist the ordinal pin ``with_rid`` attached to ``df``."""
-        base = getattr(df, "_pes_rid_base", None)
-        if base is not None:
-            base.unpersist()
+    def _edit(self, name: str, df: DataFrame) -> DataFrame:
+        """Bind an edit; an edit of a trusted ``__rid`` stays trusted."""
+        if self._tables[name] in self._ordinal and E.RID in df.columns:
+            self._ordinal[df] = False
+        return self.bind(name, df)
 
-    def _release_rid_frame(self, name: str) -> None:
-        self._release(self._rid_frames.pop(name, None))
+    def _register(self, name: str, df: DataFrame) -> None:
+        """SQL sees the table as ``save`` writes it, without ``__rid``."""
+        E.strip_rid(df).createOrReplaceTempView(name)
 
-    def _rid_frame(self, name: str):
-        """Per-binding cached ordinal view: with_rid pins a persisted
-        copy of the table to keep ordinals stable, so it must be built
-        ONCE per binding and released on rebind — rebuilding it per
-        preview page would leak one materialized copy per page.
+    def _release(self, gone: list[DataFrame]) -> None:
+        """The one release rule: a pin ``with_rid`` made is unpersisted
+        when its binding leaves history — unless a pin still in history,
+        in any table, has the same plan. Spark caches by plan, so one
+        file opened as two tables and pinned in both shares ONE cache
+        entry. A frame the caller cached stays the caller's."""
+        stacks = [self._tables.values(), *self._undo.values(), *self._redo.values()]
+        kept = [k for stack in stacks for k in stack if self._ordinal.get(k)]
+        for df in gone:
+            if self._ordinal.get(df) and not any(df.sameSemantics(k) for k in kept):
+                df.unpersist()
 
-        A binding that already carries ``__rid`` is its own ordinal view
-        and is not cached: its pin belongs to the binding history, which
-        later edits derive from, and is released by ``drop_table``."""
-        from parquet_editor_spark.operators.edit import RID, with_rid
-
-        df = self._tables[name]
-        if RID in df.columns:
-            return df
-        if name not in self._rid_frames:
-            self._rid_frames[name] = with_rid(df)
-        return self._rid_frames[name]
+    def _open(self, name: str, df: DataFrame) -> DataFrame:
+        """A new window for ``df``: the table open as ``name`` closes."""
+        if name in self._tables:
+            self.drop_table(name)
+        return self.bind(name, df)
 
     def drop_table(self, name: str) -> None:
         """Close a table: every binding in its history goes, and with
-        them every ordinal pin a ``with_rid`` binding persisted."""
-        history = [self._tables.pop(name, None)]
-        history += self._undo.pop(name, []) + self._redo.pop(name, [])
-        for df in history:
-            self._release(df)
-        self._release_rid_frame(name)
-        self.spark.catalog.dropTempView(name)
+        them every ordinal pin no other table shares."""
+        history = self._undo.pop(name, []) + self._redo.pop(name, [])
+        if name in self._tables:
+            history.append(self._tables.pop(name))
+        self._release(history)
+        # not catalog.dropTempView: that uncaches the view's plan, and
+        # with it the pin of another table that shares the plan
+        self.spark.sql(f"DROP VIEW IF EXISTS `{name.replace('`', '``')}`")
 
     # -- undo / redo -------------------------------------------------
     def _step(self, name: str, back: dict, forth: dict, verb: str) -> DataFrame:
@@ -256,8 +264,7 @@ class EditorSession:
         forth.setdefault(name, []).append(self._tables[name])
         df = stack.pop()
         self._tables[name] = df
-        self._release_rid_frame(name)  # ordinal view belongs to the old binding
-        df.createOrReplaceTempView(name)
+        self._register(name, df)
         return df
 
     def undo(self, name: str) -> DataFrame:
@@ -276,20 +283,20 @@ class EditorSession:
     def load(self, name: str, path: str, fmt: Optional[str] = None) -> DataFrame:
         """File▸Load (main.pyc:237-240,307-324) — lazy scan, no eager
         read; relative paths resolve against settings.default_path
-        (SettingsDialog parity, main.pyc:176-199)."""
+        (SettingsDialog parity, main.pyc:176-199). Loading over an open
+        table replaces it: its undo history does not survive."""
         from parquet_editor_spark import io as peio
 
-        return self.bind(name, peio.load(self.spark, self.settings.resolve(path), fmt))
+        return self._open(name, peio.load(self.spark, self.settings.resolve(path), fmt))
 
     def save(self, name: str, path: str, fmt: Optional[str] = None, **kw) -> None:
         """File▸Save (main.pyc:344-360).  The internal ``__rid``
         ordinal never reaches disk — the same contract as the
         reference's index=False writes (and preview's drop)."""
         from parquet_editor_spark import io as peio
-        from parquet_editor_spark.operators.edit import strip_rid
 
         peio.save(
-            strip_rid(self._tables[name]), self.settings.resolve(path), fmt, **kw
+            E.strip_rid(self._tables[name]), self.settings.resolve(path), fmt, **kw
         )
 
     def new_dataframe(self, name: str, schema: str = "") -> DataFrame:
@@ -297,7 +304,7 @@ class EditorSession:
         df = self.spark.createDataFrame([], schema or "placeholder string")
         if not schema:
             df = df.drop("placeholder")
-        return self.bind(name, df)
+        return self._open(name, df)
 
     def pivot(self, name: str, index: str, columns: str, values: str, aggfunc: str) -> DataFrame:
         """Data▸Create Pivot Table (main.pyc:158-174,326-330): replaces the
@@ -327,7 +334,7 @@ class EditorSession:
             # plot-sized frame is sorted by x on the driver
             pdf = (
                 P.line_series(
-                    self._rid_frame(name), kw.get("cols"), kw.get("max_points", 1000)
+                    self.with_rid(name), kw.get("cols"), kw.get("max_points", 1000)
                 )
                 .toPandas()
                 .sort_values("x")
@@ -351,74 +358,67 @@ class EditorSession:
         )
 
     # -- editor mutations (PandasModel.setData et al., SURVEY.md §2.3) --
-    def with_rid(self, name: str, order=None) -> DataFrame:
-        from parquet_editor_spark.operators import edit as E
-
-        return self.bind(name, E.with_rid(self._tables[name], order), undoable=False)
+    def with_rid(self, name: str) -> DataFrame:
+        """The binding's ordinal view; views and positional edits read
+        through it. A binding whose ``__rid`` the session made is its
+        own. Any other is rebound, not undoably, to a pinned copy with
+        dense ordinals: in scan order, or in the order of a ``__rid`` it
+        brings (a frame built from ``get()`` may have gaps in it)."""
+        df = self._tables[name]
+        if df in self._ordinal:
+            return df
+        df = E.ordered_rid(df, [E.RID]) if E.RID in df.columns else E.with_rid(df)
+        self._ordinal[df] = True
+        return self.bind(name, df, undoable=False)
 
     def set_cell(self, name: str, rid: int, column: str, value) -> DataFrame:
         """Typed positional cell write (main.pyc:68-79); overlay
         compaction happens in ``bind`` every COMPACT_EVERY edits."""
-        from parquet_editor_spark.operators import edit as E
-
-        return self.bind(name, E.set_cell(self._tables[name], rid, column, value))
+        return self._edit(name, E.set_cell(self.with_rid(name), rid, column, value))
 
     def delete_rows(self, name: str, rids) -> DataFrame:
-        from parquet_editor_spark.operators import edit as E
-
-        return self.bind(name, E.delete_rows(self._tables[name], rids))
+        return self._edit(name, E.delete_rows(self.with_rid(name), rids))
 
     def cut_rows(self, name: str, rids) -> DataFrame:
         """Cut to the session clipboard (main.py:53-56)."""
         from parquet_editor_spark.boundary import stage_boundary
-        from parquet_editor_spark.operators import edit as E
 
-        clip, rest = E.cut_rows(self._tables[name], rids)
+        clip, rest = E.cut_rows(self.with_rid(name), rids)
         # snapshot the clip: pasted while still derived from the pre-cut
         # frame, each cut/paste pair would carry that frame twice and
         # the plan would double per pair; a snapshot also outlives the
         # table it was cut from
         self._clipboard = stage_boundary(clip)
-        return self.bind(name, rest)
+        return self._edit(name, rest)
 
     def paste_rows(self, name: str, pos: int) -> DataFrame:
         """Paste the clipboard at a position (main.py:58-65)."""
-        from parquet_editor_spark.operators import edit as E
-
         if self._clipboard is None:
             raise ValueError("clipboard is empty; cut rows first")
-        return self.bind(name, E.paste_rows(self._tables[name], self._clipboard, pos))
+        return self._edit(name, E.paste_rows(self.with_rid(name), self._clipboard, pos))
 
     def add_column(self, name: str, col: str, dtype: str = "string", pos=None, default=None) -> DataFrame:
-        from parquet_editor_spark.operators import edit as E
-
-        return self.bind(name, E.add_column(self._tables[name], col, dtype, pos, default))
+        return self._edit(name, E.add_column(self._tables[name], col, dtype, pos, default))
 
     def remove_column(self, name: str, which) -> DataFrame:
-        from parquet_editor_spark.operators import edit as E
-
-        return self.bind(name, E.drop_column(self._tables[name], which))
+        return self._edit(name, E.drop_column(self._tables[name], which))
 
     # -- preview (the Qt view's cell pull, main.pyc:58-66) -----------
     def preview(self, name: str, n: int = 100, offset: int = 0):
         """Paged display: the reference renders every visible cell via
-        ``iloc`` (main.py:25-31); we collect only one page driver-side.
-
-        The page is the ordinal RANGE ``[offset, offset+n)`` — never
-        ``filter(...).limit(n)``, which takes n arbitrary rows in
-        partition order and made pages beyond the first
-        nondeterministic (r3 bug fix, pinned in test_session). The
-        at most ``n`` rows of the range are ordered by ``__rid`` on the
-        driver: a Spark ``orderBy`` would add a range-sampling job and
-        a shuffle to every view for a page-sized sort."""
-        # EVERY page goes through the cached ordinal view — page 0 via
+        ``iloc`` (main.py:25-31); we collect only one page driver-side:
+        the ordinal RANGE ``[offset, offset+n)``, never
+        ``filter(...).limit(n)`` (n arbitrary rows in partition order),
+        its at most ``n`` rows ordered by ``__rid`` on the driver — a
+        Spark ``orderBy`` would add a sampling job and a shuffle."""
+        # EVERY page goes through the ordinal binding — page 0 via
         # bare limit(n) would take n rows in physical partition order,
         # which can disagree with the ordinal order after a splice
         # (union-appended rows carry interleaved rids), duplicating or
         # dropping rows across page boundaries; the range filter plus
         # the driver-side sort below is one Spark job
         page = (
-            self._rid_frame(name)
+            self.with_rid(name)
             .filter(f"__rid >= {offset} AND __rid < {offset + n}")
             .toPandas()
         )

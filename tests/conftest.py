@@ -83,6 +83,12 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.slow)
 
 
+def persisted_rdds(spark) -> int:
+    """The number of RDDs the SparkContext holds persisted: the pin
+    count that lifecycle tests compare before and after a scenario."""
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 @pytest.fixture(scope="session")
 def spark():
     from parquet_editor_spark.session import get_spark

@@ -6,6 +6,7 @@ the cut/paste splice (main.py:53-65)."""
 
 import pandas as pd
 import pytest
+from conftest import persisted_rdds
 
 from parquet_editor_spark.operators import edit as E
 
@@ -44,10 +45,6 @@ def test_rid_no_global_sort_in_plan(sdf):
     assert "Exchange SinglePartition" not in plan
 
 
-def _persisted(spark):
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
 @pytest.mark.parametrize(
     "make, ids",
     [
@@ -65,7 +62,7 @@ def test_rid_dense_with_empty_partitions(spark, make, ids):
     got = sorted((r["__rid"], r["id"]) for r in out.collect())
     assert got == list(enumerate(ids))
     assert out.storageLevel.useMemory
-    out._pes_rid_base.unpersist()
+    out.unpersist()
 
 
 def test_with_rid_pins_one_frame_released_by_drop_table(spark):
@@ -74,18 +71,18 @@ def test_with_rid_pins_one_frame_released_by_drop_table(spark):
     closing the document releases that one."""
     from parquet_editor_spark.session import EditorSession
 
-    before = _persisted(spark)
+    before = persisted_rdds(spark)
     out = E.with_rid(spark.range(0, 100, 1, 4).toDF("v"))
-    assert _persisted(spark) == before + 1
+    assert persisted_rdds(spark) == before + 1
     assert out.storageLevel.useMemory
-    out._pes_rid_base.unpersist()
-    assert _persisted(spark) == before
+    out.unpersist()
+    assert persisted_rdds(spark) == before
     sess = EditorSession(spark)
     sess.bind("t", spark.range(0, 100, 1, 4).toDF("v"))
     sess.with_rid("t")
-    assert _persisted(spark) == before + 1
+    assert persisted_rdds(spark) == before + 1
     sess.drop_table("t")
-    assert _persisted(spark) == before
+    assert persisted_rdds(spark) == before
 
 
 def test_ordered_rid_follows_keys(spark, pdf):
@@ -206,6 +203,22 @@ def test_insert_rows(sdf, pdf):
         [pdf.iloc[:2], pd.DataFrame([{"i": 70, "f": 7.5, "b": True, "s": "g"}]), pdf.iloc[2:]]
     ).reset_index(drop=True)
     pd.testing.assert_frame_equal(got, want)
+
+
+def test_insert_rows_pins_nothing(spark, sdf, pdf):
+    """The inserted rows carry driver-side ordinals, so repeated
+    inserts add no persisted RDD, and the rows land where they did
+    when each call pinned an ordinal copy of the inserted rows."""
+    before = persisted_rdds(spark)
+    rows = [{"i": 70, "f": 7.5, "b": True, "s": "g"}, {"i": 80, "f": None, "b": False, "s": "h"}]
+    out = sdf
+    for pos in (2, 0, 9):
+        out = E.insert_rows(out, rows, pos)
+    assert persisted_rdds(spark) == before
+    want = pdf.astype({"f": "float64"})
+    for pos in (2, 0, 9):
+        want = pd.concat([want.iloc[:pos], pd.DataFrame(rows), want.iloc[pos:]]).reset_index(drop=True)
+    pd.testing.assert_frame_equal(collect(out), want)
 
 
 def test_selection_summary(sdf, pdf):

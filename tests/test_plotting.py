@@ -2,6 +2,7 @@
 reduction shapes + the gated matplotlib render."""
 
 import pytest
+from conftest import persisted_rdds
 
 from parquet_editor_spark.operators import plotting as PL
 
@@ -20,6 +21,22 @@ def test_line_series_small_table_untouched(spark):
     df = spark.createDataFrame([(float(i),) for i in range(7)], "v double")
     out = PL.line_series(df, ["v"], max_points=100)
     assert out.count() == 7
+
+
+@pytest.mark.parametrize("order", [None, ["v"]], ids=["scan_order", "order"])
+def test_line_series_leaves_nothing_persisted(spark, order):
+    """Outside the session, the ordinal line_series builds is released
+    once the strided rows are taken: repeated calls on distinct frames
+    leave the persisted-RDD count where it was, with the same series."""
+    before = persisted_rdds(spark)
+    for k in range(3):
+        df = spark.range(0, 40, 1, 4).selectExpr(f"CAST((39 - id) * {k + 1} AS DOUBLE) AS v")
+        got = PL.line_series(df, ["v"], max_points=10, order=order).toPandas()
+        # x is the scan position (v descending) or the rank by v
+        at = (lambda x: x) if order else (lambda x: 39 - x)
+        assert sorted(got["x"]) == list(range(0, 40, 4))
+        assert got.sort_values("x")["v"].tolist() == [at(x) * (k + 1.0) for x in range(0, 40, 4)]
+    assert persisted_rdds(spark) == before
 
 
 def test_line_series_rejects_non_numeric(spark):

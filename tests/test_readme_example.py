@@ -40,3 +40,5 @@ def test_readme_example_runs(spark, tmp_path):
         spark.read.parquet(str(tmp_path / "lineitem_edited.parquet")).count()
         > 0
     )
+    for name in sess.names():  # release the block's ordinal pins
+        sess.drop_table(name)

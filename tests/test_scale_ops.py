@@ -113,6 +113,7 @@ def test_session_auto_compaction(spark, sf_dir):
     # undo still works across the compaction boundary
     sess.undo("t")
     assert E.get_cell(sess.get("t"), 0, "r_name") == "edit4"
+    sess.drop_table("t")
 
 
 def test_approx_aggs_within_bounds(lineitem):

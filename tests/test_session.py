@@ -4,13 +4,19 @@ load/save/pivot entry points."""
 
 import pandas as pd
 import pytest
+from conftest import persisted_rdds
 
 from parquet_editor_spark.session import EditorSession
 
 
 @pytest.fixture()
 def sess(spark):
-    return EditorSession(spark)
+    """A session whose tables are closed after the test, so no ordinal
+    pin outlives it into a later test's persisted-RDD counts."""
+    s = EditorSession(spark)
+    yield s
+    for name in s.names():
+        s.drop_table(name)
 
 
 def test_load_bind_sql(sess, sf_dir):
@@ -53,13 +59,14 @@ def test_preview_tracks_undo_redo(sess, sf_dir):
 
 
 def test_drop_table_releases_rid_cache(sess, sf_dir):
-    """Regression (ADVICE r4): drop_table() must release the persisted
-    with_rid base, not just the catalog entry."""
+    """Regression (ADVICE r4): drop_table() must release the ordinal
+    pin a view took, not just the catalog entry."""
+    before = persisted_rdds(sess.spark)
     sess.load("t", f"{sf_dir}/region.parquet")
-    sess.preview("t", n=3)  # builds + persists the rid frame
-    assert "t" in sess._rid_frames
+    sess.preview("t", n=3)  # pins the binding's ordinals
+    assert persisted_rdds(sess.spark) == before + 1
     sess.drop_table("t")
-    assert "t" not in sess._rid_frames
+    assert persisted_rdds(sess.spark) == before
 
 
 def test_drop_table_releases_every_ordinal_pin(sess, sf_dir):
@@ -69,17 +76,110 @@ def test_drop_table_releases_every_ordinal_pin(sess, sf_dir):
     it, and drop_table must release it from there too. Five edits stay
     below COMPACT_EVERY, whose localCheckpoint is not a persist and is
     not released by unpersist."""
-    jsc = sess.spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
+    before = persisted_rdds(sess.spark)
     sess.load("t", f"{sf_dir}/region.parquet")
     sess.with_rid("t")
     sess.preview("t", n=3)  # a view of the pinned binding itself
     for k in range(5):
         sess.set_cell("t", k, "r_name", f"edit {k}")
     sess.preview("t", n=3)
-    assert jsc.getPersistentRDDs().size() == before + 1
+    assert persisted_rdds(sess.spark) == before + 1
     sess.drop_table("t")
-    assert jsc.getPersistentRDDs().size() == before
+    assert persisted_rdds(sess.spark) == before
+
+
+def test_redo_clear_releases_its_pin(sess, sf_dir):
+    """A pinned binding on the redo stack leaves history when a new
+    edit discards that stack, and its pin goes with it."""
+    before = persisted_rdds(sess.spark)
+    sess.load("t", f"{sf_dir}/lineitem.parquet")
+    sess.pivot("t", "l_returnflag", "l_linestatus", "l_extendedprice", "mean")
+    sess.with_rid("t")
+    assert persisted_rdds(sess.spark) == before + 1
+    sess.undo("t")
+    sess.add_column("t", "note")
+    assert persisted_rdds(sess.spark) == before
+    sess.drop_table("t")
+    assert persisted_rdds(sess.spark) == before
+
+
+@pytest.mark.parametrize("explicit_with_rid", [False, True], ids=["implicit", "explicit"])
+def test_view_then_edit_keeps_its_pin(sess, sf_dir, explicit_with_rid):
+    """A first view pins the binding's ordinals in the binding itself,
+    so an edit that follows, with or without a ``with_rid`` call in
+    between, derives from that pin: later views run one job and the
+    session holds one persisted RDD."""
+    before = persisted_rdds(sess.spark)
+    sess.load("t", f"{sf_dir}/lineitem.parquet")
+    first = sess.preview("t", n=5)
+    if explicit_with_rid:
+        sess.with_rid("t")
+    sess.set_cell("t", 1, "l_returnflag", "E")
+    page, jobs = _jobs(sess.spark, f"pes-test-view-first-{explicit_with_rid}", lambda: sess.preview("t", n=5))
+    assert jobs == 1
+    assert persisted_rdds(sess.spark) == before + 1
+    assert page["l_returnflag"].tolist() == [first["l_returnflag"][0], "E", *first["l_returnflag"][2:]]
+    sess.drop_table("t")
+    assert persisted_rdds(sess.spark) == before
+
+
+def test_identical_plans_share_one_pin(sess, sf_dir):
+    """One file opened as two tables and pinned in both shares one
+    cache entry; closing one table keeps the other's pin, so its views
+    stay one job, and closing both releases it."""
+    before = persisted_rdds(sess.spark)
+    for name in ("a", "b"):
+        sess.load(name, f"{sf_dir}/lineitem.parquet")
+        sess.with_rid(name)
+    assert persisted_rdds(sess.spark) == before + 1
+    sess.drop_table("a")
+    assert persisted_rdds(sess.spark) == before + 1
+    _, jobs = _jobs(sess.spark, "pes-test-view-shared", lambda: sess.preview("b", n=5))
+    assert jobs == 1
+    sess.drop_table("b")
+    assert persisted_rdds(sess.spark) == before
+
+
+@pytest.mark.parametrize("pin", ["view", "with_rid"])
+def test_frame_built_from_the_table_gets_dense_ordinals(sess, sf_dir, pin):
+    """SQL never sees ``__rid``, and a frame built from ``get()`` keeps
+    the old ordinals with gaps in them: bound back, it is re-ranked in
+    their order, so its first page is full and row 0 is its first row."""
+    sess.load("t", f"{sf_dir}/region.parquet")
+    if pin == "view":
+        sess.preview("t", n=5)
+    else:
+        sess.with_rid("t")
+    assert "__rid" not in sess.sql("SELECT * FROM t").columns
+    sess.bind("t", sess.get("t").filter("r_regionkey >= 3"))
+    assert sess.preview("t", n=2)["r_regionkey"].tolist() == [3, 4]
+    sess.set_cell("t", 0, "r_name", "EDITED")
+    assert sess.preview("t")["r_name"].tolist() == ["EDITED", "MIDDLE EAST"]
+
+
+def test_reload_closes_the_old_history(sess, sf_dir):
+    """Loading over an open table replaces it as a new window would:
+    the old history, and the pin a view took in it, go."""
+    before = persisted_rdds(sess.spark)
+    sess.load("t", f"{sf_dir}/region.parquet")
+    sess.preview("t", n=2)
+    sess.load("t", f"{sf_dir}/nation.parquet")
+    assert persisted_rdds(sess.spark) == before
+    assert len(sess.preview("t", n=100)) == 25
+    assert persisted_rdds(sess.spark) == before + 1
+    assert not sess.can_undo("t")
+
+
+def test_release_leaves_a_frame_the_caller_cached(sess, spark):
+    """Only pins the session made are released: a frame the caller
+    cached and bound stays cached after its table is closed."""
+    df = spark.range(0, 20, 1, 2).toDF("v").cache()
+    df.count()
+    sess.bind("t", df)
+    sess.bind("t", df.limit(5))
+    sess.drop_table("t")
+    assert df.is_cached and df.storageLevel.useMemory
+    df.unpersist()
 
 
 def test_new_edit_invalidates_redo(sess, sf_dir):
@@ -334,20 +434,19 @@ def test_line_plots_pin_nothing_past_the_binding(sess, spark):
     """Line plots reuse the binding's ordinal view: repeated plots add
     no persisted RDD, and closing the table returns the count to its
     value before the table was opened."""
-    jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
+    before = persisted_rdds(spark)
     sess.bind("t", spark.range(0, 50, 1, 4).selectExpr("id * 1.5 AS v"))
     for _ in range(3):
         sess.plot("t", kind="line", cols=["v"])
-    assert jsc.getPersistentRDDs().size() == before + 1
+    assert persisted_rdds(spark) == before + 1
     sess.preview("t", n=5)
-    assert jsc.getPersistentRDDs().size() == before + 1
+    assert persisted_rdds(spark) == before + 1
     sess.drop_table("t")
-    assert jsc.getPersistentRDDs().size() == before
+    assert persisted_rdds(spark) == before
     sess.bind("u", spark.range(0, 50, 1, 4).selectExpr("id * 1.5 AS v"))
     sess.with_rid("u")
     for _ in range(3):
         sess.plot("u", kind="line", cols=["v"])
-    assert jsc.getPersistentRDDs().size() == before + 1
+    assert persisted_rdds(spark) == before + 1
     sess.drop_table("u")
-    assert jsc.getPersistentRDDs().size() == before
+    assert persisted_rdds(spark) == before
