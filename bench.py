@@ -24,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -130,7 +131,40 @@ def cache_layout(spark, df, src_path):
     return df.repartition(int(n))
 
 
-def build_queries(spark, tmp):
+def noop_write(df) -> None:
+    """The action that forces every column without a driver collect."""
+    df.write.mode("overwrite").format("noop").save()
+
+
+def bench_session(extra_conf=None):
+    """The SparkSession every bench row is measured in."""
+    from parquet_editor_spark.session import get_spark
+
+    return get_spark(
+        app_name="bench",
+        cpus=CPUS,
+        shuffle_partitions=SHUFFLE,
+        # default minPartitionNum = defaultParallelism splits the 2 MB
+        # events file into 32 × 64 KB scan tasks; 8 keeps multi-core
+        # scans on the 10 MB lineitem file without the tiny-task storm.
+        # v2 task-commit renames files once (task commit) instead of
+        # twice (task + job) — pure win for the three sink rows and the
+        # committer any object-store deployment would pick anyway.
+        extra_conf={
+            "spark.sql.files.minPartitionNum": "8",
+            "spark.hadoop.mapreduce.fileoutputcommitter"
+            ".algorithm.version": "2",
+            **(extra_conf or {}),
+        },
+    )
+
+
+def build_queries(spark, tmp, sf_dir=SF_DIR):
+    """``{name: (frame, action)}``: a zero-argument frame builder and
+    the action that executes it.  A timed run is ``action(frame())``,
+    so each row builds its plan inside the timed region, and a tool can
+    explain ``frame()`` without running it."""
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
     from parquet_editor_spark.io import load_parquet_nanos
@@ -152,10 +186,10 @@ def build_queries(spark, tmp):
         if name not in cached:
             cached[name] = cache_layout(
                 spark,
-                load_parquet_nanos(spark, f"{SF_DIR}/events.parquet")
+                load_parquet_nanos(spark, f"{sf_dir}/events.parquet")
                 if name == "events"
-                else spark.read.parquet(f"{SF_DIR}/{name}.parquet"),
-                f"{SF_DIR}/{name}.parquet",
+                else spark.read.parquet(f"{sf_dir}/{name}.parquet"),
+                f"{sf_dir}/{name}.parquet",
             )
         df = cached[name]
         # re-register after the per-query clear_caches — without this
@@ -169,29 +203,21 @@ def build_queries(spark, tmp):
             cached_epoch[name] = CACHE_EPOCH["n"]
         return df
 
-    def noop_write(df):
-        df.write.mode("overwrite").format("noop").save()
-
-    def scan_lineitem():
-        # full-table materialization (the reference's load_file path):
-        # noop sink forces every column through the scan; reads the
-        # files directly (not the memory cache)
-        noop_write(spark.read.parquet(f"{SF_DIR}/lineitem.parquet"))
-
-    def scan_events():
+    def scan_small(df):
         # per-table scan sizing (r5 verdict item 2): the session-wide
         # minPartitionNum=8 is right for the 10 MB lineitem scan but
         # pure task-launch overhead on this small single file.  Size
         # by BYTES instead so the split count scales with the data:
         # ~4 MB per task gives 1 task at sf0.1 (2 MB) and ~5 at sf1
         # (20 MB) — a real deployment tunes files.* per table the same
-        # way; both confs are restored either way.
+        # way; both confs are restored either way.  Splits are planned
+        # when the write executes, so the frame may be built before.
         prev_min = spark.conf.get("spark.sql.files.minPartitionNum", None)
         prev_max = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
         spark.conf.unset("spark.sql.files.minPartitionNum")
         spark.conf.set("spark.sql.files.maxPartitionBytes", "4m")
         try:
-            noop_write(load_parquet_nanos(spark, f"{SF_DIR}/events.parquet"))
+            noop_write(df)
         finally:
             if prev_min is not None:
                 spark.conf.set("spark.sql.files.minPartitionNum", prev_min)
@@ -200,14 +226,8 @@ def build_queries(spark, tmp):
             else:
                 spark.conf.set("spark.sql.files.maxPartitionBytes", prev_max)
 
-    def pivot_mean():
-        q.pivot_table(
-            t("lineitem"), "l_returnflag", "l_linestatus", "l_extendedprice",
-            "mean", pivot_values=["F", "O"],
-        ).collect()
-
     def groupby_q1():
-        (
+        return (
             t("lineitem")
             .filter(F.col("l_shipdate") <= "1998-09-02")
             .groupBy("l_returnflag", "l_linestatus")
@@ -218,26 +238,18 @@ def build_queries(spark, tmp):
                 F.avg("l_discount"),
                 F.count("*"),
             )
-            .collect()
         )
 
     def join_star():
         orders, customer = t("orders"), t("customer")
         nation, region = t("nation"), t("region")
-        (
+        return (
             orders.join(customer, orders.o_custkey == customer.c_custkey)
             .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
             .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
             .groupBy("r_name")
             .agg(F.sum("o_totalprice"), F.count("*"))
-            .collect()
         )
-
-    def topk_orders():
-        q.top_k(
-            t("orders").select("o_orderkey", "o_totalprice"),
-            by=["o_totalprice", "o_orderkey"], k=100, ascending=[False, True],
-        ).collect()
 
     def window_running():
         from pyspark.sql import Window as W
@@ -247,16 +259,9 @@ def build_queries(spark, tmp):
             .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
             .rowsBetween(W.unboundedPreceding, 0)
         )
-        noop_write(
-            t("lineitem").select(
-                "l_suppkey", F.sum("l_quantity").over(w).alias("run")
-            )
+        return t("lineitem").select(
+            "l_suppkey", F.sum("l_quantity").over(w).alias("run")
         )
-
-    def dedup_minhash():
-        D.minhash_lsh_pairs(
-            t("documents"), "doc_id", "text", 3, 0.7, num_hashes=32, bands=8
-        ).collect()
 
     def text_quality():
         # one tokens scan + one marker scan + one punct scan for the
@@ -267,94 +272,99 @@ def build_queries(spark, tmp):
         docs = t("documents").withColumn("__toks", X.tokens("text"))
         toks = F.col("__toks")
         staged = X.with_lang_id(docs, "text", toks=toks, keep_matches="__lm")
-        noop_write(
-            staged.select(
-                "doc_id",
-                "lang_pred",
-                X.quality_score("text", toks, F.col("__lm")).alias("q"),
-                X.fingerprint("text", toks).alias("fp"),
-            )
+        return staged.select(
+            "doc_id",
+            "lang_pred",
+            X.quality_score("text", toks, F.col("__lm")).alias("q"),
+            X.fingerprint("text", toks).alias("fp"),
         )
 
     def topk_cosine():
         emb = t("embeddings")
-        S.topk_cosine(emb, emb.filter(F.col("vec_id") < 10), k=5).collect()
+        return S.topk_cosine(emb, emb.filter(F.col("vec_id") < 10), k=5)
 
     def windowed_events():
         # memory-resident like the other analytics rows (scan_events
         # measures the read); noop sink like window_running — the 39k
         # window-struct rows otherwise bill driver-side row pickling,
         # not the engine (measured: collect 0.70s vs noop 0.27s)
-        ev = t("events")
-        noop_write(
-            ev.groupBy(
-                F.window(F.col("ts").cast("timestamp"), "5 minutes"),
-                "event_type",
-            ).agg(F.count("*"), F.sum("value"))
-        )
+        return t("events").groupBy(
+            F.window(F.col("ts").cast("timestamp"), "5 minutes"),
+            "event_type",
+        ).agg(F.count("*"), F.sum("value"))
 
-    def sink_parquet():
-        t("lineitem").write.mode("overwrite").parquet(f"{tmp}/li.parquet")
-
-    def sink_csv():
-        t("lineitem").write.mode("overwrite").option("header", True).csv(f"{tmp}/li.csv")
-
-    def sink_json():
-        t("lineitem").write.mode("overwrite").json(f"{tmp}/li.json")
-
+    collect = DataFrame.collect
     return {
-        "scan_lineitem": scan_lineitem,
-        "scan_events": scan_events,
-        "pivot_mean": pivot_mean,
-        "groupby_q1": groupby_q1,
-        "join_star": join_star,
-        "topk_orders": topk_orders,
-        "window_running": window_running,
-        "dedup_minhash": dedup_minhash,
-        "text_quality": text_quality,
-        "topk_cosine": topk_cosine,
-        "windowed_events": windowed_events,
-        "sink_parquet": sink_parquet,
-        "sink_csv": sink_csv,
-        "sink_json": sink_json,
+        # full-table materialization (the reference's load_file path):
+        # noop sink forces every column through the scan; reads the
+        # files directly (not the memory cache)
+        "scan_lineitem": (
+            lambda: spark.read.parquet(f"{sf_dir}/lineitem.parquet"), noop_write
+        ),
+        "scan_events": (
+            lambda: load_parquet_nanos(spark, f"{sf_dir}/events.parquet"), scan_small
+        ),
+        "pivot_mean": (
+            lambda: q.pivot_table(
+                t("lineitem"), "l_returnflag", "l_linestatus", "l_extendedprice",
+                "mean", pivot_values=["F", "O"],
+            ),
+            collect,
+        ),
+        "groupby_q1": (groupby_q1, collect),
+        "join_star": (join_star, collect),
+        "topk_orders": (
+            lambda: q.top_k(
+                t("orders").select("o_orderkey", "o_totalprice"),
+                by=["o_totalprice", "o_orderkey"], k=100, ascending=[False, True],
+            ),
+            collect,
+        ),
+        "window_running": (window_running, noop_write),
+        "dedup_minhash": (
+            lambda: D.minhash_lsh_pairs(
+                t("documents"), "doc_id", "text", 3, 0.7, num_hashes=32, bands=8
+            ),
+            collect,
+        ),
+        "text_quality": (text_quality, noop_write),
+        "topk_cosine": (topk_cosine, collect),
+        "windowed_events": (windowed_events, noop_write),
+        "sink_parquet": (
+            lambda: t("lineitem"),
+            lambda df: df.write.mode("overwrite").parquet(f"{tmp}/li.parquet"),
+        ),
+        "sink_csv": (
+            lambda: t("lineitem"),
+            lambda df: df.write.mode("overwrite").option("header", True).csv(f"{tmp}/li.csv"),
+        ),
+        "sink_json": (
+            lambda: t("lineitem"),
+            lambda df: df.write.mode("overwrite").json(f"{tmp}/li.json"),
+        ),
     }
+
+
+def timed_runs(frame, action, n: int) -> list[float]:
+    """Seconds of ``n`` runs of ``action(frame())`` after one untimed
+    warm-up: plan compilation, codegen, file-footer caches, and the
+    re-cache of the memory-resident tables."""
+    action(frame())
+    samples = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        action(frame())
+        samples.append(time.perf_counter() - t0)
+    return samples
 
 
 def run_session() -> dict:
     """One full bench pass in THIS process; returns the result dict."""
-    from parquet_editor_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="bench",
-        cpus=CPUS,
-        shuffle_partitions=SHUFFLE,
-        # default minPartitionNum = defaultParallelism splits the 2 MB
-        # events file into 32 × 64 KB scan tasks; 8 keeps multi-core
-        # scans on the 10 MB lineitem file without the tiny-task storm.
-        # v2 task-commit renames files once (task commit) instead of
-        # twice (task + job) — pure win for the three sink rows and the
-        # committer any object-store deployment would pick anyway.
-        extra_conf={
-            "spark.sql.files.minPartitionNum": "8",
-            "spark.hadoop.mapreduce.fileoutputcommitter"
-            ".algorithm.version": "2",
-        },
-    )
+    spark = bench_session()
     tmp = tempfile.mkdtemp(prefix="pes_bench_")
-    queries = build_queries(spark, tmp)
-
-    def timed(fn) -> float:
-        fn()  # warm-up: plan compilation, codegen, file-footer caches
-        best = float("inf")
-        for _ in range(RUNS):
-            t0 = time.perf_counter()
-            fn()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 4)
-
     times: dict[str, float] = {}
-    for name, fn in queries.items():
-        times[name] = timed(fn)
+    for name, (frame, action) in build_queries(spark, tmp).items():
+        times[name] = round(min(timed_runs(frame, action, RUNS)), 4)
         # drop persisted intermediates (e.g. dedup shingle caches) so
         # repeated runs don't accumulate memory pressure
         clear_caches(spark)
@@ -370,23 +380,15 @@ def run_session() -> dict:
     # Calibration is therefore the MEDIAN of 7 runs (robust location,
     # not an extreme order statistic) — and the parent merges sessions
     # by median too, while query rows keep their min-of-sessions.
-    def calib_median(fn, n: int = 7) -> float:
-        fn()  # warm-up
-        samples = []
-        for _ in range(n):
-            t0 = time.perf_counter()
-            fn()
-            samples.append(time.perf_counter() - t0)
-        samples.sort()
-        return round(samples[n // 2], 4)
-
     calib = {
-        "noop_write_range100": calib_median(
-            lambda: spark.range(100).write.mode("overwrite")
-            .format("noop").save()
+        "noop_write_range100": round(
+            statistics.median(timed_runs(lambda: spark.range(100), noop_write, 7)), 4
         ),
-        "empty_count": calib_median(
-            lambda: spark.range(0).filter("id < 0").count()
+        "empty_count": round(
+            statistics.median(
+                timed_runs(lambda: spark.range(0).filter("id < 0"), lambda df: df.count(), 7)
+            ),
+            4,
         ),
     }
 
@@ -502,8 +504,6 @@ def main() -> None:
     # median across sessions for calibration (stability over
     # optimism — r15); min stays right for the query rows, where the
     # noise is one-sided
-    import statistics
-
     merged["calibration"] = {
         c: round(
             statistics.median(r["calibration"][c] for r in results), 4

@@ -158,6 +158,10 @@ class EditorSession:
     #: the session materializes and restarts the chain.
     COMPACT_EVERY = 32
 
+    #: every live session: Spark caches by plan, one cache for all the
+    #: sessions of a SparkContext, so a pin may be held in another one
+    _live: "weakref.WeakSet[EditorSession]" = weakref.WeakSet()
+
     def __init__(
         self,
         spark: Optional[SparkSession] = None,
@@ -174,6 +178,7 @@ class EditorSession:
         # with_rid pinned them; a __rid from anywhere else (a frame
         # built from get() or SQL) may have gaps and is re-ranked
         self._ordinal: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+        EditorSession._live.add(self)
 
     # -- catalog -----------------------------------------------------
     def names(self) -> list[str]:
@@ -227,11 +232,17 @@ class EditorSession:
     def _release(self, gone: list[DataFrame]) -> None:
         """The one release rule: a pin ``with_rid`` made is unpersisted
         when its binding leaves history — unless a pin still in history,
-        in any table, has the same plan. Spark caches by plan, so one
-        file opened as two tables and pinned in both shares ONE cache
-        entry. A frame the caller cached stays the caller's."""
-        stacks = [self._tables.values(), *self._undo.values(), *self._redo.values()]
-        kept = [k for stack in stacks for k in stack if self._ordinal.get(k)]
+        in any table of any session, has the same plan. Spark caches by
+        plan, so one file opened as two tables and pinned in both, in
+        one session or two, shares ONE cache entry. A frame the caller
+        cached stays the caller's."""
+        kept = [
+            k
+            for s in EditorSession._live
+            for stack in (s._tables.values(), *s._undo.values(), *s._redo.values())
+            for k in stack
+            if s._ordinal.get(k)
+        ]
         for df in gone:
             if self._ordinal.get(df) and not any(df.sameSemantics(k) for k in kept):
                 df.unpersist()

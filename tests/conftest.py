@@ -73,6 +73,7 @@ _SLOW_TESTS = {
     ("test_graph.py", "test_pagerank_dangling_mass_redistributed"),
     ("test_streaming.py", "test_stateful_sessionize_equals_batch_lag"),
     ("test_plans.py", "test_crawl_frontier_v5_plan_shape"),
+    ("test_tools.py", "test_time_and_plans_modes_over_bench_rows"),
 }
 
 

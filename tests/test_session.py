@@ -140,6 +140,30 @@ def test_identical_plans_share_one_pin(sess, sf_dir):
     assert persisted_rdds(sess.spark) == before
 
 
+@pytest.mark.parametrize("first", ["a", "b"])
+def test_a_pin_shared_across_sessions_goes_with_its_last_holder(spark, sf_dir, first):
+    """Two sessions that view one file share one cache entry; the pin
+    stays while either session still has the table open, in whichever
+    order they close it."""
+    sessions = {"a": EditorSession(spark), "b": EditorSession(spark)}
+    before = persisted_rdds(spark)
+    try:
+        for s in sessions.values():
+            s.load("t", f"{sf_dir}/lineitem.parquet")
+            s.preview("t", n=5)
+        assert persisted_rdds(spark) == before + 1
+        sessions[first].drop_table("t")
+        assert persisted_rdds(spark) == before + 1
+        last = sessions["b" if first == "a" else "a"]
+        assert len(last.preview("t", n=5)) == 5
+        last.drop_table("t")
+        assert persisted_rdds(spark) == before
+    finally:
+        for s in sessions.values():
+            for name in s.names():
+                s.drop_table(name)
+
+
 @pytest.mark.parametrize("pin", ["view", "with_rid"])
 def test_frame_built_from_the_table_gets_dense_ordinals(sess, sf_dir, pin):
     """SQL never sees ``__rid``, and a frame built from ``get()`` keeps
