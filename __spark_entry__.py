@@ -1446,14 +1446,8 @@ def q_jpeg_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
             yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("jpeg").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema), "payload", "image", "jpeg"
     )
     return (
         MM.decode_meta(with_payload)
@@ -1502,14 +1496,8 @@ def q_flac_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
             yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("flac").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema), "payload", "audio", "flac"
     )
     return (
         MM.audio_meta(with_payload)
@@ -1565,14 +1553,8 @@ def q_mp4_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["payload"] = payloads
             yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("video").alias("media_type"),
-            F.lit("mp4").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema), "payload", "video", "mp4"
     )
     return (
         MM.video_meta(with_payload)
@@ -1637,14 +1619,8 @@ def q_mp3_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["payload"] = payloads
             yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("mp3").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema), "payload", "audio", "mp3"
     )
     return (
         MM.audio_meta(with_payload)
@@ -1702,14 +1678,8 @@ def q_wav_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["payload"] = payloads
             yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("wav").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema), "payload", "audio", "wav"
     )
     metaed = MM.audio_meta(with_payload)
 
@@ -1798,14 +1768,8 @@ def q_wav_ms_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["payload"] = payloads
             yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("wav").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema), "payload", "audio", "wav"
     )
     metaed = MM.audio_meta(with_payload)
 
@@ -1897,14 +1861,8 @@ def q_wav_g711_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["payload"] = payloads
             yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("wav").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema), "payload", "audio", "wav"
     )
     metaed = MM.audio_meta(with_payload)
 
@@ -2016,14 +1974,8 @@ def q_jpeg_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["payload"] = payloads
             yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("jpeg").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema), "payload", "image", "jpeg"
     )
     return (
         MM.image_pixel_stats(with_payload)
@@ -2087,14 +2039,11 @@ def q_gif_bmp_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["codec"] = codecs
             yield pdf[["doc_id", "payload", "codec"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema),
+        "payload",
+        "image",
+        F.col("codec"),
     )
     return (
         MM.image_pixel_stats(with_payload)
@@ -2178,14 +2127,11 @@ def q_multimodal_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["codec"] = codecs
             yield pdf[["doc_id", "text_len", "payload", "codec"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema),
+        "payload",
+        "image",
+        F.col("codec"),
     )
     stats = MM.image_pixel_stats(with_payload)
     # brightness is exact for constant frames: px_sum / n_px == v
@@ -2301,14 +2247,11 @@ def q_multimodal_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["codec"] = codecs
             yield pdf[["doc_id", "text_len", "payload", "codec"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema),
+        "payload",
+        "image",
+        F.col("codec"),
     )
     metas = MM.decode_meta(with_payload)
     keep = (
@@ -2419,14 +2362,11 @@ def q_audio_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["codec"] = codecs
             yield pdf[["doc_id", "text_len", "payload", "codec"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema),
+        "payload",
+        "audio",
+        F.col("codec"),
     )
     metaed = MM.audio_meta(with_payload)
     return (
@@ -2516,14 +2456,8 @@ def q_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["payload"] = payloads
             yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("flac").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema), "payload", "audio", "flac"
     )
     metaed = MM.audio_meta(with_payload)
 
@@ -2628,14 +2562,8 @@ def q_mp4_frame_index_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["payload"] = payloads
             yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("video").alias("media_type"),
-            F.lit("mp4").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema), "payload", "video", "mp4"
     )
     indexed = MM.video_frame_index(with_payload)
     w = Window.partitionBy("doc_id")
@@ -2724,14 +2652,11 @@ def q_ogg_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["codec"] = codecs
             yield pdf[["doc_id", "payload", "codec"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema),
+        "payload",
+        "audio",
+        F.col("codec"),
     )
     return (
         MM.audio_meta(with_payload)
@@ -2823,14 +2748,8 @@ def q_image_dedup_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["payload"] = payloads
             yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("png").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema), "payload", "image", "png"
     )
     hashed = MM.image_dhash(with_payload)
     return (
@@ -2930,14 +2849,8 @@ def q_image_dedup_clusters(
             pdf["payload"] = payloads
             yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("png").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema), "payload", "image", "png"
     )
     hashed = MM.image_dhash(with_payload)
     pairs = DD.hamming_pairs(hashed, "doc_id", "dhash", max_hamming=3)
@@ -3121,14 +3034,11 @@ def q_audio_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["codec"] = codecs
             yield pdf[["doc_id", "payload", "codec"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema),
+        "payload",
+        "audio",
+        F.col("codec"),
     )
     return (
         MM.audio_stats(with_payload)
@@ -3206,14 +3116,8 @@ def q_tiff_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["payload"] = payloads
             yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("tiff").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema), "payload", "image", "tiff"
     )
     return (
         MM.image_pixel_stats(with_payload)
@@ -3292,14 +3196,8 @@ def q_avi_mjpeg_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["payload"] = payloads
             yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("video").alias("media_type"),
-            F.lit("avi").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema), "payload", "video", "avi"
     )
     return (
         MM.video_frame_stats(with_payload, k=3)
@@ -3396,14 +3294,11 @@ def q_video_scene_cuts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["codec"] = codecs
             yield pdf[["doc_id", "codec", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("video").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema),
+        "payload",
+        "video",
+        F.col("codec"),
     )
     return (
         MM.video_scene_cuts(with_payload, threshold=16)
@@ -3476,14 +3371,8 @@ def q_jpeg_exif_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["payload"] = payloads
             yield pdf[["doc_id", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("jpeg").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema), "payload", "image", "jpeg"
     )
     return (
         MM.image_exif(with_payload)
@@ -3593,14 +3482,11 @@ def q_video_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["codec"] = codecs
             yield pdf[["doc_id", "codec", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("video").alias("media_type"),
-            F.col("codec").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema),
+        "payload",
+        "video",
+        F.col("codec"),
     )
     meta = MM.video_meta(with_payload).select(
         "doc_id", "codec", "duration_ms"
@@ -3839,14 +3725,11 @@ def q_subtitle_cues_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf["fmt"] = fmts
             yield pdf[["doc_id", "fmt", "payload"]]
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema).withColumn(
-        "meta",
-        F.struct(
-            F.lit("text").alias("media_type"),
-            F.col("fmt").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    with_payload = MM.attach_payload(
+        docs.mapInPandas(gen, schema=gen_schema),
+        "payload",
+        "text",
+        F.col("fmt"),
     )
     return (
         MM.subtitle_cues(with_payload)
@@ -11284,14 +11167,8 @@ def q_png_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pdf[["doc_id", "payload"]]
 
     payloads = docs.mapInPandas(gen, schema=gen_schema)
-    tagged = payloads.withColumn(
-        "meta",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("png").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    tagged = MM.attach_payload(
+        payloads, "payload", "image", "png"
     )
     orig = MM.decode_meta(tagged).select(
         "doc_id",
@@ -11366,14 +11243,8 @@ def q_wav_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield out[["doc_id", "payload"]]
 
     payloads = docs.mapInPandas(gen, schema=gen_schema)
-    tagged = payloads.withColumn(
-        "meta",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("wav").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    tagged = MM.attach_payload(
+        payloads, "payload", "audio", "wav"
     )
     orig = MM.audio_meta(tagged).select(
         "doc_id",
@@ -11446,14 +11317,8 @@ def q_y4m_frames_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield out[["doc_id", "payload"]]
 
     payloads = docs.mapInPandas(gen, schema=gen_schema)
-    tagged = payloads.withColumn(
-        "meta",
-        F.struct(
-            F.lit("video").alias("media_type"),
-            F.lit("y4m").alias("codec"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-            F.md5("payload").alias("checksum"),
-        ),
+    tagged = MM.attach_payload(
+        payloads, "payload", "video", "y4m"
     )
     return (
         MM.sample_frames_video(tagged, k=3)

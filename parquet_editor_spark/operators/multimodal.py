@@ -3,6 +3,27 @@ image/audio/video payloads as opaque ``binary`` columns with typed
 metadata, and run decode / feature-extract / resize / frame-sample as
 Arrow-batched ``mapInPandas`` operators.
 
+Every Python-worker operator here has one of three shapes, and each
+shape is one module-private helper that owns the schema, the batch
+loop, the per-row codec and the null-payload rule:
+
+- ``_map_columns`` — columns per payload: each row keeps its columns
+  and gains new ones computed from ``(payload bytes, codec)``; a null
+  payload gives nulls (``decode_meta``, ``resize_images``, ...).
+- ``_map_records`` — records per payload: one row becomes 0..n rows,
+  the carried columns repeated on each; a null payload gives exactly
+  one all-null row (archive, document, frame and segment walks).
+- ``_pack_shards`` — one payload per shard: ``groupBy(shard)`` →
+  sort by the order column → serialize → (shard, count, bytes,
+  payload) (the WebDataset / TFRecord / Arrow IPC / parquet exports).
+
+The per-row codec comes from ``meta.codec``.  Each modality decodes
+through one seam: ``_decode_real`` (image dimensions),
+``_decode_pixels`` (image pixels), ``_video_pixel_frames`` (video
+pixels) and ``_decode_audio_samples`` (audio samples).  The operators
+keep only their ``fake`` branch and what they compute from the decoded
+values.
+
 The container has no image/audio libraries, so decode runs on two
 paths, dispatched per row on ``meta.codec``:
 
@@ -24,17 +45,20 @@ paths, dispatched per row on ``meta.codec``:
   batch iteration, array-column schemas, explode for frame sampling)
   without pretending to decode pixels.
 - anything else — a clearly-marked ``NotImplementedError``; swapping
-  in PIL/ffmpeg later changes ONLY ``_decode_real``.
+  in PIL/ffmpeg later changes ONLY the decode seam of that modality
+  (``_decode_real`` for image dimensions).
 
-Worker-side note: the PNG path imports ``parquet_editor_spark`` inside
-the UDF, so the package must be shipped to executors (``--py-files`` /
-pex / cluster image) — the standard requirement for any real codec
-dependency, and automatic in local mode.
+Worker-side note: the worker bodies are nested functions, pickled by
+value, but the real codecs import ``parquet_editor_spark.sources``
+(and the helpers and seams of this module) on the worker, so the
+package must be shipped to executors (``--py-files`` / pex / cluster
+image) — the standard requirement for any real codec dependency, and
+automatic in local mode.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -50,14 +74,18 @@ MEDIA_META_SCHEMA = T.StructType(
 
 
 def attach_payload(
-    df: DataFrame, source_col: str, media_type: str = "image", codec: str = "fake"
+    df: DataFrame,
+    source_col: str,
+    media_type: str = "image",
+    codec: str | Column = "fake",
 ) -> DataFrame:
     """Wrap a source column's bytes as an opaque media payload +
     typed metadata. A string source is UTF-8 encoded; an
     already-binary source (e.g. the ``binaryFile`` scan's ``content``)
     passes through untouched. ``encode`` is a JVM expression; the
     checksum is md5 over the payload bytes (portable: Spark, DuckDB,
-    hashlib all agree)."""
+    hashlib all agree).  ``codec`` is a literal or a per-row Column
+    (e.g. a format column)."""
     already_binary = isinstance(
         df.schema[source_col].dataType, T.BinaryType
     )
@@ -77,9 +105,139 @@ def attach_payload(
     )
 
 
+def _is_meta(df: DataFrame, col: str | None) -> bool:
+    """True when ``col`` is a struct column of ``df`` (the ``meta``
+    struct that :func:`attach_payload` builds)."""
+    return col in df.columns and isinstance(
+        df.schema[col].dataType, T.StructType
+    )
+
+
+def _row_codecs(df: DataFrame, codec_col: str | None, default: str):
+    """The per-row codec of a pandas batch, read on the worker.
+    ``codec_col`` is the ``meta`` struct (its ``codec`` field) or a
+    plain string column (read as is); a null ``meta`` struct, or a
+    frame without ``codec_col``, reads ``default``."""
+    if codec_col not in df.columns:
+        return lambda pdf: [default] * len(pdf)
+    if _is_meta(df, codec_col):
+        return lambda pdf: [
+            default if m is None else m["codec"] for m in pdf[codec_col]
+        ]
+    return lambda pdf: list(pdf[codec_col])
+
+
+def _map_columns(
+    df: DataFrame,
+    payload_col: str,
+    fields: list[T.StructField],
+    per_payload,
+    codec_col: str | None = None,
+    null: tuple = (),
+) -> DataFrame:
+    """Columns per payload: every row keeps its columns and gains
+    ``fields``, one value each from ``per_payload(payload bytes,
+    codec)``.  A field replaces the column of its name, which moves to
+    the end (``resize_images`` replaces the payload).  A null payload
+    gives ``null`` (all None by default) without a call."""
+    codecs = _row_codecs(df, codec_col, "fake")
+    names = [f.name for f in fields]
+    replaced = [c for c in df.columns if c in names]
+    out_schema = T.StructType(
+        [f for f in df.schema.fields if f.name not in names] + fields
+    )
+    null_row = null or (None,) * len(names)
+
+    def run(batches):
+        for pdf in batches:
+            vals = [
+                null_row if p is None else per_payload(bytes(p), c)
+                for p, c in zip(pdf[payload_col], codecs(pdf))
+            ]
+            pdf = pdf.drop(columns=replaced)
+            for i, name in enumerate(names):
+                pdf[name] = [v[i] for v in vals]
+            yield pdf
+
+    return df.mapInPandas(run, schema=out_schema)
+
+
+def _map_records(
+    df: DataFrame,
+    payload_col: str,
+    fields: list[T.StructField],
+    per_payload,
+    codec_col: str | None = None,
+    default_codec: str = "fake",
+) -> DataFrame:
+    """Records per payload: every row becomes one row per record that
+    ``per_payload(payload bytes, codec)`` yields (one value per
+    field), its other columns repeated on each.  The payload and its
+    ``meta`` struct (it describes the bytes the records replace) are
+    not carried; a plain codec column is.  A null payload gives
+    exactly one row whose ``fields`` are all null."""
+    codecs = _row_codecs(df, codec_col, default_codec)
+    gone = (payload_col, codec_col if _is_meta(df, codec_col) else None)
+    keep = [f for f in df.schema.fields if f.name not in gone]
+    keep_names = [f.name for f in keep]
+    out_names = keep_names + [f.name for f in fields]
+    null_rec = (None,) * len(fields)
+
+    def run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = []
+            for (_, row), codec in zip(pdf.iterrows(), codecs(pdf)):
+                p = row[payload_col]
+                base = [row[c] for c in keep_names]
+                recs = (
+                    [null_rec] if p is None else per_payload(bytes(p), codec)
+                )
+                rows.extend(base + list(r) for r in recs)
+            yield pd.DataFrame(rows, columns=out_names)
+
+    return df.mapInPandas(run, schema=T.StructType(keep + fields))
+
+
+def _pack_shards(
+    df: DataFrame, shard_col: str, order_col: str, count_col: str, serialize
+) -> DataFrame:
+    """One payload per shard: ``groupBy(shard_col)``, each group sorted
+    (stably) by ``order_col`` and turned into bytes by
+    ``serialize(pdf)``; one row per shard: the shard id, the group's
+    row count as ``count_col``, ``shard_bytes`` and ``payload``."""
+    out_schema = T.StructType(
+        [
+            df.schema[shard_col],
+            T.StructField(count_col, T.IntegerType(), False),
+            T.StructField("shard_bytes", T.LongType(), False),
+            T.StructField("payload", T.BinaryType(), False),
+        ]
+    )
+
+    def pack(pdf):
+        import pandas as pd
+
+        pdf = pdf.sort_values(order_col, kind="mergesort")
+        payload = serialize(pdf)
+        return pd.DataFrame(
+            [
+                {
+                    shard_col: pdf[shard_col].iloc[0],
+                    count_col: len(pdf),
+                    "shard_bytes": len(payload),
+                    "payload": payload,
+                }
+            ]
+        )
+
+    return df.groupBy(shard_col).applyInPandas(pack, schema=out_schema)
+
+
 def _decode_real(payload: bytes, codec: str):
-    """The real decoder seam: dimensions per codec, mirroring
-    ``decode_meta``'s per-row dispatch.  Formats without a
+    """The real decoder seam: image dimensions per codec, the
+    dispatch behind ``decode_meta``.  Formats without a
     dependency-free decoder fail loudly rather than fabricating
     pixels."""
     if codec == "png":
@@ -113,7 +271,7 @@ def _decode_real(payload: bytes, codec: str):
     raise NotImplementedError(
         f"decode for codec {codec!r} requires PIL/ffmpeg; not available "
         "in this environment — use the built-in codecs (png, jpeg, "
-        "gif, bmp, tiff) or codec='fake' for pipeline testing"
+        "gif, bmp, tiff, webp) or codec='fake' for pipeline testing"
     )
 
 
@@ -130,83 +288,29 @@ def decode_meta(
     ``"fake"`` rows use the deterministic fake; other codecs raise
     (failing the task, not fabricating pixels).  A frame without
     ``meta`` decodes as fake."""
-    has_meta = meta_col in df.columns
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
+
+    def dims(p: bytes, codec: str):
+        # the fake path stays self-contained (nested defs ship by
+        # value); the real codecs import the package on the worker —
+        # ship it via --py-files/pex in a cluster deployment
+        if codec == "fake":
+            import hashlib as _h
+
+            d = _h.md5(p).digest()
+            return 16 + d[0] % 1024, 16 + d[1] % 1024, 1 + d[2] % 4
+        return _decode_real(p, codec)
+
+    return _map_columns(
+        df,
+        payload_col,
+        [
             T.StructField("width", T.IntegerType(), True),
             T.StructField("height", T.IntegerType(), True),
             T.StructField("channels", T.IntegerType(), True),
-        ]
+        ],
+        dims,
+        meta_col,
     )
-
-    def run(batches):
-        # the fake path stays self-contained (nested defs ship by
-        # value); the png path imports the package on the worker —
-        # ship it via --py-files/pex in a cluster deployment
-        import hashlib as _h
-
-        def fake(p: bytes):
-            d = _h.md5(p).digest()
-            return 16 + d[0] % 1024, 16 + d[1] % 1024, 1 + d[2] % 4
-
-        def dims_of(p, codec: str):
-            if p is None:
-                return (None, None, None)
-            p = bytes(p)
-            if codec == "png":
-                from parquet_editor_spark.sources.png import decode_png
-
-                w, h, ch, _ = decode_png(p)
-                return (w, h, ch)
-            if codec in ("jpeg", "jpg"):
-                from parquet_editor_spark.sources.jpeg import (
-                    jpeg_header_meta,
-                )
-
-                return jpeg_header_meta(p)
-            if codec == "gif":
-                from parquet_editor_spark.sources.gif import gif_meta
-
-                w, h, _frames = gif_meta(p)
-                return (w, h, 3)
-            if codec == "bmp":
-                from parquet_editor_spark.sources.bmp import bmp_meta
-
-                return bmp_meta(p)
-            if codec in ("tiff", "tif"):
-                from parquet_editor_spark.sources.tiff import tiff_meta
-
-                return tiff_meta(p)
-            if codec == "webp":
-                from parquet_editor_spark.sources.webp import webp_meta
-
-                return webp_meta(p)
-            if codec == "fake":
-                return fake(p)
-            raise NotImplementedError(
-                f"decode for codec {codec!r} requires PIL/ffmpeg"
-            )
-
-        for pdf in batches:
-            codecs = (
-                [
-                    "fake" if m is None else m["codec"]
-                    for m in pdf[meta_col]
-                ]
-                if has_meta
-                else ["fake"] * len(pdf)
-            )
-            dims = [
-                dims_of(p, c) for p, c in zip(pdf[payload_col], codecs)
-            ]
-            pdf = pdf.copy()
-            pdf["width"] = [d[0] for d in dims]
-            pdf["height"] = [d[1] for d in dims]
-            pdf["channels"] = [d[2] for d in dims]
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def extract_features(
@@ -216,33 +320,25 @@ def extract_features(
     fake features (md5-seeded), but the batch shape, Arrow transfer
     and ``array<float>`` output schema are the production path — a
     real CNN/CLIP encoder drops into ``featurize`` unchanged."""
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField("features", T.ArrayType(T.FloatType()), True)]
-    )
 
-    def run(batches):
+    def featurize(p: bytes, _codec: str):
         import hashlib as _h
 
-        def featurize(payload: bytes) -> list[float]:
-            # bytes([i]) only accepts 0-255; wider dims use a 2-byte
-            # index suffix (identical values for i < 256 — the oracle
-            # contract — and valid, distinct ones beyond)
-            def sfx(i: int) -> bytes:
-                return bytes([i]) if i < 256 else i.to_bytes(2, "big")
+        # bytes([i]) only accepts 0-255; wider dims use a 2-byte
+        # index suffix (identical values for i < 256 — the oracle
+        # contract — and valid, distinct ones beyond)
+        def sfx(i: int) -> bytes:
+            return bytes([i]) if i < 256 else i.to_bytes(2, "big")
 
-            raw = (_h.md5(payload + sfx(i)).digest()[0] for i in range(dim))
-            return [round(b / 255.0, 6) for b in raw]
+        raw = (_h.md5(p + sfx(i)).digest()[0] for i in range(dim))
+        return ([round(b / 255.0, 6) for b in raw],)
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["features"] = [
-                featurize(bytes(p)) if p is not None else None
-                for p in pdf[payload_col]
-            ]
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
+    return _map_columns(
+        df,
+        payload_col,
+        [T.StructField("features", T.ArrayType(T.FloatType()), True)],
+        featurize,
+    )
 
 
 def resize_images(
@@ -263,108 +359,65 @@ def resize_images(
 
     Scale shape: pure mapInPandas projection — no shuffle, bytes never
     cross to the driver, output partitioning inherits the scan."""
-    out_schema = T.StructType(
+
+    def encoder(codec: str):
+        # checked before the decode: a codec without an encoder (tiff)
+        # raises here, whatever its bytes
+        if codec == "png":
+            from parquet_editor_spark.sources.png import encode_png
+
+            return encode_png
+        if codec in ("jpeg", "jpg"):
+            # REAL since r9: baseline re-encode (sources/jpeg_codec.py);
+            # gray and RGB only (a 2/4-channel frame was never a JPEG)
+            from parquet_editor_spark.sources.jpeg_codec import (
+                encode_jpeg_baseline,
+            )
+
+            return encode_jpeg_baseline
+        if codec == "gif":
+            # nearest-neighbor keeps the palette closed (it only
+            # samples existing pixels), so re-encode cannot exceed
+            # the 256-color fixture bound
+            from parquet_editor_spark.sources.gif import encode_gif
+
+            return encode_gif
+        if codec == "bmp":
+            from parquet_editor_spark.sources.bmp import encode_bmp
+
+            return encode_bmp
+        raise NotImplementedError(
+            f"resize for codec {codec!r} requires PIL/ffmpeg"
+        )
+
+    def shrink(p: bytes, codec: str) -> bytes:
+        if codec == "fake":
+            import hashlib as _h
+
+            return _h.md5(p + f"{target_w}x{target_h}".encode()).digest()
+        from parquet_editor_spark.sources.png import resize_nearest
+
+        encode = encoder(codec)
+        w, h, ch, pix = _decode_pixels(p, codec, "resize")
+        return encode(
+            target_w,
+            target_h,
+            ch,
+            resize_nearest(pix, w, h, ch, target_w, target_h),
+        )
+
+    return _map_columns(
+        df,
+        payload_col,
         [
-            f
-            for f in df.schema.fields
-            if f.name not in (payload_col, "width", "height")
-        ]
-        + [
             T.StructField(payload_col, T.BinaryType(), True),
             T.StructField("width", T.IntegerType(), True),
             T.StructField("height", T.IntegerType(), True),
-        ]
+        ],
+        lambda p, codec: (shrink(p, codec), target_w, target_h),
+        meta_col,
+        null=(None, target_w, target_h),
     )
-    names = [f.name for f in out_schema.fields]
-    has_meta = meta_col in df.columns
-
-    def run(batches):
-        import hashlib as _h
-
-        def shrink(p: bytes, codec: str) -> bytes:
-            if codec == "png":
-                from parquet_editor_spark.sources import png as _png
-
-                w, h, ch, pix = _png.decode_png(p)
-                return _png.encode_png(
-                    target_w,
-                    target_h,
-                    ch,
-                    _png.resize_nearest(pix, w, h, ch, target_w, target_h),
-                )
-            if codec in ("jpeg", "jpg"):
-                # REAL since r9: baseline decode → nearest resize →
-                # baseline re-encode (sources/jpeg_codec.py); gray and
-                # RGB only (a 2/4-channel frame was never a JPEG)
-                from parquet_editor_spark.sources import png as _png
-                from parquet_editor_spark.sources.jpeg_codec import (
-                    decode_jpeg,
-                    encode_jpeg_baseline,
-                )
-
-                w, h, ch, pix = decode_jpeg(p)
-                return encode_jpeg_baseline(
-                    target_w,
-                    target_h,
-                    ch,
-                    _png.resize_nearest(pix, w, h, ch, target_w, target_h),
-                )
-            if codec == "gif":
-                # nearest-neighbor keeps the palette closed (it only
-                # samples existing pixels), so re-encode cannot exceed
-                # the 256-color fixture bound
-                from parquet_editor_spark.sources import png as _png
-                from parquet_editor_spark.sources.gif import (
-                    decode_gif,
-                    encode_gif,
-                )
-
-                w, h, ch, pix = decode_gif(p)
-                return encode_gif(
-                    target_w,
-                    target_h,
-                    ch,
-                    _png.resize_nearest(pix, w, h, ch, target_w, target_h),
-                )
-            if codec == "bmp":
-                from parquet_editor_spark.sources import png as _png
-                from parquet_editor_spark.sources.bmp import (
-                    decode_bmp,
-                    encode_bmp,
-                )
-
-                w, h, ch, pix = decode_bmp(p)
-                return encode_bmp(
-                    target_w,
-                    target_h,
-                    ch,
-                    _png.resize_nearest(pix, w, h, ch, target_w, target_h),
-                )
-            if codec == "fake":
-                return _h.md5(p + f"{target_w}x{target_h}".encode()).digest()
-            raise NotImplementedError(
-                f"resize for codec {codec!r} requires PIL/ffmpeg"
-            )
-
-        for pdf in batches:
-            codecs = (
-                [
-                    "fake" if m is None else m["codec"]
-                    for m in pdf[meta_col]
-                ]
-                if has_meta
-                else ["fake"] * len(pdf)
-            )
-            pdf = pdf.copy()
-            pdf[payload_col] = [
-                shrink(bytes(p), c) if p is not None else None
-                for p, c in zip(pdf[payload_col], codecs)
-            ]
-            pdf["width"] = target_w
-            pdf["height"] = target_h
-            yield pdf[names]
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def _decode_pixels(
@@ -396,7 +449,8 @@ def _decode_pixels(
 
         return decode_tiff(p)
     raise NotImplementedError(
-        f"{what} for codec {codec!r} requires PIL/ffmpeg"
+        f"{what} for codec {codec!r} requires PIL/ffmpeg; built-in "
+        "pixel support is png, jpeg, gif, bmp, tiff"
     )
 
 
@@ -414,10 +468,33 @@ def image_pixel_stats(
 
     Scale shape: pure Arrow ``mapInPandas`` projection — bytes stay on
     the executors, partitioning inherits the scan."""
-    has_meta = meta_col in df.columns
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
+
+    def stats(p: bytes, codec: str):
+        import numpy as _np
+
+        if codec == "fake":
+            import hashlib as _h
+
+            d = _h.md5(p).digest()
+            w, h, ch = 16 + d[0] % 1024, 16 + d[1] % 1024, 1 + d[2] % 4
+            v = d[3]
+            return (w, h, ch, v, v, v * w * h * ch, w * h * ch)
+        w, h, ch, pix = _decode_pixels(p, codec, "pixel stats")
+        a = _np.frombuffer(pix, dtype=_np.uint8)
+        return (
+            w,
+            h,
+            ch,
+            int(a.min()),
+            int(a.max()),
+            int(a.astype(_np.int64).sum()),
+            int(a.size),
+        )
+
+    return _map_columns(
+        df,
+        payload_col,
+        [
             T.StructField("width", T.IntegerType(), True),
             T.StructField("height", T.IntegerType(), True),
             T.StructField("channels", T.IntegerType(), True),
@@ -425,52 +502,10 @@ def image_pixel_stats(
             T.StructField("px_max", T.IntegerType(), True),
             T.StructField("px_sum", T.LongType(), True),
             T.StructField("n_px", T.LongType(), True),
-        ]
+        ],
+        stats,
+        meta_col,
     )
-
-    def run(batches):
-        import hashlib as _h
-
-        import numpy as _np
-
-        def stats_of(p, codec: str):
-            if p is None:
-                return (None,) * 7
-            p = bytes(p)
-            if codec == "fake":
-                d = _h.md5(p).digest()
-                w, h, ch = 16 + d[0] % 1024, 16 + d[1] % 1024, 1 + d[2] % 4
-                v = d[3]
-                return (w, h, ch, v, v, v * w * h * ch, w * h * ch)
-            w, h, ch, pix = _decode_pixels(p, codec, "pixel stats")
-            a = _np.frombuffer(pix, dtype=_np.uint8)
-            return (
-                w,
-                h,
-                ch,
-                int(a.min()),
-                int(a.max()),
-                int(a.astype(_np.int64).sum()),
-                int(a.size),
-            )
-
-        cols = ["width", "height", "channels", "px_min", "px_max",
-                "px_sum", "n_px"]
-        for pdf in batches:
-            codecs = (
-                ["fake" if m is None else m["codec"] for m in pdf[meta_col]]
-                if has_meta
-                else ["fake"] * len(pdf)
-            )
-            stats = [
-                stats_of(p, c) for p, c in zip(pdf[payload_col], codecs)
-            ]
-            pdf = pdf.copy()
-            for i, c in enumerate(cols):
-                pdf[c] = [s[i] for s in stats]
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def sample_frames(
@@ -517,81 +552,53 @@ def audio_meta(
 
     Scale shape: pure Arrow ``mapInPandas`` projection, bytes stay on
     the executors, partitioning inherits the scan."""
-    has_meta = meta_col in df.columns
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
+
+    def meta_of(p: bytes, codec: str):
+        if codec == "wav":
+            from parquet_editor_spark.sources.wav import decode_wav
+
+            rate, ch, _bits, n, _ = decode_wav(p)
+            return (rate, ch, n, n * 1000 // rate)
+        if codec == "flac":
+            from parquet_editor_spark.sources.flac import flac_stream_info
+
+            rate, ch, _bits, n = flac_stream_info(p)
+            return (rate, ch, n, n * 1000 // rate)
+        if codec == "mp3":
+            from parquet_editor_spark.sources.mp3 import mp3_stream_info
+
+            rate, ch, n, _frames, _kbps = mp3_stream_info(p)
+            return (rate, ch, n, n * 1000 // rate)
+        if codec in ("ogg", "opus", "vorbis"):
+            from parquet_editor_spark.sources.ogg import ogg_stream_info
+
+            _codec, rate, ch, n = ogg_stream_info(p)
+            return (rate, ch, n, n * 1000 // rate)
+        if codec == "fake":
+            import hashlib as _h
+
+            d = _h.md5(p).digest()
+            rate = 8000 * (1 + d[0] % 6)
+            ch = 1 + d[1] % 2
+            n = 1 + int.from_bytes(d[2:5], "big") % 100000
+            return (rate, ch, n, n * 1000 // rate)
+        raise NotImplementedError(
+            f"audio decode for codec {codec!r} requires a real "
+            "audio library"
+        )
+
+    return _map_columns(
+        df,
+        payload_col,
+        [
             T.StructField("sample_rate", T.IntegerType(), True),
             T.StructField("channels", T.IntegerType(), True),
             T.StructField("n_frames", T.LongType(), True),
             T.StructField("duration_ms", T.LongType(), True),
-        ]
+        ],
+        meta_of,
+        meta_col,
     )
-
-    def run(batches):
-        import hashlib as _h
-
-        def meta_of(p, codec: str):
-            if p is None:
-                return (None, None, None, None)
-            p = bytes(p)
-            if codec == "wav":
-                from parquet_editor_spark.sources.wav import decode_wav
-
-                rate, ch, _bits, n, _ = decode_wav(p)
-                return (rate, ch, n, n * 1000 // rate)
-            if codec == "flac":
-                from parquet_editor_spark.sources.flac import (
-                    flac_stream_info,
-                )
-
-                rate, ch, _bits, n = flac_stream_info(p)
-                return (rate, ch, n, n * 1000 // rate)
-            if codec == "mp3":
-                from parquet_editor_spark.sources.mp3 import (
-                    mp3_stream_info,
-                )
-
-                rate, ch, n, _frames, _kbps = mp3_stream_info(p)
-                return (rate, ch, n, n * 1000 // rate)
-            if codec in ("ogg", "opus", "vorbis"):
-                from parquet_editor_spark.sources.ogg import (
-                    ogg_stream_info,
-                )
-
-                _codec, rate, ch, n = ogg_stream_info(p)
-                return (rate, ch, n, n * 1000 // rate)
-            if codec == "fake":
-                d = _h.md5(p).digest()
-                rate = 8000 * (1 + d[0] % 6)
-                ch = 1 + d[1] % 2
-                n = 1 + int.from_bytes(d[2:5], "big") % 100000
-                return (rate, ch, n, n * 1000 // rate)
-            raise NotImplementedError(
-                f"audio decode for codec {codec!r} requires a real "
-                "audio library"
-            )
-
-        for pdf in batches:
-            codecs = (
-                [
-                    "fake" if m is None else m["codec"]
-                    for m in pdf[meta_col]
-                ]
-                if has_meta
-                else ["fake"] * len(pdf)
-            )
-            metas = [
-                meta_of(p, c) for p, c in zip(pdf[payload_col], codecs)
-            ]
-            pdf = pdf.copy()
-            pdf["sample_rate"] = [m[0] for m in metas]
-            pdf["channels"] = [m[1] for m in metas]
-            pdf["n_frames"] = [m[2] for m in metas]
-            pdf["duration_ms"] = [m[3] for m in metas]
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def video_meta(
@@ -611,71 +618,49 @@ def video_meta(
 
     Scale shape: pure Arrow ``mapInPandas`` projection, bytes stay on
     the executors, partitioning inherits the scan."""
-    has_meta = meta_col in df.columns
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
+
+    def meta_of(p: bytes, codec: str):
+        if codec == "mp4":
+            from parquet_editor_spark.sources.mp4 import mp4_meta
+
+            dur, _scale, n_tracks, w, h = mp4_meta(p)
+            return (dur, n_tracks, w, h)
+        if codec == "avi":
+            from parquet_editor_spark.sources.avi import avi_meta
+
+            dur, n_streams, w, h, _n = avi_meta(p)
+            return (dur, n_streams, w, h)
+        if codec == "y4m":
+            from parquet_editor_spark.sources.y4m import decode_y4m
+
+            w, h, num, den, _cs, frames = decode_y4m(p)
+            return (len(frames) * 1000 * den // num, 1, w, h)
+        if codec == "fake":
+            import hashlib as _h
+
+            d = _h.md5(p).digest()
+            return (
+                1 + int.from_bytes(d[0:3], "big") % 3_600_000,
+                1 + d[3] % 3,
+                16 + d[4] % 1024,
+                16 + d[5] % 1024,
+            )
+        raise NotImplementedError(
+            f"video metadata for codec {codec!r} requires ffmpeg"
+        )
+
+    return _map_columns(
+        df,
+        payload_col,
+        [
             T.StructField("duration_ms", T.LongType(), True),
             T.StructField("n_tracks", T.IntegerType(), True),
             T.StructField("width", T.IntegerType(), True),
             T.StructField("height", T.IntegerType(), True),
-        ]
+        ],
+        meta_of,
+        meta_col,
     )
-
-    def run(batches):
-        import hashlib as _h
-
-        def meta_of(p, codec: str):
-            if p is None:
-                return (None, None, None, None)
-            p = bytes(p)
-            if codec == "mp4":
-                from parquet_editor_spark.sources.mp4 import mp4_meta
-
-                dur, _scale, n_tracks, w, h = mp4_meta(p)
-                return (dur, n_tracks, w, h)
-            if codec == "avi":
-                from parquet_editor_spark.sources.avi import avi_meta
-
-                dur, n_streams, w, h, _n = avi_meta(p)
-                return (dur, n_streams, w, h)
-            if codec == "y4m":
-                from parquet_editor_spark.sources.y4m import decode_y4m
-
-                w, h, num, den, _cs, frames = decode_y4m(p)
-                return (len(frames) * 1000 * den // num, 1, w, h)
-            if codec == "fake":
-                d = _h.md5(p).digest()
-                return (
-                    1 + int.from_bytes(d[0:3], "big") % 3_600_000,
-                    1 + d[3] % 3,
-                    16 + d[4] % 1024,
-                    16 + d[5] % 1024,
-                )
-            raise NotImplementedError(
-                f"video metadata for codec {codec!r} requires ffmpeg"
-            )
-
-        for pdf in batches:
-            codecs = (
-                [
-                    "fake" if m is None else m["codec"]
-                    for m in pdf[meta_col]
-                ]
-                if has_meta
-                else ["fake"] * len(pdf)
-            )
-            metas = [
-                meta_of(p, c) for p, c in zip(pdf[payload_col], codecs)
-            ]
-            pdf = pdf.copy()
-            pdf["duration_ms"] = [m[0] for m in metas]
-            pdf["n_tracks"] = [m[1] for m in metas]
-            pdf["width"] = [m[2] for m in metas]
-            pdf["height"] = [m[3] for m in metas]
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def resample_audio(
@@ -694,82 +679,61 @@ def resample_audio(
     raise."""
     if target_rate < 1:
         raise ValueError(f"target_rate must be >= 1, got {target_rate}")
-    has_meta = meta_col in df.columns
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != payload_col]
-        + [
+
+    def shrink(p: bytes, codec: str) -> bytes:
+        if codec == "wav":
+            from parquet_editor_spark.sources import wav as _wav
+
+            # decode_wav_ex keeps the fmt tag so a float WAV
+            # re-encodes as float (not mislabeled int PCM) and a
+            # compressed WAV re-encodes in its OWN format — every
+            # decodable tag has a matching encoder since r9
+            rate, ch, bits, n, frames, tag = _wav.decode_wav_ex(p)
+            tgt_n = max(1, n * target_rate // rate)
+            res = _wav.resample_nearest(frames, ch, bits, n, tgt_n)
+            if tag == _wav.IMA_ADPCM:
+                return _wav.encode_wav_adpcm(target_rate, ch, res)
+            if tag == _wav.MS_ADPCM:
+                return _wav.encode_wav_ms_adpcm(target_rate, ch, res)
+            if tag in (_wav.ALAW, _wav.MULAW):
+                return _wav.encode_wav_g711(
+                    target_rate, ch, res,
+                    law="a" if tag == _wav.ALAW else "mu",
+                )
+            return _wav.encode_wav(target_rate, ch, bits, res, fmt_tag=tag)
+        if codec == "flac":
+            import numpy as np
+
+            from parquet_editor_spark.sources import flac_codec as FC
+
+            rate, ch, bits, n, samples = FC.decode_flac(p)
+            tgt_n = max(1, n * target_rate // rate) if n else 0
+            idx = (
+                (np.arange(tgt_n, dtype=np.int64) * n) // tgt_n
+                if tgt_n
+                else np.zeros(0, np.int64)
+            )
+            return FC.encode_flac(target_rate, ch, bits, samples[idx])
+        if codec == "fake":
+            import hashlib as _h
+
+            return _h.md5(p + f"@{target_rate}".encode()).digest()
+        raise NotImplementedError(
+            f"audio resample for codec {codec!r} requires a real "
+            "audio library"
+        )
+
+    return _map_columns(
+        df,
+        payload_col,
+        [
             T.StructField(payload_col, T.BinaryType(), True),
             T.StructField("sample_rate", T.IntegerType(), True),
-        ]
+        ],
+        lambda p, codec: (shrink(p, codec), target_rate),
+        meta_col,
+        null=(None, target_rate),
     )
-    names = [f.name for f in out_schema.fields]
-
-    def run(batches):
-        import hashlib as _h
-
-        def shrink(p: bytes, codec: str) -> bytes:
-            if codec == "wav":
-                from parquet_editor_spark.sources import wav as _wav
-
-                # decode_wav_ex keeps the fmt tag so a float WAV
-                # re-encodes as float (not mislabeled int PCM) and a
-                # compressed WAV re-encodes in its OWN format — every
-                # decodable tag has a matching encoder since r9
-                rate, ch, bits, n, frames, tag = _wav.decode_wav_ex(p)
-                tgt_n = max(1, n * target_rate // rate)
-                res = _wav.resample_nearest(frames, ch, bits, n, tgt_n)
-                if tag == _wav.IMA_ADPCM:
-                    return _wav.encode_wav_adpcm(target_rate, ch, res)
-                if tag == _wav.MS_ADPCM:
-                    return _wav.encode_wav_ms_adpcm(target_rate, ch, res)
-                if tag in (_wav.ALAW, _wav.MULAW):
-                    return _wav.encode_wav_g711(
-                        target_rate, ch, res,
-                        law="a" if tag == _wav.ALAW else "mu",
-                    )
-                return _wav.encode_wav(
-                    target_rate, ch, bits, res, fmt_tag=tag
-                )
-            if codec == "flac":
-                import numpy as np
-
-                from parquet_editor_spark.sources import flac_codec as FC
-
-                rate, ch, bits, n, samples = FC.decode_flac(p)
-                tgt_n = max(1, n * target_rate // rate) if n else 0
-                idx = (
-                    (np.arange(tgt_n, dtype=np.int64) * n) // tgt_n
-                    if tgt_n
-                    else np.zeros(0, np.int64)
-                )
-                return FC.encode_flac(
-                    target_rate, ch, bits, samples[idx]
-                )
-            if codec == "fake":
-                return _h.md5(p + f"@{target_rate}".encode()).digest()
-            raise NotImplementedError(
-                f"audio resample for codec {codec!r} requires a real "
-                "audio library"
-            )
-
-        for pdf in batches:
-            codecs = (
-                [
-                    "fake" if m is None else m["codec"]
-                    for m in pdf[meta_col]
-                ]
-                if has_meta
-                else ["fake"] * len(pdf)
-            )
-            pdf = pdf.copy()
-            pdf[payload_col] = [
-                shrink(bytes(p), c) if p is not None else None
-                for p, c in zip(pdf[payload_col], codecs)
-            ]
-            pdf["sample_rate"] = target_rate
-            yield pdf[names]
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def sample_frames_video(
@@ -795,139 +759,76 @@ def sample_frames_video(
     bytes never leave the worker — only 32-hex checksums do."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    has_meta = meta_col in df.columns
-    keep = [f for f in df.schema.fields if f.name not in (payload_col, meta_col)]
-    out_schema = T.StructType(
-        list(keep)
-        + [
+
+    def frames(p: bytes, codec: str):
+        import hashlib as _h
+
+        from parquet_editor_spark.sources.y4m import sample_frame_indices
+
+        if codec == "mp4":
+            # sample tables give the frames' true byte ranges; the
+            # checksum covers the CODED sample bytes (no H.26x pixel
+            # decode — that belongs to ffmpeg on exactly these sampled
+            # ranges)
+            from parquet_editor_spark.sources.mp4 import (
+                mp4_meta,
+                mp4_sample_index,
+            )
+
+            ix = mp4_sample_index(p)
+            _d, _ts, _nt, w, h = mp4_meta(p)
+            n = ix["n_samples"]
+
+            def frame(i):
+                off = int(ix["offset"][i])
+                return p[off : off + int(ix["size"][i])]
+
+        elif codec == "avi":
+            # like mp4: the checksum covers the coded frame chunk (a
+            # complete JPEG for MJPEG files) — the pixel-level stage
+            # is video_frame_stats
+            from parquet_editor_spark.sources.avi import (
+                avi_meta,
+                avi_video_chunks,
+            )
+
+            chunks = avi_video_chunks(p)
+            _d, _ns, w, h, _n = avi_meta(p)
+            n = len(chunks)
+
+            def frame(i):
+                off, sz = chunks[i]
+                return p[off : off + sz]
+
+        elif codec == "y4m":
+            from parquet_editor_spark.sources.y4m import decode_y4m
+
+            w, h, _n, _d, _cs, raw = decode_y4m(p)
+            n = len(raw)
+            frame = raw.__getitem__
+        else:
+            raise NotImplementedError(
+                f"frame extraction for codec {codec!r} requires "
+                "ffmpeg; built-in support is y4m/mp4/avi"
+            )
+        return [
+            (i, n, w, h, _h.md5(frame(i)).hexdigest())
+            for i in sample_frame_indices(n, k)
+        ]
+
+    return _map_records(
+        df,
+        payload_col,
+        [
             T.StructField("frame_idx", T.IntegerType(), True),
             T.StructField("n_frames", T.IntegerType(), True),
             T.StructField("frame_w", T.IntegerType(), True),
             T.StructField("frame_h", T.IntegerType(), True),
             T.StructField("frame_checksum", T.StringType(), True),
-        ]
+        ],
+        frames,
+        meta_col,
     )
-    keep_names = [f.name for f in keep]
-
-    def run(batches):
-        import hashlib as _h
-
-        import pandas as pd
-
-        for pdf in batches:
-            codecs = (
-                [
-                    "fake" if m is None else m["codec"]
-                    for m in pdf[meta_col]
-                ]
-                if has_meta
-                else ["fake"] * len(pdf)
-            )
-            out_rows = []
-            for (_, row), codec in zip(pdf.iterrows(), codecs):
-                p = row[payload_col]
-                base = {c: row[c] for c in keep_names}
-                if p is None:
-                    out_rows.append(
-                        dict(base, frame_idx=None, n_frames=None,
-                             frame_w=None, frame_h=None,
-                             frame_checksum=None)
-                    )
-                    continue
-                if codec == "mp4":
-                    # sample tables give the frames' true byte ranges;
-                    # the checksum covers the CODED sample bytes (no
-                    # H.26x pixel decode — that belongs to ffmpeg on
-                    # exactly these sampled ranges)
-                    from parquet_editor_spark.sources.mp4 import (
-                        mp4_meta,
-                        mp4_sample_index,
-                    )
-                    from parquet_editor_spark.sources.y4m import (
-                        sample_frame_indices,
-                    )
-
-                    p = bytes(p)
-                    ix = mp4_sample_index(p)
-                    _d, _ts, _nt, w, h = mp4_meta(p)
-                    n = ix["n_samples"]
-                    for idx in sample_frame_indices(n, k):
-                        off = int(ix["offset"][idx])
-                        sz = int(ix["size"][idx])
-                        out_rows.append(
-                            dict(
-                                base,
-                                frame_idx=idx,
-                                n_frames=n,
-                                frame_w=w,
-                                frame_h=h,
-                                frame_checksum=_h.md5(
-                                    p[off : off + sz]
-                                ).hexdigest(),
-                            )
-                        )
-                    continue
-                if codec == "avi":
-                    # like mp4: the checksum covers the coded frame
-                    # chunk (a complete JPEG for MJPEG files) — the
-                    # pixel-level stage is video_frame_stats
-                    from parquet_editor_spark.sources.avi import (
-                        avi_meta,
-                        avi_video_chunks,
-                    )
-                    from parquet_editor_spark.sources.y4m import (
-                        sample_frame_indices,
-                    )
-
-                    p = bytes(p)
-                    chunks = avi_video_chunks(p)
-                    _d, _ns, w, h, _n = avi_meta(p)
-                    n = len(chunks)
-                    for idx in sample_frame_indices(n, k):
-                        off, sz = chunks[idx]
-                        out_rows.append(
-                            dict(
-                                base,
-                                frame_idx=idx,
-                                n_frames=n,
-                                frame_w=w,
-                                frame_h=h,
-                                frame_checksum=_h.md5(
-                                    p[off : off + sz]
-                                ).hexdigest(),
-                            )
-                        )
-                    continue
-                if codec != "y4m":
-                    raise NotImplementedError(
-                        f"frame extraction for codec {codec!r} requires "
-                        "ffmpeg; built-in support is y4m/mp4/avi"
-                    )
-                from parquet_editor_spark.sources.y4m import (
-                    decode_y4m,
-                    sample_frame_indices,
-                )
-
-                w, h, _n, _d, _cs, frames = decode_y4m(bytes(p))
-                for idx in sample_frame_indices(len(frames), k):
-                    out_rows.append(
-                        dict(
-                            base,
-                            frame_idx=idx,
-                            n_frames=len(frames),
-                            frame_w=w,
-                            frame_h=h,
-                            frame_checksum=_h.md5(frames[idx]).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                out_rows,
-                columns=keep_names
-                + ["frame_idx", "n_frames", "frame_w", "frame_h",
-                   "frame_checksum"],
-            )
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def video_frame_index(
@@ -944,6 +845,8 @@ def video_frame_index(
     ``meta.codec == "mp4"`` decodes the full ISO-BMFF sample tables
     (``sources/mp4.py::mp4_sample_index`` — stts/ctts/stsz/stsc/
     stco/co64/stss, all expanded with vectorized run-length numpy);
+    ``"avi"`` walks the RIFF video chunks (``sources/avi.py`` — every
+    MJPEG frame is a sync sample, timing from the stream header);
     ``"y4m"`` walks the YUV4MPEG2 frame markers (fixed-size frames,
     real byte offsets); ``"fake"`` emits a digest-derived index;
     other codecs raise.  ``keyframes_only=True`` keeps just sync
@@ -953,13 +856,92 @@ def video_frame_index(
     Scale shape: row expansion happens INSIDE the executor (one clip
     → n_frames rows per Arrow batch); payload bytes never leave the
     worker; no shuffle is introduced."""
-    has_meta = meta_col in df.columns
-    keep = [
-        f for f in df.schema.fields if f.name not in (payload_col, meta_col)
-    ]
-    out_schema = T.StructType(
-        list(keep)
-        + [
+
+    def index_of(p: bytes, codec: str):
+        """(n, dts_ms, pts_ms, size, offset, sync) arrays."""
+        import numpy as np
+
+        if codec == "mp4":
+            from parquet_editor_spark.sources.mp4 import mp4_sample_index
+
+            ix = mp4_sample_index(p)
+            ts = ix["timescale"]
+            return (
+                ix["n_samples"],
+                ix["dts"] * 1000 // ts,
+                ix["pts"] * 1000 // ts,
+                ix["size"],
+                ix["offset"],
+                ix["is_sync"],
+            )
+        if codec == "avi":
+            from parquet_editor_spark.sources.avi import (
+                avi_video_chunks,
+                avi_video_timing,
+            )
+
+            chunks = avi_video_chunks(p)
+            scale, rate = avi_video_timing(p)
+            n = len(chunks)
+            t = np.arange(n, dtype=np.int64)
+            dts = t * scale * 1000 // rate
+            sizes = np.array([s for _, s in chunks], np.int64)
+            offs = np.array([o for o, _ in chunks], np.int64)
+            # every MJPEG frame is intra-coded → all sync
+            return (n, dts, dts, sizes, offs, np.ones(n, bool))
+        if codec == "y4m":
+            from parquet_editor_spark.sources.y4m import decode_y4m
+
+            w, h, num, den, _cs, frames = decode_y4m(p)
+            n = len(frames)
+            offsets = np.zeros(n, np.int64)
+            pos = p.index(b"\n") + 1  # end of stream header
+            for i in range(n):
+                if p[pos : pos + 5] != b"FRAME":
+                    raise ValueError(
+                        f"y4m frame marker missing at byte {pos}"
+                    )
+                eol = p.index(b"\n", pos)
+                offsets[i] = eol + 1
+                pos = eol + 1 + len(frames[i])
+            sizes = np.array([len(f) for f in frames], np.int64)
+            t = np.arange(n, dtype=np.int64)
+            dts = t * 1000 * den // num
+            return (n, dts, dts, sizes, offsets,
+                    np.ones(n, bool))
+        if codec == "fake":
+            import hashlib as _h
+
+            d = _h.md5(p).digest()
+            n = 1 + d[0] % 6
+            t = np.arange(n, dtype=np.int64)
+            dts = t * (20 + d[1] % 20)
+            sizes = 50 + (t * 13 + d[2]) % 100
+            offs = np.concatenate(
+                ([0], np.cumsum(sizes)[:-1])
+            ) + d[3]
+            sync = (t % max(1, d[4] % 4 + 1)) == 0
+            sync[0] = True
+            return (n, dts, dts, sizes, offs, sync)
+        raise NotImplementedError(
+            f"frame index for codec {codec!r} requires ffmpeg; "
+            "built-in support is mp4/avi/y4m, or codec='fake' for "
+            "pipeline testing"
+        )
+
+    def frames(p: bytes, codec: str):
+        n, dts, pts, sizes, offs, sync = index_of(p, codec)
+        return [
+            (i, n, int(dts[i]), int(pts[i]), int(sizes[i]), int(offs[i]),
+             bool(sync[i]))
+            for i in range(n)
+            if not keyframes_only or bool(sync[i])
+        ]
+
+    return _map_records(
+        df,
+        payload_col,
+        [
             T.StructField("frame_idx", T.IntegerType(), True),
             T.StructField("n_frames", T.IntegerType(), True),
             T.StructField("dts_ms", T.LongType(), True),
@@ -967,125 +949,10 @@ def video_frame_index(
             T.StructField("frame_bytes", T.LongType(), True),
             T.StructField("frame_offset", T.LongType(), True),
             T.StructField("is_sync", T.BooleanType(), True),
-        ]
+        ],
+        frames,
+        meta_col,
     )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
-
-    def run(batches):
-        import hashlib as _h
-
-        import numpy as np
-        import pandas as pd
-
-        def index_of(p: bytes, codec: str):
-            """(n, dts_ms, pts_ms, size, offset, sync) arrays."""
-            if codec == "mp4":
-                from parquet_editor_spark.sources.mp4 import (
-                    mp4_sample_index,
-                )
-
-                ix = mp4_sample_index(p)
-                ts = ix["timescale"]
-                return (
-                    ix["n_samples"],
-                    ix["dts"] * 1000 // ts,
-                    ix["pts"] * 1000 // ts,
-                    ix["size"],
-                    ix["offset"],
-                    ix["is_sync"],
-                )
-            if codec == "avi":
-                from parquet_editor_spark.sources.avi import (
-                    avi_video_chunks,
-                    avi_video_timing,
-                )
-
-                chunks = avi_video_chunks(p)
-                scale, rate = avi_video_timing(p)
-                n = len(chunks)
-                t = np.arange(n, dtype=np.int64)
-                dts = t * scale * 1000 // rate
-                sizes = np.array([s for _, s in chunks], np.int64)
-                offs = np.array([o for o, _ in chunks], np.int64)
-                # every MJPEG frame is intra-coded → all sync
-                return (n, dts, dts, sizes, offs, np.ones(n, bool))
-            if codec == "y4m":
-                from parquet_editor_spark.sources.y4m import decode_y4m
-
-                w, h, num, den, _cs, frames = decode_y4m(p)
-                n = len(frames)
-                offsets = np.zeros(n, np.int64)
-                pos = p.index(b"\n") + 1  # end of stream header
-                for i in range(n):
-                    if p[pos : pos + 5] != b"FRAME":
-                        raise ValueError(
-                            f"y4m frame marker missing at byte {pos}"
-                        )
-                    eol = p.index(b"\n", pos)
-                    offsets[i] = eol + 1
-                    pos = eol + 1 + len(frames[i])
-                sizes = np.array([len(f) for f in frames], np.int64)
-                t = np.arange(n, dtype=np.int64)
-                dts = t * 1000 * den // num
-                return (n, dts, dts, sizes, offsets,
-                        np.ones(n, bool))
-            if codec == "fake":
-                d = _h.md5(p).digest()
-                n = 1 + d[0] % 6
-                t = np.arange(n, dtype=np.int64)
-                dts = t * (20 + d[1] % 20)
-                sizes = 50 + (t * 13 + d[2]) % 100
-                offs = np.concatenate(
-                    ([0], np.cumsum(sizes)[:-1])
-                ) + d[3]
-                sync = (t % max(1, d[4] % 4 + 1)) == 0
-                sync[0] = True
-                return (n, dts, dts, sizes, offs, sync)
-            raise NotImplementedError(
-                f"frame index for codec {codec!r} requires ffmpeg; "
-                "built-in support is mp4/y4m"
-            )
-
-        for pdf in batches:
-            codecs = (
-                [
-                    "fake" if m is None else m["codec"]
-                    for m in pdf[meta_col]
-                ]
-                if has_meta
-                else ["fake"] * len(pdf)
-            )
-            out_rows = []
-            for (_, row), codec in zip(pdf.iterrows(), codecs):
-                p = row[payload_col]
-                base = {c: row[c] for c in keep_names}
-                if p is None:
-                    out_rows.append(
-                        dict(base, frame_idx=None, n_frames=None,
-                             dts_ms=None, pts_ms=None, frame_bytes=None,
-                             frame_offset=None, is_sync=None)
-                    )
-                    continue
-                n, dts, pts, sizes, offs, sync = index_of(bytes(p), codec)
-                for i in range(n):
-                    if keyframes_only and not bool(sync[i]):
-                        continue
-                    out_rows.append(
-                        dict(
-                            base,
-                            frame_idx=i,
-                            n_frames=n,
-                            dts_ms=int(dts[i]),
-                            pts_ms=int(pts[i]),
-                            frame_bytes=int(sizes[i]),
-                            frame_offset=int(offs[i]),
-                            is_sync=bool(sync[i]),
-                        )
-                    )
-            yield pd.DataFrame(out_rows, columns=out_names)
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def image_dhash(
@@ -1095,7 +962,7 @@ def image_dhash(
     (long) + width/height — the image analogue of SimHash for
     near-duplicate detection over crawl corpora.
 
-    Canonical dHash: decode (any of the four real codecs via
+    Canonical dHash: decode (any of the five real codecs via
     ``_decode_pixels``), integer luma (mean of the first three
     channels; gray passthrough), box-average down to a 9×8 grid
     (integer area means — deterministic, no float resampling), then
@@ -1108,77 +975,63 @@ def image_dhash(
     Scale shape: Arrow ``mapInPandas`` projection, bytes stay on the
     executors; downstream pair-finding shuffles only (id, hash) —
     16 bytes per image, not pixels."""
-    has_meta = meta_col in df.columns
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
+
+    def cell_means(gray, k_w: int = 9, k_h: int = 8):
+        import numpy as _np
+
+        h, w = gray.shape
+        out = _np.empty((k_h, k_w), _np.int64)
+        for r in range(k_h):
+            r0, r1 = (r * h) // k_h, ((r + 1) * h) // k_h
+            r1 = min(max(r1, r0 + 1), h) if h else 0
+            r0 = min(r0, h - 1)
+            for c in range(k_w):
+                c0, c1 = (c * w) // k_w, ((c + 1) * w) // k_w
+                c1 = min(max(c1, c0 + 1), w) if w else 0
+                c0 = min(c0, w - 1)
+                block = gray[r0:r1, c0:c1]
+                out[r, c] = int(block.sum()) // block.size
+        return out
+
+    def hash_of(p: bytes, codec: str):
+        import numpy as _np
+
+        if codec == "fake":
+            import hashlib as _h
+
+            d = _h.md5(p).digest()
+            v = int.from_bytes(d[:8], "big")
+            v = v - (1 << 64) if v >= (1 << 63) else v
+            return (v, 16 + d[8] % 1024, 16 + d[9] % 1024)
+        w, h, ch, pix = _decode_pixels(p, codec, "dhash")
+        a = _np.frombuffer(pix, dtype=_np.uint8).reshape(h, w, ch)
+        if ch >= 3:
+            gray = (
+                a[:, :, 0].astype(_np.int64)
+                + a[:, :, 1]
+                + a[:, :, 2]
+            ) // 3
+        else:
+            gray = a[:, :, 0].astype(_np.int64)
+        g = cell_means(gray)
+        bits = (g[:, :8] < g[:, 1:]).reshape(-1)
+        v = 0
+        for b in bits:
+            v = (v << 1) | int(b)
+        v = v - (1 << 64) if v >= (1 << 63) else v
+        return (v, w, h)
+
+    return _map_columns(
+        df,
+        payload_col,
+        [
             T.StructField("dhash", T.LongType(), True),
             T.StructField("width", T.IntegerType(), True),
             T.StructField("height", T.IntegerType(), True),
-        ]
+        ],
+        hash_of,
+        meta_col,
     )
-
-    def run(batches):
-        import hashlib as _h
-
-        import numpy as _np
-
-        def cell_means(gray, k_w: int = 9, k_h: int = 8):
-            h, w = gray.shape
-            out = _np.empty((k_h, k_w), _np.int64)
-            for r in range(k_h):
-                r0, r1 = (r * h) // k_h, ((r + 1) * h) // k_h
-                r1 = min(max(r1, r0 + 1), h) if h else 0
-                r0 = min(r0, h - 1)
-                for c in range(k_w):
-                    c0, c1 = (c * w) // k_w, ((c + 1) * w) // k_w
-                    c1 = min(max(c1, c0 + 1), w) if w else 0
-                    c0 = min(c0, w - 1)
-                    block = gray[r0:r1, c0:c1]
-                    out[r, c] = int(block.sum()) // block.size
-            return out
-
-        def hash_of(p, codec: str):
-            if p is None:
-                return (None, None, None)
-            p = bytes(p)
-            if codec == "fake":
-                d = _h.md5(p).digest()
-                v = int.from_bytes(d[:8], "big")
-                v = v - (1 << 64) if v >= (1 << 63) else v
-                return (v, 16 + d[8] % 1024, 16 + d[9] % 1024)
-            w, h, ch, pix = _decode_pixels(p, codec, "dhash")
-            a = _np.frombuffer(pix, dtype=_np.uint8).reshape(h, w, ch)
-            if ch >= 3:
-                gray = (
-                    a[:, :, 0].astype(_np.int64)
-                    + a[:, :, 1]
-                    + a[:, :, 2]
-                ) // 3
-            else:
-                gray = a[:, :, 0].astype(_np.int64)
-            g = cell_means(gray)
-            bits = (g[:, :8] < g[:, 1:]).reshape(-1)
-            v = 0
-            for b in bits:
-                v = (v << 1) | int(b)
-            v = v - (1 << 64) if v >= (1 << 63) else v
-            return (v, w, h)
-
-        for pdf in batches:
-            codecs = (
-                ["fake" if m is None else m["codec"] for m in pdf[meta_col]]
-                if has_meta
-                else ["fake"] * len(pdf)
-            )
-            hs = [hash_of(p, c) for p, c in zip(pdf[payload_col], codecs)]
-            pdf = pdf.copy()
-            pdf["dhash"] = [x[0] for x in hs]
-            pdf["width"] = [x[1] for x in hs]
-            pdf["height"] = [x[2] for x in hs]
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def warc_records(
@@ -1197,10 +1050,27 @@ def warc_records(
     extracted scalar columns do.  At 100 TB each executor walks its
     own archive byte ranges, the same unit of work a WARC splitter
     hands out."""
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    out_schema = T.StructType(
-        list(keep)
-        + [
+
+    def records(p: bytes, _codec: str):
+        from parquet_editor_spark.sources.warc import parse_warc
+
+        return [
+            (
+                i,
+                rec["warc_type"],
+                rec["target_uri"],
+                rec["date"],
+                rec["content_type"],
+                len(rec["payload"]),
+                rec["payload"].decode("utf-8", "replace"),
+            )
+            for i, rec in enumerate(parse_warc(p))
+        ]
+
+    return _map_records(
+        df,
+        payload_col,
+        [
             T.StructField("rec_idx", T.IntegerType(), True),
             T.StructField("warc_type", T.StringType(), True),
             T.StructField("target_uri", T.StringType(), True),
@@ -1208,47 +1078,9 @@ def warc_records(
             T.StructField("content_type", T.StringType(), True),
             T.StructField("content_length", T.LongType(), True),
             T.StructField("body", T.StringType(), True),
-        ]
+        ],
+        records,
     )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
-
-    def run(batches):
-        import pandas as pd
-
-        from parquet_editor_spark.sources.warc import parse_warc
-
-        for pdf in batches:
-            out_rows = []
-            for _, row in pdf.iterrows():
-                p = row[payload_col]
-                base = {c: row[c] for c in keep_names}
-                if p is None:
-                    out_rows.append(
-                        dict(base, rec_idx=None, warc_type=None,
-                             target_uri=None, warc_date=None,
-                             content_type=None, content_length=None,
-                             body=None)
-                    )
-                    continue
-                for i, rec in enumerate(parse_warc(bytes(p))):
-                    out_rows.append(
-                        dict(
-                            base,
-                            rec_idx=i,
-                            warc_type=rec["warc_type"],
-                            target_uri=rec["target_uri"],
-                            warc_date=rec["date"],
-                            content_type=rec["content_type"],
-                            content_length=len(rec["payload"]),
-                            body=rec["payload"].decode(
-                                "utf-8", "replace"
-                            ),
-                        )
-                    )
-            yield pd.DataFrame(out_rows, columns=out_names)
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def zip_members(
@@ -1265,10 +1097,26 @@ def zip_members(
     ``mapInPandas``); archive bytes never shuffle.  The ZIP central
     directory is O(members) at the payload tail, so listing never
     decompresses non-selected members."""
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    out_schema = T.StructType(
-        list(keep)
-        + [
+
+    def members(p: bytes, _codec: str):
+        from parquet_editor_spark.sources.ziparc import parse_zip
+
+        return [
+            (
+                i,
+                m["name"],
+                m["size"],
+                m["compressed_size"],
+                m["crc32"],
+                m["data"].decode("utf-8", "replace") if text else m["data"],
+            )
+            for i, m in enumerate(parse_zip(p))
+        ]
+
+    return _map_records(
+        df,
+        payload_col,
+        [
             T.StructField("member_idx", T.IntegerType(), True),
             T.StructField("name", T.StringType(), True),
             T.StructField("size_bytes", T.LongType(), True),
@@ -1279,47 +1127,9 @@ def zip_members(
                 T.StringType() if text else T.BinaryType(),
                 True,
             ),
-        ]
+        ],
+        members,
     )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
-
-    def run(batches):
-        import pandas as pd
-
-        from parquet_editor_spark.sources.ziparc import parse_zip
-
-        for pdf in batches:
-            out_rows = []
-            for _, row in pdf.iterrows():
-                p = row[payload_col]
-                base = {c: row[c] for c in keep_names}
-                if p is None:
-                    out_rows.append(
-                        dict(base, member_idx=None, name=None,
-                             size_bytes=None, compressed_bytes=None,
-                             crc32=None, content=None)
-                    )
-                    continue
-                for i, m in enumerate(parse_zip(bytes(p))):
-                    out_rows.append(
-                        dict(
-                            base,
-                            member_idx=i,
-                            name=m["name"],
-                            size_bytes=m["size"],
-                            compressed_bytes=m["compressed_size"],
-                            crc32=m["crc32"],
-                            content=(
-                                m["data"].decode("utf-8", "replace")
-                                if text
-                                else m["data"]
-                            ),
-                        )
-                    )
-            yield pd.DataFrame(out_rows, columns=out_names)
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def tar_members(
@@ -1336,10 +1146,25 @@ def tar_members(
     ``mapInPandas``); archive bytes never shuffle.  TAR is a pure
     stream format, so one sequential pass yields all members — the
     natural shape for a gzipped shard that cannot seek anyway."""
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    out_schema = T.StructType(
-        list(keep)
-        + [
+
+    def members(p: bytes, _codec: str):
+        from parquet_editor_spark.sources.tararc import parse_tar
+
+        return [
+            (
+                i,
+                m["name"],
+                m["size"],
+                m["mtime"],
+                m["data"].decode("utf-8", "replace") if text else m["data"],
+            )
+            for i, m in enumerate(parse_tar(p))
+        ]
+
+    return _map_records(
+        df,
+        payload_col,
+        [
             T.StructField("member_idx", T.IntegerType(), True),
             T.StructField("name", T.StringType(), True),
             T.StructField("size_bytes", T.LongType(), True),
@@ -1349,45 +1174,9 @@ def tar_members(
                 T.StringType() if text else T.BinaryType(),
                 True,
             ),
-        ]
+        ],
+        members,
     )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
-
-    def run(batches):
-        import pandas as pd
-
-        from parquet_editor_spark.sources.tararc import parse_tar
-
-        for pdf in batches:
-            out_rows = []
-            for _, row in pdf.iterrows():
-                p = row[payload_col]
-                base = {c: row[c] for c in keep_names}
-                if p is None:
-                    out_rows.append(
-                        dict(base, member_idx=None, name=None,
-                             size_bytes=None, mtime=None, content=None)
-                    )
-                    continue
-                for i, m in enumerate(parse_tar(bytes(p))):
-                    out_rows.append(
-                        dict(
-                            base,
-                            member_idx=i,
-                            name=m["name"],
-                            size_bytes=m["size"],
-                            mtime=m["mtime"],
-                            content=(
-                                m["data"].decode("utf-8", "replace")
-                                if text
-                                else m["data"]
-                            ),
-                        )
-                    )
-            yield pd.DataFrame(out_rows, columns=out_names)
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def wds_samples(
@@ -1408,11 +1197,41 @@ def wds_samples(
     them here avoids the groupBy shuffle a post-explode regroup
     would pay.  Archive bytes never shuffle and never visit the
     driver."""
-    keep = [f for f in df.schema.fields if f.name != payload_col]
+
+    def samples_of(p: bytes, _codec: str):
+        from parquet_editor_spark.sources.tararc import parse_tar
+
+        samples: dict[str, dict[str, bytes]] = {}
+        for m in parse_tar(p):
+            name = m["name"]
+            base_name = name.rsplit("/", 1)[-1]
+            dot = base_name.find(".")
+            if dot <= 0:
+                key, ext = name, ""
+            else:
+                key = name[: len(name) - len(base_name) + dot]
+                ext = base_name[dot + 1 :]
+            samples.setdefault(key, {})[ext] = m["data"]
+        return [
+            (
+                i,
+                key,
+                len(comp),
+                ";".join(sorted(comp)),
+                sum(len(v) for v in comp.values()),
+                {
+                    k: v.decode("utf-8", "replace") if text else v
+                    for k, v in comp.items()
+                },
+            )
+            for i, (key, comp) in enumerate(samples.items())
+        ]
+
     val_t = T.StringType() if text else T.BinaryType()
-    out_schema = T.StructType(
-        list(keep)
-        + [
+    return _map_records(
+        df,
+        payload_col,
+        [
             T.StructField("sample_idx", T.IntegerType(), True),
             T.StructField("sample_key", T.StringType(), True),
             T.StructField("n_components", T.IntegerType(), True),
@@ -1421,68 +1240,9 @@ def wds_samples(
             T.StructField(
                 "components", T.MapType(T.StringType(), val_t), True
             ),
-        ]
+        ],
+        samples_of,
     )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
-
-    def run(batches):
-        import pandas as pd
-
-        from parquet_editor_spark.sources.tararc import parse_tar
-
-        for pdf in batches:
-            out_rows = []
-            for _, row in pdf.iterrows():
-                p = row[payload_col]
-                base = {c: row[c] for c in keep_names}
-                if p is None:
-                    out_rows.append(
-                        dict(base, sample_idx=None, sample_key=None,
-                             n_components=None, exts=None,
-                             total_bytes=None, components=None)
-                    )
-                    continue
-                samples: dict[str, dict[str, bytes]] = {}
-                order: list[str] = []
-                for m in parse_tar(bytes(p)):
-                    name = m["name"]
-                    base_name = name.rsplit("/", 1)[-1]
-                    dot = base_name.find(".")
-                    if dot <= 0:
-                        key, ext = name, ""
-                    else:
-                        key = name[: len(name) - len(base_name) + dot]
-                        ext = base_name[dot + 1 :]
-                    if key not in samples:
-                        samples[key] = {}
-                        order.append(key)
-                    samples[key][ext] = m["data"]
-                for i, key in enumerate(order):
-                    comp = samples[key]
-                    out_rows.append(
-                        dict(
-                            base,
-                            sample_idx=i,
-                            sample_key=key,
-                            n_components=len(comp),
-                            exts=";".join(sorted(comp)),
-                            total_bytes=sum(
-                                len(v) for v in comp.values()
-                            ),
-                            components={
-                                k: (
-                                    v.decode("utf-8", "replace")
-                                    if text
-                                    else v
-                                )
-                                for k, v in comp.items()
-                            },
-                        )
-                    )
-            yield pd.DataFrame(out_rows, columns=out_names)
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def shard_webdataset(
@@ -1509,22 +1269,10 @@ def shard_webdataset(
     ``applyInPandas`` pass per shard; sample bytes shuffle exactly
     once (they must — samples of one shard start on many input
     partitions) and never visit the driver."""
-    shard_field = df.schema[shard_col]
-    out_schema = T.StructType(
-        [
-            shard_field,
-            T.StructField("n_samples", T.IntegerType(), False),
-            T.StructField("shard_bytes", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-        ]
-    )
 
-    def pack(pdf):
-        import pandas as pd
-
+    def tar(pdf) -> bytes:
         from parquet_editor_spark.sources.tararc import make_tar
 
-        pdf = pdf.sort_values(key_col, kind="mergesort")
         members = []
         for _, row in pdf.iterrows():
             key = row[key_col]
@@ -1535,19 +1283,9 @@ def shard_webdataset(
                 elif isinstance(v, str):
                     v = v.encode()
                 members.append((f"{key}.{ext}", bytes(v)))
-        payload = make_tar(members, compression=compression)
-        return pd.DataFrame(
-            [
-                {
-                    shard_col: pdf[shard_col].iloc[0],
-                    "n_samples": len(pdf),
-                    "shard_bytes": len(payload),
-                    "payload": payload,
-                }
-            ]
-        )
+        return make_tar(members, compression=compression)
 
-    return df.groupBy(shard_col).applyInPandas(pack, schema=out_schema)
+    return _pack_shards(df, shard_col, key_col, "n_samples", tar)
 
 
 def tfrecord_records(
@@ -1561,10 +1299,19 @@ def tfrecord_records(
     Scale shape: record expansion happens INSIDE the executor (Arrow
     ``mapInPandas``); shard bytes never shuffle and never visit the
     driver — the same contract as the TAR/ZIP/WARC walks."""
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    out_schema = T.StructType(
-        list(keep)
-        + [
+
+    def records(p: bytes, _codec: str):
+        from parquet_editor_spark.sources.tfrecord import parse_tfrecord
+
+        return [
+            (i, len(rec), rec.decode("utf-8", "replace") if text else rec)
+            for i, rec in enumerate(parse_tfrecord(p))
+        ]
+
+    return _map_records(
+        df,
+        payload_col,
+        [
             T.StructField("rec_idx", T.IntegerType(), True),
             T.StructField("size_bytes", T.LongType(), True),
             T.StructField(
@@ -1572,43 +1319,9 @@ def tfrecord_records(
                 T.StringType() if text else T.BinaryType(),
                 True,
             ),
-        ]
+        ],
+        records,
     )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
-
-    def run(batches):
-        import pandas as pd
-
-        from parquet_editor_spark.sources.tfrecord import parse_tfrecord
-
-        for pdf in batches:
-            out_rows = []
-            for _, row in pdf.iterrows():
-                p = row[payload_col]
-                base = {c: row[c] for c in keep_names}
-                if p is None:
-                    out_rows.append(
-                        dict(base, rec_idx=None, size_bytes=None,
-                             content=None)
-                    )
-                    continue
-                for i, rec in enumerate(parse_tfrecord(bytes(p))):
-                    out_rows.append(
-                        dict(
-                            base,
-                            rec_idx=i,
-                            size_bytes=len(rec),
-                            content=(
-                                rec.decode("utf-8", "replace")
-                                if text
-                                else rec
-                            ),
-                        )
-                    )
-            yield pd.DataFrame(out_rows, columns=out_names)
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def pdf_pages(
@@ -1623,47 +1336,23 @@ def pdf_pages(
     Scale shape: the page walk and inflate run INSIDE the executor
     (Arrow ``mapInPandas``); PDF bytes never shuffle and never visit
     the driver — the same contract as the TAR/ZIP/WARC walks."""
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    out_schema = T.StructType(
-        list(keep)
-        + [
+
+    def pages(p: bytes, _codec: str):
+        from parquet_editor_spark.sources.pdf import decode_pdf_text
+
+        texts = decode_pdf_text(p)
+        return [(i, len(texts), txt) for i, txt in enumerate(texts)]
+
+    return _map_records(
+        df,
+        payload_col,
+        [
             T.StructField("page_idx", T.IntegerType(), True),
             T.StructField("n_pages", T.IntegerType(), True),
             T.StructField("page_text", T.StringType(), True),
-        ]
+        ],
+        pages,
     )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
-
-    def run(batches):
-        import pandas as pd
-
-        from parquet_editor_spark.sources.pdf import decode_pdf_text
-
-        for pdf in batches:
-            out_rows = []
-            for _, row in pdf.iterrows():
-                p = row[payload_col]
-                base = {c: row[c] for c in keep_names}
-                if p is None:
-                    out_rows.append(
-                        dict(base, page_idx=None, n_pages=None,
-                             page_text=None)
-                    )
-                    continue
-                texts = decode_pdf_text(bytes(p))
-                for i, txt in enumerate(texts):
-                    out_rows.append(
-                        dict(
-                            base,
-                            page_idx=i,
-                            n_pages=len(texts),
-                            page_text=txt,
-                        )
-                    )
-            yield pd.DataFrame(out_rows, columns=out_names)
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def epub_book_chapters(
@@ -1678,39 +1367,25 @@ def epub_book_chapters(
 
     Scale shape: archive explode inside the executor's Arrow pass;
     book bytes never shuffle and never visit the driver."""
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    out_schema = T.StructType(
-        list(keep)
-        + [
+
+    def chapters(p: bytes, _codec: str):
+        from parquet_editor_spark.sources.epub import epub_chapters
+
+        return [
+            (ch["chapter_idx"], ch["href"], ch["xhtml"])
+            for ch in epub_chapters(p)
+        ]
+
+    return _map_records(
+        df,
+        payload_col,
+        [
             T.StructField("chapter_idx", T.IntegerType(), True),
             T.StructField("href", T.StringType(), True),
             T.StructField("xhtml", T.StringType(), True),
-        ]
+        ],
+        chapters,
     )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
-
-    def run(batches):
-        import pandas as pd
-
-        from parquet_editor_spark.sources.epub import epub_chapters
-
-        for pdf in batches:
-            out_rows = []
-            for _, row in pdf.iterrows():
-                p = row[payload_col]
-                base = {c: row[c] for c in keep_names}
-                if p is None:
-                    out_rows.append(
-                        dict(base, chapter_idx=None, href=None,
-                             xhtml=None)
-                    )
-                    continue
-                for ch in epub_chapters(bytes(p)):
-                    out_rows.append(dict(base, **ch))
-            yield pd.DataFrame(out_rows, columns=out_names)
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def shard_tfrecord(
@@ -1726,40 +1401,18 @@ def shard_tfrecord(
     Scale shape: same as the TAR exporter — the groupBy shuffle IS
     the export plan, record bytes move exactly once, framing happens
     in one Arrow ``applyInPandas`` pass per shard."""
-    shard_field = df.schema[shard_col]
-    out_schema = T.StructType(
-        [
-            shard_field,
-            T.StructField("n_records", T.IntegerType(), False),
-            T.StructField("shard_bytes", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-        ]
-    )
 
-    def pack(pdf):
-        import pandas as pd
-
+    def frame(pdf) -> bytes:
         from parquet_editor_spark.sources.tfrecord import make_tfrecord
 
-        pdf = pdf.sort_values(order_col, kind="mergesort")
-        payload = make_tfrecord(
+        return make_tfrecord(
             [
                 v if isinstance(v, (str, bytes)) else bytes(v)
                 for v in pdf[value_col]
             ]
         )
-        return pd.DataFrame(
-            [
-                {
-                    shard_col: pdf[shard_col].iloc[0],
-                    "n_records": len(pdf),
-                    "shard_bytes": len(payload),
-                    "payload": payload,
-                }
-            ]
-        )
 
-    return df.groupBy(shard_col).applyInPandas(pack, schema=out_schema)
+    return _pack_shards(df, shard_col, order_col, "n_records", frame)
 
 
 def shard_arrow_ipc(
@@ -1776,41 +1429,18 @@ def shard_arrow_ipc(
     groupBy shuffle, Arrow-native serialization inside
     ``applyInPandas`` (the data is already Arrow on the worker; this
     is close to a memcpy), payloads never visit the driver."""
-    shard_field = df.schema[shard_col]
     data_cols = [c for c in df.columns if c != shard_col]
-    out_schema = T.StructType(
-        [
-            shard_field,
-            T.StructField("n_rows", T.IntegerType(), False),
-            T.StructField("shard_bytes", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-        ]
-    )
 
-    def pack(pdf):
-        import pandas as pd
+    def stream(pdf) -> bytes:
         import pyarrow as pa
 
-        pdf = pdf.sort_values(order_col, kind="mergesort")
-        table = pa.Table.from_pandas(
-            pdf[data_cols], preserve_index=False
-        )
+        table = pa.Table.from_pandas(pdf[data_cols], preserve_index=False)
         sink = pa.BufferOutputStream()
         with pa.ipc.new_stream(sink, table.schema) as w:
             w.write_table(table)
-        payload = sink.getvalue().to_pybytes()
-        return pd.DataFrame(
-            [
-                {
-                    shard_col: pdf[shard_col].iloc[0],
-                    "n_rows": len(pdf),
-                    "shard_bytes": len(payload),
-                    "payload": payload,
-                }
-            ]
-        )
+        return sink.getvalue().to_pybytes()
 
-    return df.groupBy(shard_col).applyInPandas(pack, schema=out_schema)
+    return _pack_shards(df, shard_col, order_col, "n_rows", stream)
 
 
 def arrow_ipc_table(
@@ -1828,43 +1458,16 @@ def arrow_ipc_table(
     walk, not a parse."""
     if not ddl:
         raise ValueError("declare the embedded schema, e.g. 'a long'")
-    keep = [f for f in df.schema.fields if f.name != payload_col]
     declared = T.StructType.fromDDL(ddl)
-    out_schema = T.StructType(list(keep) + list(declared.fields))
-    keep_names = [f.name for f in keep]
     decl_names = [f.name for f in declared.fields]
-    out_names = [f.name for f in out_schema.fields]
 
-    def run(batches):
-        import pandas as pd
+    def rows(p: bytes, _codec: str):
         import pyarrow as pa
 
-        for pdf in batches:
-            frames = []
-            for _, row in pdf.iterrows():
-                p = row[payload_col]
-                if p is None:
-                    inner = pd.DataFrame(
-                        [{c: None for c in decl_names}]
-                    )
-                else:
-                    inner = (
-                        pa.ipc.open_stream(bytes(p))
-                        .read_all()
-                        .select(decl_names)
-                        .to_pandas()
-                    )
-                for c in keep_names:
-                    inner[c] = row[c]
-                frames.append(inner)
-            out = (
-                pd.concat(frames, ignore_index=True)
-                if frames
-                else pd.DataFrame(columns=out_names)
-            )
-            yield out[out_names]
+        table = pa.ipc.open_stream(p).read_all().select(decl_names)
+        return table.to_pandas().itertuples(index=False, name=None)
 
-    return df.mapInPandas(run, schema=out_schema)
+    return _map_records(df, payload_col, list(declared.fields), rows)
 
 
 def shard_parquet_payload(
@@ -1880,41 +1483,18 @@ def shard_parquet_payload(
     Scale shape: identical contract to the TAR/TFRecord/Arrow-IPC
     exporters — one groupBy shuffle, pyarrow serialization inside
     ``applyInPandas``, payloads never visit the driver."""
-    shard_field = df.schema[shard_col]
     data_cols = [c for c in df.columns if c != shard_col]
-    out_schema = T.StructType(
-        [
-            shard_field,
-            T.StructField("n_rows", T.IntegerType(), False),
-            T.StructField("shard_bytes", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-        ]
-    )
 
-    def pack(pdf):
-        import pandas as pd
+    def parquet_file(pdf) -> bytes:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        pdf = pdf.sort_values(order_col, kind="mergesort")
-        table = pa.Table.from_pandas(
-            pdf[data_cols], preserve_index=False
-        )
+        table = pa.Table.from_pandas(pdf[data_cols], preserve_index=False)
         sink = pa.BufferOutputStream()
         pq.write_table(table, sink, compression="zstd")
-        payload = sink.getvalue().to_pybytes()
-        return pd.DataFrame(
-            [
-                {
-                    shard_col: pdf[shard_col].iloc[0],
-                    "n_rows": len(pdf),
-                    "shard_bytes": len(payload),
-                    "payload": payload,
-                }
-            ]
-        )
+        return sink.getvalue().to_pybytes()
 
-    return df.groupBy(shard_col).applyInPandas(pack, schema=out_schema)
+    return _pack_shards(df, shard_col, order_col, "n_rows", parquet_file)
 
 
 def parquet_payload_table(
@@ -1932,41 +1512,17 @@ def parquet_payload_table(
     shuffle."""
     if not ddl:
         raise ValueError("declare the embedded schema, e.g. 'a long'")
-    keep = [f for f in df.schema.fields if f.name != payload_col]
     declared = T.StructType.fromDDL(ddl)
-    out_schema = T.StructType(list(keep) + list(declared.fields))
-    keep_names = [f.name for f in keep]
     decl_names = [f.name for f in declared.fields]
-    out_names = [f.name for f in out_schema.fields]
 
-    def run(batches):
-        import pandas as pd
+    def rows(p: bytes, _codec: str):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        for pdf in batches:
-            frames = []
-            for _, row in pdf.iterrows():
-                p = row[payload_col]
-                if p is None:
-                    inner = pd.DataFrame(
-                        [{c: None for c in decl_names}]
-                    )
-                else:
-                    inner = pq.read_table(
-                        pa.BufferReader(bytes(p)), columns=decl_names
-                    ).to_pandas()
-                for c in keep_names:
-                    inner[c] = row[c]
-                frames.append(inner)
-            out = (
-                pd.concat(frames, ignore_index=True)
-                if frames
-                else pd.DataFrame(columns=out_names)
-            )
-            yield out[out_names]
+        table = pq.read_table(pa.BufferReader(p), columns=decl_names)
+        return table.to_pandas().itertuples(index=False, name=None)
 
-    return df.mapInPandas(run, schema=out_schema)
+    return _map_records(df, payload_col, list(declared.fields), rows)
 
 
 def shard_jsonl(
@@ -2042,69 +1598,41 @@ def subtitle_cues(
 
     Scale shape: cue expansion happens INSIDE the executor (Arrow
     ``mapInPandas``); only scalar cue rows shuffle."""
-    has_meta = meta_col in df.columns
-    keep = [
-        f for f in df.schema.fields if f.name not in (payload_col, meta_col)
-    ]
-    out_schema = T.StructType(
-        list(keep)
-        + [
-            T.StructField("cue_idx", T.IntegerType(), True),
-            T.StructField("start_ms", T.LongType(), True),
-            T.StructField("end_ms", T.LongType(), True),
-            T.StructField("cue_text", T.StringType(), True),
-        ]
-    )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
 
-    def run(batches):
-        import pandas as pd
-
+    def cues_of(p: bytes, codec: str):
         from parquet_editor_spark.sources.subtitles import (
             parse_srt,
             parse_vtt,
         )
 
-        for pdf in batches:
-            codecs = (
-                ["srt" if m is None else m["codec"] for m in pdf[meta_col]]
-                if has_meta
-                else ["srt"] * len(pdf)
+        text = p.decode("utf-8", "replace")
+        if codec == "srt":
+            cues = parse_srt(text)
+        elif codec == "vtt":
+            cues = parse_vtt(text)
+        else:
+            raise NotImplementedError(
+                f"subtitle parse for codec {codec!r}: "
+                "built-in support is srt/vtt"
             )
-            out_rows = []
-            for (_, row), codec in zip(pdf.iterrows(), codecs):
-                p = row[payload_col]
-                base = {c: row[c] for c in keep_names}
-                if p is None:
-                    out_rows.append(
-                        dict(base, cue_idx=None, start_ms=None,
-                             end_ms=None, cue_text=None)
-                    )
-                    continue
-                text = bytes(p).decode("utf-8", "replace")
-                if codec == "srt":
-                    cues = parse_srt(text)
-                elif codec == "vtt":
-                    cues = parse_vtt(text)
-                else:
-                    raise NotImplementedError(
-                        f"subtitle parse for codec {codec!r}: "
-                        "built-in support is srt/vtt"
-                    )
-                for c in cues:
-                    out_rows.append(
-                        dict(
-                            base,
-                            cue_idx=c["cue_idx"],
-                            start_ms=c["start_ms"],
-                            end_ms=c["end_ms"],
-                            cue_text=c["text"],
-                        )
-                    )
-            yield pd.DataFrame(out_rows, columns=out_names)
+        return [
+            (c["cue_idx"], c["start_ms"], c["end_ms"], c["text"])
+            for c in cues
+        ]
 
-    return df.mapInPandas(run, schema=out_schema)
+    return _map_records(
+        df,
+        payload_col,
+        [
+            T.StructField("cue_idx", T.IntegerType(), True),
+            T.StructField("start_ms", T.LongType(), True),
+            T.StructField("end_ms", T.LongType(), True),
+            T.StructField("cue_text", T.StringType(), True),
+        ],
+        cues_of,
+        meta_col,
+        default_codec="srt",
+    )
 
 
 def image_exif(
@@ -2123,10 +1651,25 @@ def image_exif(
 
     Scale shape: O(header) per payload, pure Arrow ``mapInPandas``
     projection, no shuffle."""
-    has_meta = meta_col in df.columns
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
+
+    keys = ("make", "model", "orientation", "datetime", "exif_w", "exif_h",
+            "iso")
+
+    def exif_of(p: bytes, codec: str):
+        if codec not in ("jpeg", "jpg"):
+            raise NotImplementedError(
+                f"EXIF extraction for codec {codec!r}: EXIF is a "
+                "JPEG/TIFF concept"
+            )
+        from parquet_editor_spark.sources.exif import exif_from_jpeg
+
+        info = exif_from_jpeg(p)
+        return tuple(info.get(k) for k in keys)
+
+    return _map_columns(
+        df,
+        payload_col,
+        [
             T.StructField("make", T.StringType(), True),
             T.StructField("model", T.StringType(), True),
             T.StructField("orientation", T.IntegerType(), True),
@@ -2134,45 +1677,10 @@ def image_exif(
             T.StructField("exif_w", T.IntegerType(), True),
             T.StructField("exif_h", T.IntegerType(), True),
             T.StructField("iso", T.IntegerType(), True),
-        ]
+        ],
+        exif_of,
+        meta_col,
     )
-
-    def run(batches):
-        from parquet_editor_spark.sources.exif import exif_from_jpeg
-
-        def exif_of(p, codec: str):
-            if p is None:
-                return {}
-            if codec in ("jpeg", "jpg"):
-                return exif_from_jpeg(bytes(p))
-            raise NotImplementedError(
-                f"EXIF extraction for codec {codec!r}: EXIF is a "
-                "JPEG/TIFF concept"
-            )
-
-        for pdf in batches:
-            codecs = (
-                ["fake" if m is None else m["codec"] for m in pdf[meta_col]]
-                if has_meta
-                else ["fake"] * len(pdf)
-            )
-            infos = [
-                exif_of(p, c) for p, c in zip(pdf[payload_col], codecs)
-            ]
-            pdf = pdf.copy()
-            for col, key in (
-                ("make", "make"),
-                ("model", "model"),
-                ("orientation", "orientation"),
-                ("taken_at", "datetime"),
-                ("exif_w", "exif_w"),
-                ("exif_h", "exif_h"),
-                ("iso", "iso"),
-            ):
-                pdf[col] = [i.get(key) for i in infos]
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def _video_pixel_frames(p: bytes, codec: str, what: str):
@@ -2235,13 +1743,29 @@ def video_frame_stats(
     → ≤k rows); only scalars leave the worker; no shuffle."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    has_meta = meta_col in df.columns
-    keep = [
-        f for f in df.schema.fields if f.name not in (payload_col, meta_col)
-    ]
-    out_schema = T.StructType(
-        list(keep)
-        + [
+
+    def stats(p: bytes, codec: str):
+        from parquet_editor_spark.sources.y4m import sample_frame_indices
+
+        w, h, frames = _video_pixel_frames(p, codec, "frame stats")
+        n = len(frames)
+        for idx in sample_frame_indices(n, k):
+            a = frames[idx]
+            yield (
+                idx,
+                n,
+                w,
+                h,
+                int(a.min()),
+                int(a.max()),
+                int(a.astype("int64").sum()),
+                int(a.size),
+            )
+
+    return _map_records(
+        df,
+        payload_col,
+        [
             T.StructField("frame_idx", T.IntegerType(), True),
             T.StructField("n_frames", T.IntegerType(), True),
             T.StructField("frame_w", T.IntegerType(), True),
@@ -2250,55 +1774,10 @@ def video_frame_stats(
             T.StructField("px_max", T.IntegerType(), True),
             T.StructField("px_sum", T.LongType(), True),
             T.StructField("n_px", T.LongType(), True),
-        ]
+        ],
+        stats,
+        meta_col,
     )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
-
-    def run(batches):
-        import pandas as pd
-
-        from parquet_editor_spark.sources.y4m import sample_frame_indices
-
-        for pdf in batches:
-            codecs = (
-                ["fake" if m is None else m["codec"] for m in pdf[meta_col]]
-                if has_meta
-                else ["fake"] * len(pdf)
-            )
-            out_rows = []
-            for (_, row), codec in zip(pdf.iterrows(), codecs):
-                p = row[payload_col]
-                base = {c: row[c] for c in keep_names}
-                if p is None:
-                    out_rows.append(
-                        dict(base, frame_idx=None, n_frames=None,
-                             frame_w=None, frame_h=None, px_min=None,
-                             px_max=None, px_sum=None, n_px=None)
-                    )
-                    continue
-                w, h, frames = _video_pixel_frames(
-                    bytes(p), codec, "frame stats"
-                )
-                n = len(frames)
-                for idx in sample_frame_indices(n, k):
-                    a = frames[idx]
-                    out_rows.append(
-                        dict(
-                            base,
-                            frame_idx=idx,
-                            n_frames=n,
-                            frame_w=w,
-                            frame_h=h,
-                            px_min=int(a.min()),
-                            px_max=int(a.max()),
-                            px_sum=int(a.astype("int64").sum()),
-                            n_px=int(a.size),
-                        )
-                    )
-            yield pd.DataFrame(out_rows, columns=out_names)
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def video_scene_cuts(
@@ -2323,66 +1802,33 @@ def video_scene_cuts(
     no payload bytes shuffle."""
     if threshold < 0:
         raise ValueError(f"threshold must be >= 0, got {threshold}")
-    has_meta = meta_col in df.columns
-    keep = [
-        f for f in df.schema.fields if f.name not in (payload_col, meta_col)
-    ]
-    out_schema = T.StructType(
-        list(keep)
-        + [
+
+    def cuts(p: bytes, codec: str):
+        import numpy as _np
+
+        _w, _h, frames = _video_pixel_frames(p, codec, "scene cuts")
+        n = len(frames)
+        prev = None
+        for i, a in enumerate(frames):
+            a = a.astype(_np.int64)
+            if prev is not None:
+                diff = int(_np.abs(a - prev).sum())
+                yield (i, n, diff, int(a.size), diff > threshold * a.size)
+            prev = a
+
+    return _map_records(
+        df,
+        payload_col,
+        [
             T.StructField("frame_idx", T.IntegerType(), True),
             T.StructField("n_frames", T.IntegerType(), True),
             T.StructField("diff_sum", T.LongType(), True),
             T.StructField("n_px", T.LongType(), True),
             T.StructField("is_cut", T.BooleanType(), True),
-        ]
+        ],
+        cuts,
+        meta_col,
     )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
-
-    def run(batches):
-        import numpy as _np
-        import pandas as pd
-
-        for pdf in batches:
-            codecs = (
-                ["fake" if m is None else m["codec"] for m in pdf[meta_col]]
-                if has_meta
-                else ["fake"] * len(pdf)
-            )
-            out_rows = []
-            for (_, row), codec in zip(pdf.iterrows(), codecs):
-                p = row[payload_col]
-                base = {c: row[c] for c in keep_names}
-                if p is None:
-                    out_rows.append(
-                        dict(base, frame_idx=None, n_frames=None,
-                             diff_sum=None, n_px=None, is_cut=None)
-                    )
-                    continue
-                _w, _h, frames = _video_pixel_frames(
-                    bytes(p), codec, "scene cuts"
-                )
-                n = len(frames)
-                prev = None
-                for i, a in enumerate(frames):
-                    a = a.astype(_np.int64)
-                    if prev is not None:
-                        diff = int(_np.abs(a - prev).sum())
-                        out_rows.append(
-                            dict(
-                                base,
-                                frame_idx=i,
-                                n_frames=n,
-                                diff_sum=diff,
-                                n_px=int(a.size),
-                                is_cut=diff > threshold * a.size,
-                            )
-                        )
-                    prev = a
-            yield pd.DataFrame(out_rows, columns=out_names)
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def _decode_audio_samples(p: bytes, codec: str):
@@ -2427,7 +1873,7 @@ def _decode_audio_samples(p: bytes, codec: str):
         return rate, ch, smp
     raise NotImplementedError(
         f"sample-level audio ops for codec {codec!r} require a real "
-        "decoder"
+        "decoder; built-in support is wav, flac"
     )
 
 
@@ -2461,71 +1907,47 @@ def audio_segments(
     segmentation defects both diverge."""
     if frame < 1 or energy_threshold < 0:
         raise ValueError("need frame >= 1 and energy_threshold >= 0")
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    out_schema = T.StructType(
-        list(keep)
-        + [
+
+    def segments(p: bytes, codec: str):
+        import numpy as np
+
+        _rate, ch, smp = _decode_audio_samples(p, codec)
+        n_frames = len(smp) // frame
+        if n_frames == 0:
+            # a non-null clip shorter than one frame stays VISIBLE
+            # downstream: emit the same null-segment row the
+            # null-payload path emits (r12 ADVICE — silently vanishing
+            # docs are unaccountable)
+            yield (None, None, None, None)
+            return
+        a = np.abs(smp[: n_frames * frame]).reshape(n_frames, frame * ch)
+        fsum = a.sum(axis=1)
+        voiced = fsum >= energy_threshold * frame * ch
+        seg = 0
+        i = 0
+        while i < n_frames:
+            if not voiced[i]:
+                i += 1
+                continue
+            j = i
+            while j < n_frames and voiced[j]:
+                j += 1
+            yield (seg, int(i), int(j - i), int(fsum[i:j].sum()))
+            seg += 1
+            i = j
+
+    return _map_records(
+        df,
+        payload_col,
+        [
             T.StructField("seg_idx", T.IntegerType(), True),
             T.StructField("start_frame", T.LongType(), True),
             T.StructField("n_frames", T.LongType(), True),
             T.StructField("sum_abs", T.LongType(), True),
-        ]
+        ],
+        segments,
+        codec_col,
     )
-    keep_names = [f.name for f in keep]
-
-    def run(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                base = [row[c] for c in keep_names]
-                p = row[payload_col]
-                if p is None:
-                    rows.append(base + [None, None, None, None])
-                    continue
-                _rate, ch, smp = _decode_audio_samples(
-                    bytes(p), row[codec_col]
-                )
-                n_frames = len(smp) // frame
-                if n_frames == 0:
-                    # a non-null clip shorter than one frame stays
-                    # VISIBLE downstream: emit the same null-segment
-                    # row the null-payload path emits (r12 ADVICE —
-                    # silently vanishing docs are unaccountable)
-                    rows.append(base + [None, None, None, None])
-                    continue
-                a = np.abs(
-                    smp[: n_frames * frame]
-                ).reshape(n_frames, frame * ch)
-                fsum = a.sum(axis=1)
-                voiced = fsum >= energy_threshold * frame * ch
-                seg = 0
-                i = 0
-                while i < n_frames:
-                    if not voiced[i]:
-                        i += 1
-                        continue
-                    j = i
-                    while j < n_frames and voiced[j]:
-                        j += 1
-                    rows.append(
-                        base
-                        + [
-                            seg,
-                            int(i),
-                            int(j - i),
-                            int(fsum[i:j].sum()),
-                        ]
-                    )
-                    seg += 1
-                    i = j
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in out_schema.fields]
-            )
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def audio_stats(
@@ -2548,10 +1970,41 @@ def audio_stats(
 
     Scale shape: Arrow ``mapInPandas`` projection, O(samples) per
     clip executor-side, no shuffle."""
-    has_meta = meta_col in df.columns
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
+
+    def stats_of(p: bytes, codec: str):
+        import numpy as _np
+
+        if codec == "fake":
+            import hashlib as _h
+
+            d = _h.md5(p).digest()
+            rate = 8000 * (1 + d[0] % 6)
+            ch = 1 + d[1] % 2
+            n = 1 + int.from_bytes(d[2:5], "big") % 100000
+            v = d[5] % 128
+            return (rate, ch, n, v, v * n * ch,
+                    v * v * n * ch, 0)
+        rate, ch, s = _decode_audio_samples(p, codec)
+        n = len(s)
+        if n == 0:
+            return (rate, ch, 0, 0, 0, 0, 0)
+        peak = int(_np.abs(s).max())
+        dc = int(s.sum())
+        sq = int((s * s).sum()) if peak < (1 << 31) else sum(
+            int(v) * int(v) for v in s.reshape(-1)
+        )
+        if sq > (1 << 63) - 1:
+            raise ValueError(
+                "sq_sum exceeds int64 for this clip"
+            )
+        nonneg = s >= 0
+        zc = int((nonneg[1:] != nonneg[:-1]).sum())
+        return (rate, ch, n, peak, dc, sq, zc)
+
+    return _map_columns(
+        df,
+        payload_col,
+        [
             T.StructField("sample_rate", T.IntegerType(), True),
             T.StructField("channels", T.IntegerType(), True),
             T.StructField("n_frames", T.LongType(), True),
@@ -2559,106 +2012,7 @@ def audio_stats(
             T.StructField("dc_sum", T.LongType(), True),
             T.StructField("sq_sum", T.LongType(), True),
             T.StructField("zero_crossings", T.LongType(), True),
-        ]
+        ],
+        stats_of,
+        meta_col,
     )
-
-    def run(batches):
-        import hashlib as _h
-
-        import numpy as _np
-
-        def samples_of(p: bytes, codec: str):
-            """(rate, ch, samples) with samples shaped (n, ch) int64."""
-            if codec == "wav":
-                from parquet_editor_spark.sources import wav as _wav
-
-                rate, ch, bits, n, frames, tag = _wav.decode_wav_ex(p)
-                if tag == _wav.IEEE_FLOAT:
-                    raise NotImplementedError(
-                        "audio stats for IEEE-float WAV are not "
-                        "engine-portable; convert to PCM first"
-                    )
-                if bits == 8:
-                    a = (
-                        _np.frombuffer(frames, _np.uint8).astype(
-                            _np.int64
-                        )
-                        - 128
-                    )
-                elif bits == 16:
-                    a = _np.frombuffer(frames, "<i2").astype(_np.int64)
-                elif bits == 32:
-                    a = _np.frombuffer(frames, "<i4").astype(_np.int64)
-                elif bits == 24:
-                    raw = _np.frombuffer(frames, _np.uint8).reshape(
-                        -1, 3
-                    )
-                    u = (
-                        raw[:, 0].astype(_np.int64)
-                        | (raw[:, 1].astype(_np.int64) << 8)
-                        | (raw[:, 2].astype(_np.int64) << 16)
-                    )
-                    a = _np.where(u >= 1 << 23, u - (1 << 24), u)
-                else:
-                    raise NotImplementedError(
-                        f"audio stats for {bits}-bit WAV"
-                    )
-                return rate, ch, a.reshape(n, ch)
-            if codec == "flac":
-                from parquet_editor_spark.sources.flac_codec import (
-                    decode_flac,
-                )
-
-                rate, ch, _bits, _n, s = decode_flac(p)
-                return rate, ch, s
-            raise NotImplementedError(
-                f"audio stats for codec {codec!r} requires a real "
-                "audio library"
-            )
-
-        def stats_of(p, codec: str):
-            if p is None:
-                return (None,) * 7
-            p = bytes(p)
-            if codec == "fake":
-                d = _h.md5(p).digest()
-                rate = 8000 * (1 + d[0] % 6)
-                ch = 1 + d[1] % 2
-                n = 1 + int.from_bytes(d[2:5], "big") % 100000
-                v = d[5] % 128
-                return (rate, ch, n, v, v * n * ch,
-                        v * v * n * ch, 0)
-            rate, ch, s = samples_of(p, codec)
-            n = len(s)
-            if n == 0:
-                return (rate, ch, 0, 0, 0, 0, 0)
-            peak = int(_np.abs(s).max())
-            dc = int(s.sum())
-            sq = int((s * s).sum()) if peak < (1 << 31) else sum(
-                int(v) * int(v) for v in s.reshape(-1)
-            )
-            if sq > (1 << 63) - 1:
-                raise ValueError(
-                    "sq_sum exceeds int64 for this clip"
-                )
-            nonneg = s >= 0
-            zc = int((nonneg[1:] != nonneg[:-1]).sum())
-            return (rate, ch, n, peak, dc, sq, zc)
-
-        cols = ["sample_rate", "channels", "n_frames", "peak",
-                "dc_sum", "sq_sum", "zero_crossings"]
-        for pdf in batches:
-            codecs = (
-                ["fake" if m is None else m["codec"] for m in pdf[meta_col]]
-                if has_meta
-                else ["fake"] * len(pdf)
-            )
-            stats = [
-                stats_of(p, c) for p, c in zip(pdf[payload_col], codecs)
-            ]
-            pdf = pdf.copy()
-            for i, c in enumerate(cols):
-                pdf[c] = [s[i] for s in stats]
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)

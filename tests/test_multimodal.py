@@ -126,6 +126,25 @@ def test_resize_images_deterministic_and_schema(payloads):
     assert "meta" in out.columns
 
 
+def test_columns_operator_replaces_a_column_of_its_name(spark):
+    """decode_meta after resize_images: both give width/height, and
+    decode_meta's values replace resize's instead of duplicating the
+    column names."""
+    df = MM.attach_payload(
+        spark.createDataFrame([(1, "abc")], "doc_id long, text string"),
+        "text",
+    )
+    out = MM.decode_meta(MM.resize_images(df, "payload", 8, 6))
+    assert out.columns == [
+        "doc_id", "text", "meta", "payload", "width", "height", "channels"
+    ]
+    (r,) = out.collect()
+    d = hashlib.md5(bytes(r["payload"])).digest()
+    assert (r["width"], r["height"], r["channels"]) == (
+        16 + d[0] % 1024, 16 + d[1] % 1024, 1 + d[2] % 4
+    )
+
+
 def test_extract_features_wide_dim(spark):
     out = MM.extract_features(
         MM.attach_payload(
@@ -498,3 +517,357 @@ def test_audio_segments_short_clip_emits_null_row(spark):
         assert rows[i]["start_frame"] is None
         assert rows[i]["n_frames"] is None
         assert rows[i]["sum_abs"] is None
+
+
+# ------------------------------------------------------------------
+# The null-payload contract of every payload operator
+# ------------------------------------------------------------------
+
+
+def _y4m_clip() -> bytes:
+    from parquet_editor_spark.sources.y4m import encode_y4m
+
+    # 4x4 4:2:0 frames are 24 bytes; the third frame is a hard cut
+    return encode_y4m(4, 4, (30, 1), [bytes([v]) * 24 for v in (10, 12, 200)])
+
+
+def _table_ipc(parquet: bool) -> bytes:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pa.table({"a": [1, 2], "s": ["x", "y"]})
+    sink = pa.BufferOutputStream()
+    if parquet:
+        pq.write_table(table, sink)
+    else:
+        with pa.ipc.new_stream(sink, table.schema) as w:
+            w.write_table(table)
+    return sink.getvalue().to_pybytes()
+
+
+def _payload_case(name):
+    """(media_type, codec, payload, op, new columns, null values of the
+    new columns) for one columns- or records-per-payload operator; a
+    None media_type builds the input without a ``meta`` struct."""
+    import numpy as np
+
+    from parquet_editor_spark.sources import epub, exif, jpeg, pdf
+    from parquet_editor_spark.sources import subtitles, tararc, tfrecord
+    from parquet_editor_spark.sources import warc, wav, ziparc
+
+    fake = ("image", "fake", b"some payload bytes")
+    cases = {
+        "decode_meta": (fake, MM.decode_meta,
+                        ["width", "height", "channels"]),
+        "extract_features": (fake, MM.extract_features, ["features"]),
+        "image_pixel_stats": (fake, MM.image_pixel_stats,
+                              ["width", "height", "channels", "px_min",
+                               "px_max", "px_sum", "n_px"]),
+        "audio_meta": (fake, MM.audio_meta,
+                       ["sample_rate", "channels", "n_frames",
+                        "duration_ms"]),
+        "video_meta": (fake, MM.video_meta,
+                       ["duration_ms", "n_tracks", "width", "height"]),
+        "image_dhash": (fake, MM.image_dhash, ["dhash", "width", "height"]),
+        "image_exif": (
+            ("image", "jpeg", exif.insert_app1(
+                jpeg.make_jpeg_header(10, 10, 3),
+                exif.make_exif_app1(
+                    make="M", model="C", orientation=1,
+                    datetime="2024:01:02 03:04:05", exif_w=10, exif_h=10,
+                    iso=100,
+                ),
+            )),
+            MM.image_exif,
+            ["make", "model", "orientation", "taken_at", "exif_w",
+             "exif_h", "iso"],
+        ),
+        "audio_stats": (fake, MM.audio_stats,
+                        ["sample_rate", "channels", "n_frames", "peak",
+                         "dc_sum", "sq_sum", "zero_crossings"]),
+        "resize_images": (fake, lambda d: MM.resize_images(d, "payload",
+                                                           8, 6),
+                          ["payload", "width", "height"], [None, 8, 6]),
+        "resample_audio": (fake, lambda d: MM.resample_audio(d, 8000),
+                           ["payload", "sample_rate"], [None, 8000]),
+        "warc_records": (
+            ("text", "warc", warc.make_warc([
+                {"warc_type": "response", "target_uri": "http://a/",
+                 "date": "2024-01-01T00:00:00Z",
+                 "content_type": "text/plain", "payload": b"hello"},
+            ])),
+            MM.warc_records,
+            ["rec_idx", "warc_type", "target_uri", "warc_date",
+             "content_type", "content_length", "body"],
+        ),
+        "zip_members": (
+            ("text", "zip", ziparc.make_zip([("a.txt", "x"), ("b.txt", "y")])),
+            MM.zip_members,
+            ["member_idx", "name", "size_bytes", "compressed_bytes",
+             "crc32", "content"],
+        ),
+        "tar_members": (
+            ("text", "tar", tararc.make_tar([("a.txt", "x")])),
+            MM.tar_members,
+            ["member_idx", "name", "size_bytes", "mtime", "content"],
+        ),
+        "wds_samples": (
+            ("text", "tar", tararc.make_tar(
+                [("0001.txt", "x"), ("0001.json", "{}")])),
+            MM.wds_samples,
+            ["sample_idx", "sample_key", "n_components", "exts",
+             "total_bytes", "components"],
+        ),
+        "tfrecord_records": (
+            ("text", "tfrecord", tfrecord.make_tfrecord(["a", "bc"])),
+            MM.tfrecord_records,
+            ["rec_idx", "size_bytes", "content"],
+        ),
+        "pdf_pages": (
+            ("text", "pdf", pdf.encode_pdf([["one"], ["two"]])),
+            MM.pdf_pages,
+            ["page_idx", "n_pages", "page_text"],
+        ),
+        "epub_book_chapters": (
+            ("text", "epub", epub.make_epub([("One", "<p>a</p>")])),
+            MM.epub_book_chapters,
+            ["chapter_idx", "href", "xhtml"],
+        ),
+        "subtitle_cues": (
+            ("text", "srt", subtitles.make_srt(
+                [{"start_ms": 0, "end_ms": 900, "text": "hi"}]).encode()),
+            MM.subtitle_cues,
+            ["cue_idx", "start_ms", "end_ms", "cue_text"],
+        ),
+        "sample_frames_video": (
+            ("video", "y4m", _y4m_clip()),
+            lambda d: MM.sample_frames_video(d, k=2),
+            ["frame_idx", "n_frames", "frame_w", "frame_h",
+             "frame_checksum"],
+        ),
+        "video_frame_index": (
+            ("video", "fake", b"clip bytes"),
+            MM.video_frame_index,
+            ["frame_idx", "n_frames", "dts_ms", "pts_ms", "frame_bytes",
+             "frame_offset", "is_sync"],
+        ),
+        "video_frame_stats": (
+            ("video", "y4m", _y4m_clip()),
+            lambda d: MM.video_frame_stats(d, k=2),
+            ["frame_idx", "n_frames", "frame_w", "frame_h", "px_min",
+             "px_max", "px_sum", "n_px"],
+        ),
+        "video_scene_cuts": (
+            ("video", "y4m", _y4m_clip()),
+            MM.video_scene_cuts,
+            ["frame_idx", "n_frames", "diff_sum", "n_px", "is_cut"],
+        ),
+        "audio_segments": (
+            ("audio", "wav", wav.encode_wav(
+                8000, 1, 16, np.full(512, 6000, "<i2").tobytes())),
+            MM.audio_segments,
+            ["seg_idx", "start_frame", "n_frames", "sum_abs"],
+        ),
+        # no meta struct: the two table readers take no codec
+        "arrow_ipc_table": (
+            (None, "arrow", _table_ipc(parquet=False)),
+            lambda d: MM.arrow_ipc_table(d, ddl="a long, s string"),
+            ["a", "s"],
+        ),
+        "parquet_payload_table": (
+            (None, "parquet", _table_ipc(parquet=True)),
+            lambda d: MM.parquet_payload_table(d, ddl="a long, s string"),
+            ["a", "s"],
+        ),
+    }
+    (media, codec, payload), op, new, *null = cases[name]
+    null = null[0] if null else [None] * len(new)
+    return media, codec, payload, op, new, null
+
+
+_COLUMNS_OPS = [
+    "decode_meta", "extract_features", "image_pixel_stats", "audio_meta",
+    "video_meta", "image_dhash", "image_exif", "audio_stats",
+    "resize_images", "resample_audio",
+]
+_RECORDS_OPS = [
+    "warc_records", "zip_members", "tar_members", "wds_samples",
+    "tfrecord_records", "pdf_pages", "epub_book_chapters", "subtitle_cues",
+    "sample_frames_video", "video_frame_index", "video_frame_stats",
+    "video_scene_cuts", "audio_segments", "arrow_ipc_table",
+    "parquet_payload_table",
+]
+
+
+@pytest.mark.parametrize("name", _COLUMNS_OPS + _RECORDS_OPS)
+def test_null_payload_contract(spark, name):
+    """Two real payload rows plus one null-payload row (doc 3): a
+    columns operator gives that row its null values with every carried
+    column intact; a records operator gives it exactly one row whose
+    new columns are all null.  Empty input gives zero rows with the
+    same schema."""
+    media, codec, payload, op, new, null = _payload_case(name)
+    df = spark.createDataFrame(
+        [(1, bytearray(payload)), (2, bytearray(payload)), (3, None)],
+        "doc_id long, payload binary",
+    )
+    if media:
+        df = MM.attach_payload(df, "payload", media, codec)
+    # audio_segments reads its codec from a plain column
+    df = df.withColumn("codec", F.lit(codec))
+    out = op(df)
+    carried = [c for c in out.columns if c not in new]
+    assert out.columns == carried + new
+    assert "doc_id" in carried
+    rows = out.collect()
+    by_doc = {i: [r for r in rows if r["doc_id"] == i] for i in (1, 2, 3)}
+    (null_row,) = by_doc[3]
+    assert [null_row[c] for c in new] == null
+    src = {r["doc_id"]: r for r in df.collect()}
+    assert all(null_row[c] == src[3][c] for c in carried)
+    for i in (1, 2):
+        assert by_doc[i], f"{name}: doc {i} lost"
+        assert all(r[c] is not None for r in by_doc[i] for c in new)
+        if name in _COLUMNS_OPS:
+            assert len(by_doc[i]) == 1
+    empty = op(df.limit(0))
+    assert empty.schema == out.schema
+    assert empty.collect() == []
+
+
+@pytest.mark.parametrize(
+    "name", ["arrow_ipc_table", "parquet_payload_table"]
+)
+def test_table_readers_carry_nested_columns(spark, name):
+    """A carried struct or array column repeats on every record row,
+    as it does for the other records operators."""
+    _m, codec, payload, op, _new, _null = _payload_case(name)
+    df = MM.attach_payload(
+        spark.createDataFrame(
+            [(1, bytearray(payload)), (2, None)], "doc_id long, payload binary"
+        ),
+        "payload",
+        "text",
+        codec,
+    ).withColumn("tags", F.array(F.lit("a"), F.lit("b")))
+    rows = op(df).orderBy("doc_id", "a").collect()
+    assert [(r["doc_id"], r["a"], r["s"]) for r in rows] == [
+        (1, 1, "x"), (1, 2, "y"), (2, None, None)
+    ]
+    assert all(r["tags"] == ["a", "b"] for r in rows)
+    assert [r["meta"]["codec"] for r in rows] == [codec] * 3
+
+
+# ------------------------------------------------------------------
+# Unknown-codec gates name every codec their dispatch accepts
+# ------------------------------------------------------------------
+
+_CODECS = [
+    "png", "jpeg", "jpg", "gif", "bmp", "tiff", "tif", "webp", "wav",
+    "flac", "mp3", "ogg", "opus", "vorbis", "mp4", "avi", "y4m", "srt",
+    "vtt", "fake",
+]
+_ALIAS = {"jpg": "jpeg", "tif": "tiff"}
+
+
+def _names(msg: str, codec: str) -> bool:
+    import re
+
+    return any(
+        re.search(rf"\b{c}\b", msg) for c in (codec, _ALIAS.get(codec))
+        if c
+    )
+
+
+def _gate_message(call, codec: str):
+    """The message of the unknown-codec NotImplementedError ``call``
+    raises for ``codec``, or None when the dispatch accepts the codec
+    (garbage bytes then fail inside a decoder instead)."""
+    try:
+        call(codec)
+    except NotImplementedError as e:
+        if f"codec {codec!r}" in str(e):
+            return str(e)
+    except Exception:
+        pass
+    return None
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda c: MM._decode_real(b"\0" * 64, c),
+        lambda c: MM._decode_pixels(b"\0" * 64, c, "test"),
+        lambda c: MM._video_pixel_frames(b"\0" * 64, c, "test"),
+        lambda c: MM._decode_audio_samples(b"\0" * 64, c),
+    ],
+    ids=["decode_real", "decode_pixels", "video_pixel_frames",
+         "decode_audio_samples"],
+)
+def test_decode_seam_messages_name_every_accepted_codec(call):
+    accepted = [c for c in _CODECS if _gate_message(call, c) is None]
+    msg = _gate_message(call, "nope")
+    assert accepted and msg
+    assert [c for c in accepted if not _names(msg, c)] == []
+
+
+@pytest.mark.parametrize(
+    "op, accepted",
+    [
+        (MM.video_frame_index, ["mp4", "avi", "y4m", "fake"]),
+        (MM.sample_frames_video, ["mp4", "avi", "y4m"]),
+        (MM.subtitle_cues, ["srt", "vtt"]),
+    ],
+    ids=["video_frame_index", "sample_frames_video", "subtitle_cues"],
+)
+def test_operator_gate_messages_name_every_accepted_codec(spark, op,
+                                                          accepted):
+    df = MM.attach_payload(
+        spark.createDataFrame(
+            [(1, bytearray(b"x"))], "doc_id long, payload binary"
+        ),
+        "payload",
+        "video",
+        "nope",
+    )
+    with pytest.raises(Exception, match="codec 'nope'") as err:
+        op(df).collect()
+    assert [c for c in accepted if not _names(str(err.value), c)] == []
+
+
+# ------------------------------------------------------------------
+# Guard: every Python-worker body goes through the three helpers
+# ------------------------------------------------------------------
+
+_SHAPES = {
+    "_map_columns": _COLUMNS_OPS,
+    "_map_records": _RECORDS_OPS,
+    "_pack_shards": ["shard_webdataset", "shard_tfrecord",
+                     "shard_arrow_ipc", "shard_parquet_payload"],
+}
+
+
+def test_worker_calls_only_inside_the_three_helpers():
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(MM))
+    defs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+
+    def calls(node, names):
+        return [
+            c for c in ast.walk(node)
+            if isinstance(c, ast.Call)
+            and (getattr(c.func, "attr", None) in names
+                 or getattr(c.func, "id", None) in names)
+        ]
+
+    worker = {"mapInPandas", "applyInPandas", "mapInArrow"}
+    owners = sorted(
+        name for name, node in defs.items() for _ in calls(node, worker)
+    )
+    assert owners == sorted(_SHAPES)
+    assert len(calls(tree, worker)) == len(_SHAPES)
+    for helper, ops in _SHAPES.items():
+        for op in ops:
+            assert calls(defs[op], {helper}), f"{op} bypasses {helper}"
