@@ -30,6 +30,62 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _synth(
+    docs: DataFrame,
+    fields: str,
+    make: Callable[..., tuple],
+    keep: tuple[str, ...] = ("doc_id",),
+) -> DataFrame:
+    """Synthesized fixture columns, one output row per ``docs`` row:
+    the ``keep`` columns of ``docs``, then ``fields`` (a DDL list such
+    as ``"payload binary, codec string"``).  ``make`` is called once
+    per row with the row's value of every ``docs`` column, in order,
+    as Python objects, and returns one value per field; ``None`` gives
+    null.  Only ``keep`` is carried: a column that ``make`` reads but
+    ``keep`` leaves out (a source ``text``) does not cross Arrow
+    again.  ``make`` is pickled by value, so it imports its codec
+    inside."""
+    from pyspark.sql import types as T
+
+    keep = list(keep)
+    schema = T.StructType(
+        [docs.schema[c] for c in keep] + T.StructType.fromDDL(fields).fields
+    )
+    names = schema.fieldNames()[len(keep):]
+
+    def run(batches):
+        for pdf in batches:
+            vals = [
+                make(*row)
+                for row in zip(*(pdf[c].tolist() for c in pdf.columns))
+            ]
+            yield pdf[keep].assign(
+                **{n: [v[k] for v in vals] for k, n in enumerate(names)}
+            )
+
+    return docs.mapInPandas(run, schema=schema)
+
+
+def _sample_stats(df: DataFrame) -> DataFrame:
+    """``df`` (an ``audio_meta`` output) plus the first, min, max and
+    sum of each payload's samples, decoded through the shared
+    ``_decode_audio_samples`` dispatch (wav, flac)."""
+    from pyspark.sql import types as T
+
+    from parquet_editor_spark.operators import multimodal as MM
+
+    def stats(p: bytes, codec: str):
+        _rate, _ch, s = MM._decode_audio_samples(p, codec)
+        return int(s[0, 0]), int(s.min()), int(s.max()), int(s.sum())
+
+    fields = (
+        "first_sample int, min_sample int, max_sample int, sum_samples long"
+    )
+    return MM._map_columns(
+        df, "payload", T.StructType.fromDDL(fields).fields, stats, "meta"
+    )
+
+
 def _revenue_exact() -> "F.Column":
     """Revenue summed in exact integer 10^-4 currency units, then
     HALF_UP-rounded to cents IN INTEGER SPACE:
@@ -1414,8 +1470,6 @@ def q_jpeg_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     differential checks the whole Spark-side header-parse path
     against closed-form truth.  Pixel decode stays an honest
     ``NotImplementedError`` (needs libjpeg)."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -1424,30 +1478,19 @@ def q_jpeg_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 13 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         from parquet_editor_spark.sources.jpeg import make_jpeg_header
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                make_jpeg_header(
-                    16 + int(i) % 613,
-                    16 + (int(i) * 7) % 489,
-                    1 + int(i) % 4,
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pdf[["doc_id", "payload"]]
+        return (
+            make_jpeg_header(
+                16 + i % 613,
+                16 + (i * 7) % 489,
+                1 + i % 4,
+            ),
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema), "payload", "image", "jpeg"
+        _synth(docs, "payload binary", make), "payload", "image", "jpeg"
     )
     return (
         MM.decode_meta(with_payload)
@@ -1463,8 +1506,6 @@ def q_flac_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     production ``audio_meta`` stage (Arrow mapInPandas, executor-side
     bitfield parse), emit the decoded fields.  Oracle: closed-form
     arithmetic on doc_id, including the integer floor duration."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -1473,31 +1514,20 @@ def q_flac_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 11 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         from parquet_editor_spark.sources.flac import make_flac_header
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                make_flac_header(
-                    8000 + (int(i) % 11) * 4000,
-                    1 + int(i) % 8,
-                    8 + (int(i) % 4) * 8,
-                    1000 + (int(i) * 37) % 100000,
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pdf[["doc_id", "payload"]]
+        return (
+            make_flac_header(
+                8000 + (i % 11) * 4000,
+                1 + i % 8,
+                8 + (i % 4) * 8,
+                1000 + (i * 37) % 100000,
+            ),
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema), "payload", "audio", "flac"
+        _synth(docs, "payload binary", make), "payload", "audio", "flac"
     )
     return (
         MM.audio_meta(with_payload)
@@ -1514,8 +1544,6 @@ def q_mp4_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     height) — and run the production ``video_meta`` box walk on the
     executors.  Oracle: closed-form arithmetic on doc_id with the
     audio-only NULL case."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -1524,37 +1552,22 @@ def q_mp4_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 7 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         from parquet_editor_spark.sources.mp4 import make_mp4_header
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                audio_only = i % 3 == 0
-                payloads.append(
-                    make_mp4_header(
-                        1000 + (i * 13) % 3600000,
-                        timescale=1000,
-                        width=None if audio_only else 320 + (i % 5) * 160,
-                        height=None if audio_only else 240 + (i % 3) * 120,
-                        n_tracks=1 + i % 3,
-                    )
-                )
-            pdf = pdf.copy()
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        audio_only = i % 3 == 0
+        return (
+            make_mp4_header(
+                1000 + (i * 13) % 3600000,
+                timescale=1000,
+                width=None if audio_only else 320 + (i % 5) * 160,
+                height=None if audio_only else 240 + (i % 3) * 120,
+                n_tracks=1 + i % 3,
+            ),
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema), "payload", "video", "mp4"
+        _synth(docs, "payload binary", make), "payload", "video", "mp4"
     )
     return (
         MM.video_meta(with_payload)
@@ -1572,8 +1585,6 @@ def q_mp3_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas, executor-side frame-header walk).  Oracle:
     closed-form arithmetic on doc_id — samples = frames × 1152
     (MPEG-1 rates) or × 576 (MPEG-2/2.5 rates)."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -1582,45 +1593,31 @@ def q_mp3_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 23 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
     _RATES9 = (44100, 48000, 32000, 22050, 24000, 16000, 11025, 12000, 8000)
 
-    def gen(batches):
+    def make(i):
         from parquet_editor_spark.sources.mp3 import make_mp3
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                rate = _RATES9[i % 9]
-                kbps = (
-                    (32, 128, 320)[i % 3]
-                    if i % 9 < 3
-                    else (16, 64, 160)[i % 3]
-                )
-                payloads.append(
-                    make_mp3(
-                        rate,
-                        channels=1 + i % 2,
-                        n_frames=3 + (i * 7) % 40,
-                        bitrate_kbps=kbps,
-                        pad_alternate=i % 5 == 0,
-                        id3v2_bytes=(57 + i % 100) if i % 2 == 0 else 0,
-                        id3v1=i % 3 == 0,
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        rate = _RATES9[i % 9]
+        kbps = (
+            (32, 128, 320)[i % 3]
+            if i % 9 < 3
+            else (16, 64, 160)[i % 3]
+        )
+        return (
+            make_mp3(
+                rate,
+                channels=1 + i % 2,
+                n_frames=3 + (i * 7) % 40,
+                bitrate_kbps=kbps,
+                pad_alternate=i % 5 == 0,
+                id3v2_bytes=(57 + i % 100) if i % 2 == 0 else 0,
+                id3v1=i % 3 == 0,
+            ),
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema), "payload", "audio", "mp3"
+        _synth(docs, "payload binary", make), "payload", "audio", "mp3"
     )
     return (
         MM.audio_meta(with_payload)
@@ -1639,8 +1636,6 @@ def q_wav_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and emit first/min/max — all equal to the constant, so the DuckDB
     oracle is closed-form on doc_id while the Spark side exercises the
     full numpy block decode."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -1649,74 +1644,29 @@ def q_wav_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 29 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         import numpy as np
 
         from parquet_editor_spark.sources.wav import encode_wav_adpcm
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                v = (i * 131) % 30001 - 15000
-                ch = 1 + i % 2
-                n = 100 + (i * 3) % 1500
-                pcm = np.full(n * ch, v, dtype="<i2")
-                payloads.append(
-                    encode_wav_adpcm(
-                        8000 + (i % 4) * 4000, ch, pcm.tobytes()
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        v = (i * 131) % 30001 - 15000
+        ch = 1 + i % 2
+        n = 100 + (i * 3) % 1500
+        pcm = np.full(n * ch, v, dtype="<i2")
+        return (
+            encode_wav_adpcm(8000 + (i % 4) * 4000, ch, pcm.tobytes()),
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema), "payload", "audio", "wav"
+        _synth(docs, "payload binary", make), "payload", "audio", "wav"
     )
-    metaed = MM.audio_meta(with_payload)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("n_frames", T.LongType()),
-            T.StructField("duration_ms", T.LongType()),
-            T.StructField("first_sample", T.IntegerType()),
-            T.StructField("min_sample", T.IntegerType()),
-            T.StructField("max_sample", T.IntegerType()),
-        ]
-    )
-
-    def decode_samples(batches):
-        import numpy as np
-
-        from parquet_editor_spark.sources.wav import decode_wav
-
-        for pdf in batches:
-            firsts, mins, maxs = [], [], []
-            for p in pdf["payload"]:
-                _r, _c, _b, _n, frames = decode_wav(bytes(p))
-                s = np.frombuffer(frames, dtype="<i2")
-                firsts.append(int(s[0]))
-                mins.append(int(s.min()))
-                maxs.append(int(s.max()))
-            pdf = pdf.copy()
-            pdf["first_sample"] = firsts
-            pdf["min_sample"] = mins
-            pdf["max_sample"] = maxs
-            yield pdf[[f.name for f in out_schema.fields]]
-
-    return metaed.mapInPandas(decode_samples, schema=out_schema).orderBy(
-        "doc_id"
+    return (
+        _sample_stats(MM.audio_meta(with_payload))
+        .select(
+            "doc_id", "sample_rate", "channels", "n_frames", "duration_ms",
+            "first_sample", "min_sample", "max_sample",
+        )
+        .orderBy("doc_id")
     )
 
 
@@ -1729,8 +1679,6 @@ def q_wav_ms_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     production ``audio_meta`` wav path + sample stats.  Oracle:
     closed-form on doc_id while Spark runs the real cross-block numpy
     recurrence."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -1739,74 +1687,29 @@ def q_wav_ms_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 41 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         import numpy as np
 
         from parquet_editor_spark.sources.wav import encode_wav_ms_adpcm
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                v = (i * 173) % 50001 - 25000
-                ch = 1 + i % 2
-                n = 80 + (i * 11) % 1200
-                pcm = np.full(n * ch, v, dtype="<i2")
-                payloads.append(
-                    encode_wav_ms_adpcm(
-                        8000 + (i % 5) * 3000, ch, pcm.tobytes()
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        v = (i * 173) % 50001 - 25000
+        ch = 1 + i % 2
+        n = 80 + (i * 11) % 1200
+        pcm = np.full(n * ch, v, dtype="<i2")
+        return (
+            encode_wav_ms_adpcm(8000 + (i % 5) * 3000, ch, pcm.tobytes()),
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema), "payload", "audio", "wav"
+        _synth(docs, "payload binary", make), "payload", "audio", "wav"
     )
-    metaed = MM.audio_meta(with_payload)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("n_frames", T.LongType()),
-            T.StructField("duration_ms", T.LongType()),
-            T.StructField("first_sample", T.IntegerType()),
-            T.StructField("min_sample", T.IntegerType()),
-            T.StructField("max_sample", T.IntegerType()),
-        ]
-    )
-
-    def decode_samples(batches):
-        import numpy as np
-
-        from parquet_editor_spark.sources.wav import decode_wav
-
-        for pdf in batches:
-            firsts, mins, maxs = [], [], []
-            for p in pdf["payload"]:
-                _r, _c, _b, _n, frames = decode_wav(bytes(p))
-                s = np.frombuffer(frames, dtype="<i2")
-                firsts.append(int(s[0]))
-                mins.append(int(s.min()))
-                maxs.append(int(s.max()))
-            pdf = pdf.copy()
-            pdf["first_sample"] = firsts
-            pdf["min_sample"] = mins
-            pdf["max_sample"] = maxs
-            yield pdf[[f.name for f in out_schema.fields]]
-
-    return metaed.mapInPandas(decode_samples, schema=out_schema).orderBy(
-        "doc_id"
+    return (
+        _sample_stats(MM.audio_meta(with_payload))
+        .select(
+            "doc_id", "sample_rate", "channels", "n_frames", "duration_ms",
+            "first_sample", "min_sample", "max_sample",
+        )
+        .orderBy("doc_id")
     )
 
 
@@ -1820,8 +1723,6 @@ def q_wav_g711_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_g711_code_points_roundtrip_exactly).  Spark runs the real
     np.take expansion through ``audio_meta`` + a sample-stats stage;
     the DuckDB oracle is closed-form on doc_id."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -1830,76 +1731,31 @@ def q_wav_g711_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 37 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         import numpy as np
 
         from parquet_editor_spark.sources.wav import encode_wav_g711
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                law = "a" if i % 3 == 0 else "mu"
-                mag = 16 * (i % 16) + 8 if law == "a" else 8 * (i % 16)
-                v = mag if i % 2 == 0 else -mag
-                ch = 1 + i % 2
-                n = 50 + (i * 7) % 1000
-                pcm = np.full(n * ch, v, dtype="<i2")
-                payloads.append(
-                    encode_wav_g711(
-                        8000 * (1 + i % 3), ch, pcm.tobytes(), law=law
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        law = "a" if i % 3 == 0 else "mu"
+        mag = 16 * (i % 16) + 8 if law == "a" else 8 * (i % 16)
+        v = mag if i % 2 == 0 else -mag
+        ch = 1 + i % 2
+        n = 50 + (i * 7) % 1000
+        pcm = np.full(n * ch, v, dtype="<i2")
+        return (
+            encode_wav_g711(8000 * (1 + i % 3), ch, pcm.tobytes(), law=law),
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema), "payload", "audio", "wav"
+        _synth(docs, "payload binary", make), "payload", "audio", "wav"
     )
-    metaed = MM.audio_meta(with_payload)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("n_frames", T.LongType()),
-            T.StructField("duration_ms", T.LongType()),
-            T.StructField("first_sample", T.IntegerType()),
-            T.StructField("min_sample", T.IntegerType()),
-            T.StructField("max_sample", T.IntegerType()),
-        ]
-    )
-
-    def decode_samples(batches):
-        import numpy as np
-
-        from parquet_editor_spark.sources.wav import decode_wav
-
-        for pdf in batches:
-            firsts, mins, maxs = [], [], []
-            for p in pdf["payload"]:
-                _r, _c, _b, _n, frames = decode_wav(bytes(p))
-                s = np.frombuffer(frames, dtype="<i2")
-                firsts.append(int(s[0]))
-                mins.append(int(s.min()))
-                maxs.append(int(s.max()))
-            pdf = pdf.copy()
-            pdf["first_sample"] = firsts
-            pdf["min_sample"] = mins
-            pdf["max_sample"] = maxs
-            yield pdf[[f.name for f in out_schema.fields]]
-
-    return metaed.mapInPandas(decode_samples, schema=out_schema).orderBy(
-        "doc_id"
+    return (
+        _sample_stats(MM.audio_meta(with_payload))
+        .select(
+            "doc_id", "sample_rate", "channels", "n_frames", "duration_ms",
+            "first_sample", "min_sample", "max_sample",
+        )
+        .orderBy("doc_id")
     )
 
 
@@ -1916,9 +1772,6 @@ def q_jpeg_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximation, exercising the multi-scan DC/AC refinement
     decode); every fourth baseline doc carries restart markers.
     Oracle: closed-form arithmetic on doc_id."""
-    import numpy as np
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -1927,14 +1780,7 @@ def q_jpeg_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 31 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         import numpy as np
 
         from parquet_editor_spark.sources.jpeg_codec import (
@@ -1946,36 +1792,28 @@ def q_jpeg_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             np.full(64, 8, dtype=np.int64),
             np.full(64, 8, dtype=np.int64),
         )
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                w = 8 + i % 120
-                h = 8 + (i * 3) % 90
-                v = (i * 17) % 256
-                if i % 3 == 0:
-                    payloads.append(
-                        encode_jpeg_progressive(
-                            w, h, 1, bytes([v]) * (w * h), quant_tables=qt
-                        )
-                    )
-                else:
-                    payloads.append(
-                        encode_jpeg_baseline(
-                            w,
-                            h,
-                            1,
-                            bytes([v]) * (w * h),
-                            quant_tables=qt,
-                            restart_interval=2 if i % 4 == 0 else 0,
-                        )
-                    )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        w = 8 + i % 120
+        h = 8 + (i * 3) % 90
+        v = (i * 17) % 256
+        if i % 3 == 0:
+            return (
+                encode_jpeg_progressive(
+                    w, h, 1, bytes([v]) * (w * h), quant_tables=qt
+                ),
+            )
+        return (
+            encode_jpeg_baseline(
+                w,
+                h,
+                1,
+                bytes([v]) * (w * h),
+                quant_tables=qt,
+                restart_interval=2 if i % 4 == 0 else 0,
+            ),
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema), "payload", "image", "jpeg"
+        _synth(docs, "payload binary", make), "payload", "image", "jpeg"
     )
     return (
         MM.image_pixel_stats(with_payload)
@@ -1997,8 +1835,6 @@ def q_gif_bmp_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     level, so the stats are closed-form: each row of the RGB-expanded
     output sums to 3·32640 regardless of the doc_id phase.  Runs the
     production ``image_pixel_stats`` stage (Arrow, executor-side)."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -2007,40 +1843,19 @@ def q_gif_bmp_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 43 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("codec", T.StringType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         from parquet_editor_spark.sources.bmp import encode_bmp
         from parquet_editor_spark.sources.gif import encode_gif
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads, codecs = [], []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                h = 3 + i % 14
-                row = bytes((x + i) % 256 for x in range(256))
-                pix = row * h
-                if i % 2 == 0:
-                    payloads.append(
-                        encode_gif(256, h, 1, pix, interlace=i % 3 == 0)
-                    )
-                    codecs.append("gif")
-                else:
-                    payloads.append(encode_bmp(256, h, 1, pix))
-                    codecs.append("bmp")
-            pdf["payload"] = payloads
-            pdf["codec"] = codecs
-            yield pdf[["doc_id", "payload", "codec"]]
+        h = 3 + i % 14
+        row = bytes((x + i) % 256 for x in range(256))
+        pix = row * h
+        if i % 2 == 0:
+            return encode_gif(256, h, 1, pix, interlace=i % 3 == 0), "gif"
+        return encode_bmp(256, h, 1, pix), "bmp"
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema),
+        _synth(docs, "payload binary, codec string", make),
         "payload",
         "image",
         F.col("codec"),
@@ -2066,8 +1881,6 @@ def q_multimodal_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form while Spark runs the full four-codec decode fan.
     Scale shape: projections + one Arrow stage, no shuffle before the
     final orderBy."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -2076,16 +1889,7 @@ def q_multimodal_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.length("text").cast("long").alias("text_len"))
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text_len", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("codec", T.StringType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, _text_len):
         import numpy as np
 
         from parquet_editor_spark.sources.bmp import encode_bmp
@@ -2099,36 +1903,26 @@ def q_multimodal_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
             np.full(64, 8, dtype=np.int64),
             np.full(64, 8, dtype=np.int64),
         )
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads, codecs = [], []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                w = 8 + i % 60
-                h = 8 + (i * 3) % 40
-                v = (i * 29) % 256
-                pix = bytes([v]) * (w * h)
-                k = i % 4
-                if k == 0:
-                    payloads.append(encode_png(w, h, 1, pix))
-                    codecs.append("png")
-                elif k == 1:
-                    payloads.append(
-                        encode_jpeg_baseline(w, h, 1, pix, quant_tables=qt)
-                    )
-                    codecs.append("jpeg")
-                elif k == 2:
-                    payloads.append(encode_gif(w, h, 1, pix))
-                    codecs.append("gif")
-                else:
-                    payloads.append(encode_bmp(w, h, 1, pix))
-                    codecs.append("bmp")
-            pdf["payload"] = payloads
-            pdf["codec"] = codecs
-            yield pdf[["doc_id", "text_len", "payload", "codec"]]
+        w = 8 + i % 60
+        h = 8 + (i * 3) % 40
+        v = (i * 29) % 256
+        pix = bytes([v]) * (w * h)
+        k = i % 4
+        if k == 0:
+            return encode_png(w, h, 1, pix), "png"
+        if k == 1:
+            return encode_jpeg_baseline(w, h, 1, pix, quant_tables=qt), "jpeg"
+        if k == 2:
+            return encode_gif(w, h, 1, pix), "gif"
+        return encode_bmp(w, h, 1, pix), "bmp"
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema),
+        _synth(
+            docs,
+            "payload binary, codec string",
+            make,
+            keep=("doc_id", "text_len"),
+        ),
         "payload",
         "image",
         F.col("codec"),
@@ -2166,8 +1960,6 @@ def q_multimodal_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: projections + one Arrow stage, no shuffle before
     the presentation sort; WebP/JPEG rows cost O(header) — the tier
     a 100 TB image crawl actually runs before any pixel work."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -2176,16 +1968,7 @@ def q_multimodal_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.length("text").cast("long").alias("text_len"))
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text_len", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("codec", T.StringType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, _text_len):
         import numpy as np
 
         from parquet_editor_spark.sources.bmp import encode_bmp
@@ -2205,50 +1988,35 @@ def q_multimodal_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
             np.full(64, 8, dtype=np.int64),
             np.full(64, 8, dtype=np.int64),
         )
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads, codecs = [], []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                w = 8 + (i * 7) % 120
-                h = 8 + (i * 11) % 120
-                v = (i * 31) % 256
-                pix = bytes([v]) * (w * h)
-                k = i % 6
-                if k == 0:
-                    payloads.append(encode_png(w, h, 1, pix))
-                    codecs.append("png")
-                elif k == 1:
-                    payloads.append(
-                        encode_jpeg_baseline(w, h, 1, pix, quant_tables=qt)
-                    )
-                    codecs.append("jpeg")
-                elif k == 2:
-                    payloads.append(encode_gif(w, h, 1, pix))
-                    codecs.append("gif")
-                elif k == 3:
-                    payloads.append(encode_bmp(w, h, 1, pix))
-                    codecs.append("bmp")
-                elif k == 4:
-                    payloads.append(
-                        encode_tiff(w, h, 1, pix, compression=5)
-                    )
-                    codecs.append("tiff")
-                else:
-                    sub = (i // 6) % 3
-                    if sub == 0:
-                        payloads.append(make_webp_lossy(w, h))
-                    elif sub == 1:
-                        payloads.append(make_webp_lossless(w, h))
-                    else:
-                        payloads.append(make_webp_extended(w, h))
-                    codecs.append("webp")
-            pdf["payload"] = payloads
-            pdf["codec"] = codecs
-            yield pdf[["doc_id", "text_len", "payload", "codec"]]
+        w = 8 + (i * 7) % 120
+        h = 8 + (i * 11) % 120
+        v = (i * 31) % 256
+        pix = bytes([v]) * (w * h)
+        k = i % 6
+        if k == 0:
+            return encode_png(w, h, 1, pix), "png"
+        if k == 1:
+            return encode_jpeg_baseline(w, h, 1, pix, quant_tables=qt), "jpeg"
+        if k == 2:
+            return encode_gif(w, h, 1, pix), "gif"
+        if k == 3:
+            return encode_bmp(w, h, 1, pix), "bmp"
+        if k == 4:
+            return encode_tiff(w, h, 1, pix, compression=5), "tiff"
+        sub = (i // 6) % 3
+        if sub == 0:
+            return make_webp_lossy(w, h), "webp"
+        if sub == 1:
+            return make_webp_lossless(w, h), "webp"
+        return make_webp_extended(w, h), "webp"
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema),
+        _synth(
+            docs,
+            "payload binary, codec string",
+            make,
+            keep=("doc_id", "text_len"),
+        ),
         "payload",
         "image",
         F.col("codec"),
@@ -2282,8 +2050,6 @@ def q_audio_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     the keep/drop decision.  Every branch reuses a doc_id formula
     already proven by its own codec query, so the oracle is
     closed-form CASE arithmetic."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -2292,18 +2058,9 @@ def q_audio_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.length("text").cast("long").alias("text_len"))
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text_len", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("codec", T.StringType()),
-        ]
-    )
-
     _RATES9 = (44100, 48000, 32000, 22050, 24000, 16000, 11025, 12000, 8000)
 
-    def gen(batches):
+    def make(i, _text_len):
         import numpy as np
 
         from parquet_editor_spark.sources.flac import make_flac_header
@@ -2313,57 +2070,46 @@ def q_audio_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_wav_adpcm,
         )
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads, codecs = [], []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                k = i % 4
-                if k == 0:
-                    ch = 1 + i % 2
-                    n = 200 + (i * 7) % 900
-                    payloads.append(
-                        encode_wav(
-                            8000 + (i % 5) * 2000, ch, 16,
-                            bytes(2 * ch * n),
-                        )
-                    )
-                    codecs.append("wav")
-                elif k == 1:
-                    payloads.append(
-                        make_flac_header(
-                            8000 + (i % 11) * 4000,
-                            1 + i % 8,
-                            16,
-                            1000 + (i * 37) % 100000,
-                        )
-                    )
-                    codecs.append("flac")
-                elif k == 2:
-                    rate = _RATES9[i % 9]
-                    kbps = 128 if i % 9 < 3 else 64
-                    payloads.append(
-                        make_mp3(
-                            rate, 1 + i % 2, 3 + (i * 7) % 40, kbps
-                        )
-                    )
-                    codecs.append("mp3")
-                else:
-                    ch = 1 + i % 2
-                    n = 100 + (i * 3) % 1500
-                    pcm = np.zeros(n * ch, dtype="<i2")
-                    payloads.append(
-                        encode_wav_adpcm(
-                            8000 + (i % 4) * 4000, ch, pcm.tobytes()
-                        )
-                    )
-                    codecs.append("wav")
-            pdf["payload"] = payloads
-            pdf["codec"] = codecs
-            yield pdf[["doc_id", "text_len", "payload", "codec"]]
+        k = i % 4
+        if k == 0:
+            ch = 1 + i % 2
+            n = 200 + (i * 7) % 900
+            return (
+                encode_wav(
+                    8000 + (i % 5) * 2000, ch, 16,
+                    bytes(2 * ch * n),
+                ),
+                "wav",
+            )
+        if k == 1:
+            return (
+                make_flac_header(
+                    8000 + (i % 11) * 4000,
+                    1 + i % 8,
+                    16,
+                    1000 + (i * 37) % 100000,
+                ),
+                "flac",
+            )
+        if k == 2:
+            rate = _RATES9[i % 9]
+            kbps = 128 if i % 9 < 3 else 64
+            return make_mp3(rate, 1 + i % 2, 3 + (i * 7) % 40, kbps), "mp3"
+        ch = 1 + i % 2
+        n = 100 + (i * 3) % 1500
+        pcm = np.zeros(n * ch, dtype="<i2")
+        return (
+            encode_wav_adpcm(8000 + (i % 4) * 4000, ch, pcm.tobytes()),
+            "wav",
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema),
+        _synth(
+            docs,
+            "payload binary, codec string",
+            make,
+            keep=("doc_id", "text_len"),
+        ),
         "payload",
         "audio",
         F.col("codec"),
@@ -2407,8 +2153,6 @@ def q_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: generation, encode, meta and decode are all Arrow
     ``mapInPandas`` projections — payload bytes never leave the
     executors, no shuffle except the final presentation sort."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -2417,84 +2161,39 @@ def q_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 31 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         import numpy as np
 
         from parquet_editor_spark.sources.flac_codec import encode_flac
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                ch = 1 + i % 2
-                rate = 8000 + (i % 5) * 8000
-                n = 256 * (1 + i % 8)
-                phase = i % 256
-                d = i % 100 - 50
-                t = np.arange(n * ch, dtype=np.int64)
-                sig = (((t + phase) % 256) * 256 - 32640 + d).reshape(
-                    n, ch
-                )
-                payloads.append(
-                    encode_flac(
-                        rate,
-                        ch,
-                        16,
-                        sig,
-                        block_size=1024,
-                        stereo="mid-side" if ch == 2 else "independent",
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        ch = 1 + i % 2
+        rate = 8000 + (i % 5) * 8000
+        n = 256 * (1 + i % 8)
+        phase = i % 256
+        d = i % 100 - 50
+        t = np.arange(n * ch, dtype=np.int64)
+        sig = (((t + phase) % 256) * 256 - 32640 + d).reshape(n, ch)
+        return (
+            encode_flac(
+                rate,
+                ch,
+                16,
+                sig,
+                block_size=1024,
+                stereo="mid-side" if ch == 2 else "independent",
+            ),
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema), "payload", "audio", "flac"
+        _synth(docs, "payload binary", make), "payload", "audio", "flac"
     )
-    metaed = MM.audio_meta(with_payload)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("n_frames", T.LongType()),
-            T.StructField("duration_ms", T.LongType()),
-            T.StructField("first_sample", T.IntegerType()),
-            T.StructField("min_sample", T.IntegerType()),
-            T.StructField("max_sample", T.IntegerType()),
-            T.StructField("sum_samples", T.LongType()),
-        ]
-    )
-
-    def decode_samples(batches):
-        from parquet_editor_spark.sources.flac_codec import decode_flac
-
-        for pdf in batches:
-            firsts, mins, maxs, sums = [], [], [], []
-            for p in pdf["payload"]:
-                _r, _c, _b, _n, s = decode_flac(bytes(p))
-                firsts.append(int(s[0, 0]))
-                mins.append(int(s.min()))
-                maxs.append(int(s.max()))
-                sums.append(int(s.sum()))
-            pdf = pdf.copy()
-            pdf["first_sample"] = firsts
-            pdf["min_sample"] = mins
-            pdf["max_sample"] = maxs
-            pdf["sum_samples"] = sums
-            yield pdf[[f.name for f in out_schema.fields]]
-
-    return metaed.mapInPandas(decode_samples, schema=out_schema).orderBy(
-        "doc_id"
+    return (
+        _sample_stats(MM.audio_meta(with_payload))
+        .select(
+            "doc_id", "sample_rate", "channels", "n_frames", "duration_ms",
+            "first_sample", "min_sample", "max_sample", "sum_samples",
+        )
+        .orderBy("doc_id")
     )
 
 
@@ -2517,7 +2216,6 @@ def q_mp4_frame_index_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``mapInPandas`` (row expansion inside the executor); the only
     shuffle is the per-doc window for the relative offset — bounded
     by the final result size."""
-    from pyspark.sql import types as T
     from pyspark.sql.window import Window
 
     from parquet_editor_spark.operators import multimodal as MM
@@ -2528,42 +2226,26 @@ def q_mp4_frame_index_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 23 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         from parquet_editor_spark.sources.mp4 import (
             make_mp4_with_samples,
         )
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                n = 5 + i % 20
-                ts = 600 + (i % 3) * 200
-                payloads.append(
-                    make_mp4_with_samples(
-                        ts,
-                        deltas=[30 + ((i + j) % 3) for j in range(n)],
-                        sizes=[
-                            100 + ((i + 7 * j) % 50) for j in range(n)
-                        ],
-                        sync=[j + 1 for j in range(n) if j % 5 == 0],
-                        ctts_offsets=[(j % 4) * 10 for j in range(n)],
-                        samples_per_chunk=4,
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        n = 5 + i % 20
+        ts = 600 + (i % 3) * 200
+        return (
+            make_mp4_with_samples(
+                ts,
+                deltas=[30 + ((i + j) % 3) for j in range(n)],
+                sizes=[100 + ((i + 7 * j) % 50) for j in range(n)],
+                sync=[j + 1 for j in range(n) if j % 5 == 0],
+                ctts_offsets=[(j % 4) * 10 for j in range(n)],
+                samples_per_chunk=4,
+            ),
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema), "payload", "video", "mp4"
+        _synth(docs, "payload binary", make), "payload", "video", "mp4"
     )
     indexed = MM.video_frame_index(with_payload)
     w = Window.partitionBy("doc_id")
@@ -2598,8 +2280,6 @@ def q_ogg_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: Arrow ``mapInPandas`` projections end-to-end, bytes
     executor-side, O(pages) per clip, no shuffle except the
     presentation sort."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -2608,52 +2288,35 @@ def q_ogg_meta_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 19 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("codec", T.StringType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         from parquet_editor_spark.sources.ogg import (
             make_ogg_opus,
             make_ogg_vorbis,
         )
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads, codecs = [], []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                pages = 1 + i % 4
-                if i % 2 == 0:
-                    payloads.append(
-                        make_ogg_opus(
-                            channels=1 + (i // 2) % 2,
-                            pre_skip=100 + i % 300,
-                            n_frames=4800 * (1 + i % 5),
-                            n_audio_pages=pages,
-                        )
-                    )
-                    codecs.append("opus")
-                else:
-                    payloads.append(
-                        make_ogg_vorbis(
-                            channels=1 + (i // 2) % 2,
-                            sample_rate=8000 * (1 + i % 4),
-                            n_frames=1000 * (1 + i % 7),
-                            n_audio_pages=pages,
-                        )
-                    )
-                    codecs.append("vorbis")
-            pdf["payload"] = payloads
-            pdf["codec"] = codecs
-            yield pdf[["doc_id", "payload", "codec"]]
+        pages = 1 + i % 4
+        if i % 2 == 0:
+            return (
+                make_ogg_opus(
+                    channels=1 + (i // 2) % 2,
+                    pre_skip=100 + i % 300,
+                    n_frames=4800 * (1 + i % 5),
+                    n_audio_pages=pages,
+                ),
+                "opus",
+            )
+        return (
+            make_ogg_vorbis(
+                channels=1 + (i // 2) % 2,
+                sample_rate=8000 * (1 + i % 4),
+                n_frames=1000 * (1 + i % 7),
+                n_audio_pages=pages,
+            ),
+            "vorbis",
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema),
+        _synth(docs, "payload binary, codec string", make),
         "payload",
         "audio",
         F.col("codec"),
@@ -2690,8 +2353,6 @@ def q_image_dedup_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: hashing is an Arrow projection (bytes stay on
     executors); the pair join shuffles only (id, hash, block_key)
     triples — the image-corpus analogue of the MinHash-LSH shape."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import dedup as DD
     from parquet_editor_spark.operators import multimodal as MM
 
@@ -2701,55 +2362,38 @@ def q_image_dedup_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 37 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    M = (1 << 64) - 1
 
-    def gen(batches):
+    def mix(x: int) -> int:
+        x = (x + 0x9E3779B97F4A7C15) & M
+        x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & M
+        x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & M
+        return x ^ (x >> 31)
+
+    def grid(bits64: int) -> bytes:
+        rows = []
+        for r in range(8):
+            v = 128
+            rows.append(v)
+            for c in range(8):
+                bit = (bits64 >> (63 - (r * 8 + c))) & 1
+                v = v + 8 if bit else v - 8
+                rows.append(v)
+        return bytes(rows)
+
+    def make(i):
         import numpy as np
 
         from parquet_editor_spark.sources.png import encode_png
 
-        M = (1 << 64) - 1
-
-        def mix(x: int) -> int:
-            x = (x + 0x9E3779B97F4A7C15) & M
-            x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & M
-            x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & M
-            return x ^ (x >> 31)
-
-        def grid(bits64: int) -> bytes:
-            rows = []
-            for r in range(8):
-                v = 128
-                rows.append(v)
-                for c in range(8):
-                    bit = (bits64 >> (63 - (r * 8 + c))) & 1
-                    v = v + 8 if bit else v - 8
-                    rows.append(v)
-            return bytes(rows)
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                gray = grid(mix(i // 74))
-                if (i // 37) % 2 == 0:
-                    payloads.append(encode_png(9, 8, 1, gray))
-                else:
-                    rgb = bytes(
-                        np.repeat(np.frombuffer(gray, np.uint8), 3)
-                    )
-                    payloads.append(encode_png(9, 8, 3, rgb))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        gray = grid(mix(i // 74))
+        if (i // 37) % 2 == 0:
+            return (encode_png(9, 8, 1, gray),)
+        rgb = bytes(np.repeat(np.frombuffer(gray, np.uint8), 3))
+        return (encode_png(9, 8, 3, rgb),)
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema), "payload", "image", "png"
+        _synth(docs, "payload binary", make), "payload", "image", "png"
     )
     hashed = MM.image_dhash(with_payload)
     return (
@@ -2791,8 +2435,6 @@ def q_image_dedup_clusters(
     label propagation converges in one round on diameter-1 duplicate
     cliques and every iteration is a (small) pair-table join —
     nothing corpus-sized beyond the id/hash columns moves."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import dedup as DD
     from parquet_editor_spark.operators import multimodal as MM
 
@@ -2802,55 +2444,38 @@ def q_image_dedup_clusters(
         .filter(F.col("doc_id") % 37 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    M = (1 << 64) - 1
 
-    def gen(batches):
+    def mix(x: int) -> int:
+        x = (x + 0x9E3779B97F4A7C15) & M
+        x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & M
+        x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & M
+        return x ^ (x >> 31)
+
+    def grid(bits64: int) -> bytes:
+        rows = []
+        for r in range(8):
+            v = 128
+            rows.append(v)
+            for c in range(8):
+                bit = (bits64 >> (63 - (r * 8 + c))) & 1
+                v = v + 8 if bit else v - 8
+                rows.append(v)
+        return bytes(rows)
+
+    def make(i):
         import numpy as np
 
         from parquet_editor_spark.sources.png import encode_png
 
-        M = (1 << 64) - 1
-
-        def mix(x: int) -> int:
-            x = (x + 0x9E3779B97F4A7C15) & M
-            x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & M
-            x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & M
-            return x ^ (x >> 31)
-
-        def grid(bits64: int) -> bytes:
-            rows = []
-            for r in range(8):
-                v = 128
-                rows.append(v)
-                for c in range(8):
-                    bit = (bits64 >> (63 - (r * 8 + c))) & 1
-                    v = v + 8 if bit else v - 8
-                    rows.append(v)
-            return bytes(rows)
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                gray = grid(mix(i // 148))
-                if (i // 37) % 2 == 0:
-                    payloads.append(encode_png(9, 8, 1, gray))
-                else:
-                    rgb = bytes(
-                        np.repeat(np.frombuffer(gray, np.uint8), 3)
-                    )
-                    payloads.append(encode_png(9, 8, 3, rgb))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        gray = grid(mix(i // 148))
+        if (i // 37) % 2 == 0:
+            return (encode_png(9, 8, 1, gray),)
+        rgb = bytes(np.repeat(np.frombuffer(gray, np.uint8), 3))
+        return (encode_png(9, 8, 3, rgb),)
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema), "payload", "image", "png"
+        _synth(docs, "payload binary", make), "payload", "image", "png"
     )
     hashed = MM.image_dhash(with_payload)
     pairs = DD.hamming_pairs(hashed, "doc_id", "dhash", max_hamming=3)
@@ -2889,8 +2514,6 @@ def q_audio_segments_docs(
     RELATIONALLY from the closed-form block pattern (islands over a
     generated block series), so decode and segmentation defects both
     diverge."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -2899,57 +2522,32 @@ def q_audio_segments_docs(
         .filter(F.col("doc_id") % 29 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("codec", T.StringType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         import numpy as np
 
         from parquet_editor_spark.sources.flac_codec import encode_flac
         from parquet_editor_spark.sources.wav import encode_wav
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads, codecs = [], []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                nb = 4 + i % 3
-                a = 18000 + (i % 11) * 100
-                q = 40 + i % 5
-                blocks = [
-                    np.full(
-                        512,
-                        a if (b + i) % 3 != 2 else q,
-                        dtype=np.int64,
-                    )
-                    for b in range(nb)
-                ]
-                sig = np.concatenate(blocks)
-                if i % 2 == 0:
-                    payloads.append(
-                        encode_wav(
-                            16000, 1, 16,
-                            sig.astype("<i2").tobytes(),
-                        )
-                    )
-                    codecs.append("wav")
-                else:
-                    payloads.append(
-                        encode_flac(
-                            16000, 1, 16, sig.reshape(-1, 1)
-                        )
-                    )
-                    codecs.append("flac")
-            pdf["payload"] = payloads
-            pdf["codec"] = codecs
-            yield pdf[["doc_id", "payload", "codec"]]
+        nb = 4 + i % 3
+        a = 18000 + (i % 11) * 100
+        q = 40 + i % 5
+        blocks = [
+            np.full(
+                512,
+                a if (b + i) % 3 != 2 else q,
+                dtype=np.int64,
+            )
+            for b in range(nb)
+        ]
+        sig = np.concatenate(blocks)
+        if i % 2 == 0:
+            return (
+                encode_wav(16000, 1, 16, sig.astype("<i2").tobytes()),
+                "wav",
+            )
+        return encode_flac(16000, 1, 16, sig.reshape(-1, 1)), "flac"
 
-    clips = docs.mapInPandas(gen, schema=gen_schema)
+    clips = _synth(docs, "payload binary, codec string", make)
     return (
         MM.audio_segments(
             clips, frame=256, energy_threshold=1000
@@ -2974,8 +2572,6 @@ def q_audio_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: Arrow ``mapInPandas`` end-to-end, O(samples) per
     clip executor-side, no shuffle except the presentation sort."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -2984,58 +2580,37 @@ def q_audio_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 27 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("codec", T.StringType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         import numpy as np
 
         from parquet_editor_spark.sources.flac_codec import encode_flac
         from parquet_editor_spark.sources.wav import encode_wav
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads, codecs = [], []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                ch = 1 + (i // 2) % 2
-                rate = 8000 + (i % 5) * 8000
-                n = 256 * (1 + i % 8)
-                phase = i % 256
-                d = i % 100 - 50
-                t = np.arange(n * ch, dtype=np.int64)
-                sig = ((t + phase) % 256) * 256 - 32640 + d
-                if i % 2 == 0:
-                    payloads.append(
-                        encode_wav(
-                            rate, ch, 16, sig.astype("<i2").tobytes()
-                        )
-                    )
-                    codecs.append("wav")
-                else:
-                    payloads.append(
-                        encode_flac(
-                            rate,
-                            ch,
-                            16,
-                            sig.reshape(n, ch),
-                            stereo="mid-side"
-                            if ch == 2
-                            else "independent",
-                        )
-                    )
-                    codecs.append("flac")
-            pdf["payload"] = payloads
-            pdf["codec"] = codecs
-            yield pdf[["doc_id", "payload", "codec"]]
+        ch = 1 + (i // 2) % 2
+        rate = 8000 + (i % 5) * 8000
+        n = 256 * (1 + i % 8)
+        phase = i % 256
+        d = i % 100 - 50
+        t = np.arange(n * ch, dtype=np.int64)
+        sig = ((t + phase) % 256) * 256 - 32640 + d
+        if i % 2 == 0:
+            return (
+                encode_wav(rate, ch, 16, sig.astype("<i2").tobytes()),
+                "wav",
+            )
+        return (
+            encode_flac(
+                rate,
+                ch,
+                16,
+                sig.reshape(n, ch),
+                stereo="mid-side" if ch == 2 else "independent",
+            ),
+            "flac",
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema),
+        _synth(docs, "payload binary, codec string", make),
         "payload",
         "audio",
         F.col("codec"),
@@ -3068,8 +2643,6 @@ def q_tiff_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     256-pixel row sums to 32640 per channel.  Runs the production
     ``image_pixel_stats`` stage (Arrow, executor-side), same shape as
     the r9 GIF/BMP query."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3078,46 +2651,30 @@ def q_tiff_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 39 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         from parquet_editor_spark.sources.tiff import encode_tiff
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                h = 3 + i % 11
-                ch = 3 if i % 5 == 0 else 1
-                row = bytes((x + i) % 256 for x in range(256))
-                if ch == 3:
-                    pix = b"".join(
-                        bytes([v, v, v]) for v in row
-                    ) * h
-                else:
-                    pix = row * h
-                payloads.append(
-                    encode_tiff(
-                        256,
-                        h,
-                        ch,
-                        pix,
-                        compression=[1, 32773, 5][i % 3],
-                        rows_per_strip=4,
-                        big_endian=i % 2 == 1,
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        h = 3 + i % 11
+        ch = 3 if i % 5 == 0 else 1
+        row = bytes((x + i) % 256 for x in range(256))
+        if ch == 3:
+            pix = b"".join(bytes([v, v, v]) for v in row) * h
+        else:
+            pix = row * h
+        return (
+            encode_tiff(
+                256,
+                h,
+                ch,
+                pix,
+                compression=[1, 32773, 5][i % 3],
+                rows_per_strip=4,
+                big_endian=i % 2 == 1,
+            ),
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema), "payload", "image", "tiff"
+        _synth(docs, "payload binary", make), "payload", "image", "tiff"
     )
     return (
         MM.image_pixel_stats(with_payload)
@@ -3145,8 +2702,6 @@ def q_avi_mjpeg_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: generation and decode are Arrow ``mapInPandas`` (row
     expansion inside the executor, ≤3 rows per clip); payload bytes
     never shuffle — only scalar stats reach the sort."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3155,14 +2710,7 @@ def q_avi_mjpeg_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 33 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         import numpy as np
 
         from parquet_editor_spark.sources.avi import encode_avi_mjpeg
@@ -3174,30 +2722,23 @@ def q_avi_mjpeg_decode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             np.full(64, 8, dtype=np.int64),
             np.full(64, 8, dtype=np.int64),
         )
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                w = 12 + i % 49
-                h = 10 + (i * 3) % 37
-                n = 2 + i % 4
-                frames = [
-                    encode_jpeg_baseline(
-                        w,
-                        h,
-                        1,
-                        bytes([(i * 13 + j * 71) % 256]) * (w * h),
-                        quant_tables=qt,
-                    )
-                    for j in range(n)
-                ]
-                payloads.append(encode_avi_mjpeg(w, h, (30, 1), frames))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        w = 12 + i % 49
+        h = 10 + (i * 3) % 37
+        n = 2 + i % 4
+        frames = [
+            encode_jpeg_baseline(
+                w,
+                h,
+                1,
+                bytes([(i * 13 + j * 71) % 256]) * (w * h),
+                quant_tables=qt,
+            )
+            for j in range(n)
+        ]
+        return (encode_avi_mjpeg(w, h, (30, 1), frames),)
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema), "payload", "video", "avi"
+        _synth(docs, "payload binary", make), "payload", "video", "avi"
     )
     return (
         MM.video_frame_stats(with_payload, k=3)
@@ -3224,8 +2765,6 @@ def q_video_scene_cuts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: O(frames × samples) numpy work inside the executor;
     only (clip × transitions) scalar rows shuffle for the sort."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3234,15 +2773,7 @@ def q_video_scene_cuts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 49 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("codec", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         import numpy as np
 
         from parquet_editor_spark.sources.avi import encode_avi_mjpeg
@@ -3255,47 +2786,30 @@ def q_video_scene_cuts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             np.full(64, 8, dtype=np.int64),
             np.full(64, 8, dtype=np.int64),
         )
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads, codecs = [], []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                w = 8 + (i % 6) * 2
-                h = 6 + (i % 4) * 2
-                n = 3 + i % 4
-                m = 1 + i % (n - 1)
-                a = (i * 19) % 256
-                b = (i * 19 + 97) % 256
-                vals = [a if j < m else b for j in range(n)]
-                if i % 2 == 0:
-                    fb = w * h * 3 // 2
-                    payloads.append(
-                        encode_y4m(
-                            w, h, (25, 1),
-                            [bytes([v]) * fb for v in vals],
-                        )
-                    )
-                    codecs.append("y4m")
-                else:
-                    payloads.append(
-                        encode_avi_mjpeg(
-                            w, h, (25, 1),
-                            [
-                                encode_jpeg_baseline(
-                                    w, h, 1, bytes([v]) * (w * h),
-                                    quant_tables=qt,
-                                )
-                                for v in vals
-                            ],
-                        )
-                    )
-                    codecs.append("avi")
-            pdf["payload"] = payloads
-            pdf["codec"] = codecs
-            yield pdf[["doc_id", "codec", "payload"]]
+        w = 8 + (i % 6) * 2
+        h = 6 + (i % 4) * 2
+        n = 3 + i % 4
+        m = 1 + i % (n - 1)
+        a = (i * 19) % 256
+        b = (i * 19 + 97) % 256
+        vals = [a if j < m else b for j in range(n)]
+        if i % 2 == 0:
+            fb = w * h * 3 // 2
+            return "y4m", encode_y4m(
+                w, h, (25, 1), [bytes([v]) * fb for v in vals]
+            )
+        return "avi", encode_avi_mjpeg(
+            w, h, (25, 1),
+            [
+                encode_jpeg_baseline(
+                    w, h, 1, bytes([v]) * (w * h), quant_tables=qt
+                )
+                for v in vals
+            ],
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema),
+        _synth(docs, "codec string, payload binary", make),
         "payload",
         "video",
         F.col("codec"),
@@ -3322,8 +2836,6 @@ def q_jpeg_exif_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the executors.  Every fourth doc omits the APP1 entirely,
     pinning the all-None missing-metadata path.  All fields are
     closed-form arithmetic/format on doc_id."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3332,47 +2844,30 @@ def q_jpeg_exif_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 51 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         from parquet_editor_spark.sources.exif import (
             insert_app1,
             make_exif_app1,
         )
         from parquet_editor_spark.sources.jpeg import make_jpeg_header
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                base = make_jpeg_header(32 + i % 64, 24 + i % 48, 3)
-                if i % 4 == 0:
-                    payloads.append(base)  # no EXIF: all-None row
-                    continue
-                app1 = make_exif_app1(
-                    make=f"Maker{i % 7}",
-                    model=f"Cam-{i % 13}",
-                    orientation=1 + i % 8,
-                    datetime=(
-                        f"2024:{1 + i % 12:02d}:{1 + i % 28:02d} 10:30:00"
-                    ),
-                    exif_w=640 + i % 1280,
-                    exif_h=480 + i % 960,
-                    iso=100 * (1 + i % 32),
-                    big_endian=i % 2 == 1,
-                )
-                payloads.append(insert_app1(base, app1))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        base = make_jpeg_header(32 + i % 64, 24 + i % 48, 3)
+        if i % 4 == 0:
+            return (base,)  # no EXIF: all-None row
+        app1 = make_exif_app1(
+            make=f"Maker{i % 7}",
+            model=f"Cam-{i % 13}",
+            orientation=1 + i % 8,
+            datetime=f"2024:{1 + i % 12:02d}:{1 + i % 28:02d} 10:30:00",
+            exif_w=640 + i % 1280,
+            exif_h=480 + i % 960,
+            iso=100 * (1 + i % 32),
+            big_endian=i % 2 == 1,
+        )
+        return (insert_app1(base, app1),)
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema), "payload", "image", "jpeg"
+        _synth(docs, "payload binary", make), "payload", "image", "jpeg"
     )
     return (
         MM.image_exif(with_payload)
@@ -3407,8 +2902,6 @@ def q_video_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar-only rows (AQE picks broadcast at these sizes; at 100 TB
     the three stages fuse over one scan per signal and the join
     shuffles only scalars, never payload bytes)."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3417,15 +2910,7 @@ def q_video_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 57 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("codec", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         import numpy as np
 
         from parquet_editor_spark.sources.avi import encode_avi_mjpeg
@@ -3438,52 +2923,35 @@ def q_video_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
             np.full(64, 8, dtype=np.int64),
             np.full(64, 8, dtype=np.int64),
         )
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads, codecs = [], []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                w = 8 + (i % 5) * 2
-                h = 6 + (i % 3) * 2
-                n = 2 + i % 6
-                a = (i * 23) % 256
-                b = (a + 120) % 256
-                if i % 5 == 0:
-                    vals = [a] * n  # single scene
-                elif i % 7 == 0:
-                    vals = [a if j % 2 == 0 else b for j in range(n)]
-                else:
-                    m = 1 + i % max(n - 1, 1)
-                    vals = [a if j < m else b for j in range(n)]
-                if i % 2 == 0:
-                    fb = w * h * 3 // 2
-                    payloads.append(
-                        encode_y4m(
-                            w, h, (25, 1),
-                            [bytes([v]) * fb for v in vals],
-                        )
-                    )
-                    codecs.append("y4m")
-                else:
-                    payloads.append(
-                        encode_avi_mjpeg(
-                            w, h, (25, 1),
-                            [
-                                encode_jpeg_baseline(
-                                    w, h, 1, bytes([v]) * (w * h),
-                                    quant_tables=qt,
-                                )
-                                for v in vals
-                            ],
-                        )
-                    )
-                    codecs.append("avi")
-            pdf["payload"] = payloads
-            pdf["codec"] = codecs
-            yield pdf[["doc_id", "codec", "payload"]]
+        w = 8 + (i % 5) * 2
+        h = 6 + (i % 3) * 2
+        n = 2 + i % 6
+        a = (i * 23) % 256
+        b = (a + 120) % 256
+        if i % 5 == 0:
+            vals = [a] * n  # single scene
+        elif i % 7 == 0:
+            vals = [a if j % 2 == 0 else b for j in range(n)]
+        else:
+            m = 1 + i % max(n - 1, 1)
+            vals = [a if j < m else b for j in range(n)]
+        if i % 2 == 0:
+            fb = w * h * 3 // 2
+            return "y4m", encode_y4m(
+                w, h, (25, 1), [bytes([v]) * fb for v in vals]
+            )
+        return "avi", encode_avi_mjpeg(
+            w, h, (25, 1),
+            [
+                encode_jpeg_baseline(
+                    w, h, 1, bytes([v]) * (w * h), quant_tables=qt
+                )
+                for v in vals
+            ],
+        )
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema),
+        _synth(docs, "codec string, payload binary", make),
         "payload",
         "video",
         F.col("codec"),
@@ -3540,8 +3008,6 @@ def q_warc_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: build + parse are Arrow ``mapInPandas`` over the
     same partition (archive bytes never shuffle); only the extracted
     scalar rows reach the sort."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3550,43 +3016,27 @@ def q_warc_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 59 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, text):
         from parquet_editor_spark.sources.warc import make_warc
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                recs = [
-                    {
-                        "warc_type": "warcinfo",
-                        "content_type": "application/warc-fields",
-                        "payload": "software: parquet_editor_spark\r\n",
-                    }
-                ] + [
-                    {
-                        "warc_type": "response",
-                        "target_uri": f"https://example.org/{i}/{j}",
-                        "content_type": "text/plain",
-                        "payload": text or "",
-                    }
-                    for j in range(1, 2 + i % 3)
-                ]
-                payloads.append(
-                    make_warc(recs, gzip_members=i % 2 == 1)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        recs = [
+            {
+                "warc_type": "warcinfo",
+                "content_type": "application/warc-fields",
+                "payload": "software: parquet_editor_spark\r\n",
+            }
+        ] + [
+            {
+                "warc_type": "response",
+                "target_uri": f"https://example.org/{i}/{j}",
+                "content_type": "text/plain",
+                "payload": text or "",
+            }
+            for j in range(1, 2 + i % 3)
+        ]
+        return (make_warc(recs, gzip_members=i % 2 == 1),)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = _synth(docs, "payload binary", make)
     return (
         MM.warc_records(with_payload)
         .select(
@@ -3617,8 +3067,6 @@ def q_zip_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: build + parse are Arrow ``mapInPandas`` in the same
     partition; archive bytes never shuffle."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3627,32 +3075,15 @@ def q_zip_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 61 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, text):
         from parquet_editor_spark.sources.ziparc import make_zip
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                members = [
-                    (f"docs/{i}/{j}.txt", text or "")
-                    for j in range(2 + i % 3)
-                ]
-                payloads.append(
-                    make_zip(members, compress=i % 2 == 0)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        members = [
+            (f"docs/{i}/{j}.txt", text or "") for j in range(2 + i % 3)
+        ]
+        return (make_zip(members, compress=i % 2 == 0),)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = _synth(docs, "payload binary", make)
     return (
         MM.zip_members(with_payload)
         .select(
@@ -3677,8 +3108,6 @@ def q_subtitle_cues_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     milliseconds, executor-side.  The round trip crosses the
     HH:MM:SS,mmm formatting in both directions, so a single
     ms-arithmetic slip fails closed-form."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3687,46 +3116,27 @@ def q_subtitle_cues_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 63 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("fmt", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         from parquet_editor_spark.sources.subtitles import (
             make_srt,
             make_vtt,
         )
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads, fmts = [], []
-            for raw in pdf["doc_id"]:
-                i = int(raw)
-                cues = [
-                    {
-                        "start_ms": j * 1500 + (i % 7) * 13,
-                        "end_ms": j * 1500 + (i % 7) * 13
-                        + 800 + (i % 11) * 10,
-                        "text": f"cue {i}-{j} caption",
-                    }
-                    for j in range(2 + i % 4)
-                ]
-                if i % 2 == 0:
-                    payloads.append(make_srt(cues).encode())
-                    fmts.append("srt")
-                else:
-                    payloads.append(make_vtt(cues).encode())
-                    fmts.append("vtt")
-            pdf["payload"] = payloads
-            pdf["fmt"] = fmts
-            yield pdf[["doc_id", "fmt", "payload"]]
+        cues = [
+            {
+                "start_ms": j * 1500 + (i % 7) * 13,
+                "end_ms": j * 1500 + (i % 7) * 13
+                + 800 + (i % 11) * 10,
+                "text": f"cue {i}-{j} caption",
+            }
+            for j in range(2 + i % 4)
+        ]
+        if i % 2 == 0:
+            return "srt", make_srt(cues).encode()
+        return "vtt", make_vtt(cues).encode()
 
     with_payload = MM.attach_payload(
-        docs.mapInPandas(gen, schema=gen_schema),
+        _synth(docs, "fmt string, payload binary", make),
         "payload",
         "text",
         F.col("fmt"),
@@ -3761,8 +3171,6 @@ def q_tar_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: build + parse are Arrow ``mapInPandas`` in the same
     partition; archive bytes never shuffle."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3771,32 +3179,15 @@ def q_tar_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 67 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, text):
         from parquet_editor_spark.sources.tararc import make_tar
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                members = [
-                    (f"shard/{i}/{j}.txt", text or "")
-                    for j in range(2 + i % 3)
-                ]
-                payloads.append(
-                    make_tar(members, mtime=i, gzip_compress=i % 2 == 1)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        members = [
+            (f"shard/{i}/{j}.txt", text or "") for j in range(2 + i % 3)
+        ]
+        return (make_tar(members, mtime=i, gzip_compress=i % 2 == 1),)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = _synth(docs, "payload binary", make)
     return (
         MM.tar_members(with_payload)
         .select(
@@ -3824,8 +3215,6 @@ def q_wds_samples_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals are arithmetic on (doc_id, j) + ``documents.text`` — a
     member attributed to the wrong sample or a lost component fails
     closed-form."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -3834,36 +3223,20 @@ def q_wds_samples_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 71 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, text):
         from parquet_editor_spark.sources.tararc import make_tar
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                members = []
-                for j in range(1 + i % 3):
-                    key = f"{i:08d}-{j}"
-                    members += [
-                        (f"{key}.txt", text or ""),
-                        (f"{key}.cls", str(i % 5)),
-                        (f"{key}.json", '{"id": %d}' % (i * 10 + j)),
-                    ]
-                payloads.append(
-                    make_tar(members, gzip_compress=i % 2 == 1)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        members = []
+        for j in range(1 + i % 3):
+            key = f"{i:08d}-{j}"
+            members += [
+                (f"{key}.txt", text or ""),
+                (f"{key}.cls", str(i % 5)),
+                (f"{key}.json", '{"id": %d}' % (i * 10 + j)),
+            ]
+        return (make_tar(members, gzip_compress=i % 2 == 1),)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = _synth(docs, "payload binary", make)
     return (
         MM.wds_samples(with_payload)
         .select(
@@ -3903,8 +3276,6 @@ def q_crawl_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, never visit the driver); everything downstream is
     codegen'd projections + one filter — no joins, no aggregation
     until the final sort."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.functions import text as X
     from parquet_editor_spark.operators import multimodal as MM
 
@@ -3914,46 +3285,28 @@ def q_crawl_curation_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 73 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, text):
         from parquet_editor_spark.sources.warc import make_warc
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                body = (
-                    f'<html><body class="c{i % 7}"><h1>Doc &amp; {i}'
-                    "</h1><p>"
-                    + (text or "").replace(
-                        " data ", " &quot;data&quot; "
-                    )
-                    + "</p><script>var x = 1;</script><style>p{}"
-                    "</style></body></html>"
-                )
-                recs = [
-                    {
-                        "warc_type": "response",
-                        "target_uri": f"https://crawl.example/{i}/{j}",
-                        "content_type": "text/html",
-                        "payload": body,
-                    }
-                    for j in range(1, 2 + i % 2)
-                ]
-                payloads.append(
-                    make_warc(recs, gzip_members=i % 2 == 1)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        body = (
+            f'<html><body class="c{i % 7}"><h1>Doc &amp; {i}'
+            "</h1><p>"
+            + (text or "").replace(" data ", " &quot;data&quot; ")
+            + "</p><script>var x = 1;</script><style>p{}"
+            "</style></body></html>"
+        )
+        recs = [
+            {
+                "warc_type": "response",
+                "target_uri": f"https://crawl.example/{i}/{j}",
+                "content_type": "text/html",
+                "payload": body,
+            }
+            for j in range(1, 2 + i % 2)
+        ]
+        return (make_warc(recs, gzip_members=i % 2 == 1),)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = _synth(docs, "payload binary", make)
     clean = X.strip_markup(F.col("body"))
     scored = (
         MM.warc_records(with_payload)
@@ -3996,8 +3349,6 @@ def q_crawl_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: archive explode inside one Arrow pass, codegen
     strip/quality/URL projections, then exactly ONE shuffle (on host,
     for the cap windows)."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.functions import text as X
     from parquet_editor_spark.functions import urls as U
     from parquet_editor_spark.operators import multimodal as MM
@@ -4008,56 +3359,38 @@ def q_crawl_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 89 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, text):
         from parquet_editor_spark.sources.warc import make_warc
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                body = (
-                    f'<html><body class="c{i % 7}"><h1>Doc &amp; {i}'
-                    "</h1><p>"
-                    + (text or "").replace(
-                        " data ", " &quot;data&quot; "
-                    )
-                    + "</p><script>var x = 1;</script><style>p{}"
-                    "</style></body></html>"
-                )
-                recs = []
-                for j in range(1, 2 + i % 3):
-                    scheme = "HTTPS" if (i + j) % 2 == 0 else "http"
-                    www = "WWW." if j % 2 == 0 else ""
-                    sub = "m." if i % 3 == 0 else ""
-                    tld = "com" if i % 2 == 0 else "co.uk"
-                    port = ":8080" if (i + j) % 3 == 0 else ""
-                    q = "?b=2&a=1" if j % 2 == 1 else ""
-                    recs.append(
-                        {
-                            "warc_type": "response",
-                            "target_uri": (
-                                f"{scheme}://{www}{sub}Site{i % 5}"
-                                f".{tld}{port}/page/{i}/{j}{q}"
-                            ),
-                            "content_type": "text/html",
-                            "payload": body,
-                        }
-                    )
-                payloads.append(
-                    make_warc(recs, gzip_members=i % 2 == 1)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        body = (
+            f'<html><body class="c{i % 7}"><h1>Doc &amp; {i}'
+            "</h1><p>"
+            + (text or "").replace(" data ", " &quot;data&quot; ")
+            + "</p><script>var x = 1;</script><style>p{}"
+            "</style></body></html>"
+        )
+        recs = []
+        for j in range(1, 2 + i % 3):
+            scheme = "HTTPS" if (i + j) % 2 == 0 else "http"
+            www = "WWW." if j % 2 == 0 else ""
+            sub = "m." if i % 3 == 0 else ""
+            tld = "com" if i % 2 == 0 else "co.uk"
+            port = ":8080" if (i + j) % 3 == 0 else ""
+            q = "?b=2&a=1" if j % 2 == 1 else ""
+            recs.append(
+                {
+                    "warc_type": "response",
+                    "target_uri": (
+                        f"{scheme}://{www}{sub}Site{i % 5}"
+                        f".{tld}{port}/page/{i}/{j}{q}"
+                    ),
+                    "content_type": "text/html",
+                    "payload": body,
+                }
+            )
+        return (make_warc(recs, gzip_members=i % 2 == 1),)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = _synth(docs, "payload binary", make)
     clean = X.strip_markup(F.col("body"))
     scored = (
         MM.warc_records(with_payload)
@@ -4106,8 +3439,6 @@ def _v5_curation_kept(
     with the same ``doc_id % 5`` — the boilerplate class line dedup
     cannot remove (the surrounding line differs) but exact-substring
     dedup excises."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.functions import text as X
     from parquet_editor_spark.functions import urls as U
     from parquet_editor_spark.operators import dedup as D
@@ -4115,82 +3446,56 @@ def _v5_curation_kept(
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("uri", T.StringType()),
-            T.StructField("warc", T.BinaryType()),
-            T.StructField("pdf", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, text):
         from parquet_editor_spark.sources.pdf import encode_pdf_modern
         from parquet_editor_spark.sources.warc import make_warc
 
-        for pdf in batches:
-            out = {"doc_id": [], "uri": [], "warc": [], "pdf": []}
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                scheme = "HTTPS" if i % 2 == 0 else "http"
-                www = "WWW." if i % 5 == 0 else ""
-                tld = "com" if i % 2 == 0 else "co.uk"
-                port = ":8080" if i % 7 == 0 else ""
-                path = {
-                    0: f"/p/{i}", 1: f"/priv/x{i}",
-                    2: f"/priv/ok/{i}", 3: f"/tmp/{i}", 4: f"/p/{i}",
-                }[i % 5]
-                q = "?b=2&a=1" if i % 2 == 1 else ""
-                uri = (
-                    f"{scheme}://{www}vsite{i % 97}.{tld}{port}{path}{q}"
+        scheme = "HTTPS" if i % 2 == 0 else "http"
+        www = "WWW." if i % 5 == 0 else ""
+        tld = "com" if i % 2 == 0 else "co.uk"
+        port = ":8080" if i % 7 == 0 else ""
+        path = {
+            0: f"/p/{i}", 1: f"/priv/x{i}",
+            2: f"/priv/ok/{i}", 3: f"/tmp/{i}", 4: f"/p/{i}",
+        }[i % 5]
+        q = "?b=2&a=1" if i % 2 == 1 else ""
+        uri = f"{scheme}://{www}vsite{i % 97}.{tld}{port}{path}{q}"
+        if i % 3 == 0:  # modern-PDF branch
+            clean = "".join(
+                ch if " " <= ch <= "~" else "#" for ch in (text or "")
+            )
+            pages = []
+            for p in range(1 + i % 2):
+                pages.append(
+                    [f"vdoc {i} page {p}"]
+                    + [
+                        clean[(p * 2 + m) * 40:(p * 2 + m) * 40 + 40]
+                        for m in range(2)
+                    ]
                 )
-                out["doc_id"].append(i)
-                out["uri"].append(uri)
-                if i % 3 == 0:  # modern-PDF branch
-                    clean = "".join(
-                        ch if " " <= ch <= "~" else "#"
-                        for ch in (text or "")
-                    )
-                    pages = []
-                    for p in range(1 + i % 2):
-                        pages.append(
-                            [f"vdoc {i} page {p}"]
-                            + [
-                                clean[(p * 2 + m) * 40:(p * 2 + m) * 40 + 40]
-                                for m in range(2)
-                            ]
-                        )
-                    out["warc"].append(None)
-                    out["pdf"].append(encode_pdf_modern(pages))
-                else:  # WARC-wrapped HTML branch
-                    body = (
-                        f'<html><body class="c{i % 7}"><h1>Doc &amp; {i}'
-                        "</h1><p>"
-                        + (text or "").replace(
-                            " data ", " &quot;data&quot; "
-                        )
-                        + "</p><script>var x = 1;</script><style>p{}"
-                        "</style></body></html>"
-                    )
-                    out["warc"].append(
-                        make_warc(
-                            [
-                                {
-                                    "warc_type": "response",
-                                    "target_uri": uri,
-                                    "content_type": "text/html",
-                                    "payload": body,
-                                }
-                            ],
-                            gzip_members=i % 2 == 1,
-                        )
-                    )
-                    out["pdf"].append(None)
-            import pandas as pd
+            return uri, None, encode_pdf_modern(pages)
+        # WARC-wrapped HTML branch
+        body = (
+            f'<html><body class="c{i % 7}"><h1>Doc &amp; {i}'
+            "</h1><p>"
+            + (text or "").replace(" data ", " &quot;data&quot; ")
+            + "</p><script>var x = 1;</script><style>p{}"
+            "</style></body></html>"
+        )
+        warc = make_warc(
+            [
+                {
+                    "warc_type": "response",
+                    "target_uri": uri,
+                    "content_type": "text/html",
+                    "payload": body,
+                }
+            ],
+            gzip_members=i % 2 == 1,
+        )
+        return uri, warc, None
 
-            yield pd.DataFrame(out)
-
-    ingested = docs.mapInPandas(gen, schema=gen_schema)
+    ingested = _synth(docs, "uri string, warc binary, pdf binary", make)
 
     html_txt = (
         MM.warc_records(
@@ -5131,8 +4436,6 @@ def q_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor-side).  The CRC-32C is pinned to the public check value
     in unit tests, so the oracle only needs the payload arithmetic:
     sizes/prefixes recompute from ``documents.text``."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -5141,33 +4444,16 @@ def q_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 79 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, text):
         from parquet_editor_spark.sources.tfrecord import make_tfrecord
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                payloads.append(
-                    make_tfrecord(
-                        [
-                            f"rec {i}-{j}\n" + (text or "")
-                            for j in range(1 + i % 3)
-                        ]
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        return (
+            make_tfrecord(
+                [f"rec {i}-{j}\n" + (text or "") for j in range(1 + i % 3)]
+            ),
+        )
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = _synth(docs, "payload binary", make)
     return (
         MM.tfrecord_records(with_payload)
         .select(
@@ -6974,8 +6260,6 @@ def q_epub_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilds each chapter's XHTML string arithmetically and applies
     the same strip chain, so a byte lost anywhere in the container
     walk or a spine misorder fails the md5."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.functions import text as X
     from parquet_editor_spark.operators import multimodal as MM
 
@@ -6985,33 +6269,16 @@ def q_epub_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 101 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, text):
         from parquet_editor_spark.sources.epub import make_epub
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                chapters = [
-                    (
-                        f"Chapter {i}-{j}",
-                        (text or "")[j * 80:(j + 1) * 80],
-                    )
-                    for j in range(1 + i % 3)
-                ]
-                payloads.append(make_epub(chapters, title=f"Doc {i}"))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        chapters = [
+            (f"Chapter {i}-{j}", (text or "")[j * 80:(j + 1) * 80])
+            for j in range(1 + i % 3)
+        ]
+        return (make_epub(chapters, title=f"Doc {i}"),)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = _synth(docs, "payload binary", make)
     clean = X.strip_markup(F.col("xhtml"))
     return (
         MM.epub_book_chapters(with_payload)
@@ -8392,8 +7659,6 @@ def q_wet_export_roundtrip(
     format; a header/length/CRLF defect on either side breaks the
     closed-form oracle, which recomputes every column from
     ``documents`` alone."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -8405,49 +7670,31 @@ def q_wet_export_roundtrip(
         .filter(F.col("doc_id") % 43 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, text):
         from parquet_editor_spark.sources.warc import make_warc
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                uri = f"https://wet{i % 23}.org/d/{i}"
-                payloads.append(
-                    make_warc(
-                        [
-                            {
-                                "warc_type": "conversion",
-                                "target_uri": uri,
-                                "content_type": "text/plain",
-                                "payload": text,
-                            },
-                            {
-                                "warc_type": "metadata",
-                                "target_uri": uri,
-                                "content_type": (
-                                    "application/warc-fields"
-                                ),
-                                "payload": (
-                                    f"extracted-chars: {len(text)}"
-                                ),
-                            },
-                        ],
-                        gzip_members=i % 2 == 1,
-                    )
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        uri = f"https://wet{i % 23}.org/d/{i}"
+        return (
+            make_warc(
+                [
+                    {
+                        "warc_type": "conversion",
+                        "target_uri": uri,
+                        "content_type": "text/plain",
+                        "payload": text,
+                    },
+                    {
+                        "warc_type": "metadata",
+                        "target_uri": uri,
+                        "content_type": "application/warc-fields",
+                        "payload": f"extracted-chars: {len(text)}",
+                    },
+                ],
+                gzip_members=i % 2 == 1,
+            ),
+        )
 
-    exported = docs.mapInPandas(gen, schema=gen_schema)
+    exported = _synth(docs, "payload binary", make)
     return (
         MM.warc_records(exported)
         .select(
@@ -8486,8 +7733,6 @@ def q_wet_shard_export_roundtrip(
     writer the export job runs per output file); re-parse walks each
     shard's bytes inside the executor.  Archive bytes shuffle once
     (doc text → its shard), the unavoidable export move."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -8502,19 +7747,9 @@ def q_wet_shard_export_roundtrip(
         )
     )
 
-    out_schema = T.StructType(
-        [
-            T.StructField("shard_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
     def build(pdf):
-        import pandas as pd
-
         from parquet_editor_spark.sources.warc import make_warc
 
-        pdf = pdf.sort_values("doc_id")
         recs = [
             {
                 "warc_type": "warcinfo",
@@ -8535,16 +7770,10 @@ def q_wet_shard_export_roundtrip(
                     "payload": text,
                 }
             )
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "payload": [make_warc(recs, gzip_members=True)],
-            }
-        )
+        return make_warc(recs, gzip_members=True)
 
-    exported = docs.groupBy("shard_id").applyInPandas(
-        build, schema=out_schema
-    )
+    # n / shard_bytes ride along and fall to the final select
+    exported = MM._pack_shards(docs, "shard_id", "doc_id", "n", build)
     return (
         MM.warc_records(exported)
         .select(
@@ -9432,8 +8661,6 @@ def q_pdf_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle rebuilds each page's text arithmetically from
     ``documents.text``, so any defect anywhere in the encoder/parser
     pair fails the md5."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -9447,33 +8674,19 @@ def q_pdf_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 83 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, clean):
         from parquet_editor_spark.sources.pdf import encode_pdf
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, clean in zip(pdf["doc_id"], pdf["clean"]):
-                i = int(raw)
-                pages = []
-                for p in range(1 + i % 3):
-                    lines = [f"doc {i} page {p}"] + [
-                        (clean or "")[(p * 3 + m) * 48:(p * 3 + m) * 48 + 48]
-                        for m in range(3)
-                    ]
-                    pages.append(lines)
-                payloads.append(encode_pdf(pages))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        pages = []
+        for p in range(1 + i % 3):
+            lines = [f"doc {i} page {p}"] + [
+                (clean or "")[(p * 3 + m) * 48:(p * 3 + m) * 48 + 48]
+                for m in range(3)
+            ]
+            pages.append(lines)
+        return (encode_pdf(pages),)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = _synth(docs, "payload binary", make)
     return (
         MM.pdf_pages(with_payload)
         .select(
@@ -9501,8 +8714,6 @@ def q_pdf_modern_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin, so the two entries cover disjoint doc sets and shapes; the
     oracle rebuilds each page arithmetically from ``documents.text``,
     failing the md5 on any defect in the modern encoder/parser pair."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -9516,33 +8727,19 @@ def q_pdf_modern_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 97 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, clean):
         from parquet_editor_spark.sources.pdf import encode_pdf_modern
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, clean in zip(pdf["doc_id"], pdf["clean"]):
-                i = int(raw)
-                pages = []
-                for p in range(1 + i % 4):
-                    lines = [f"mdoc {i} page {p}"] + [
-                        (clean or "")[(p * 3 + m) * 44:(p * 3 + m) * 44 + 44]
-                        for m in range(3)
-                    ]
-                    pages.append(lines)
-                payloads.append(encode_pdf_modern(pages))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        pages = []
+        for p in range(1 + i % 4):
+            lines = [f"mdoc {i} page {p}"] + [
+                (clean or "")[(p * 3 + m) * 44:(p * 3 + m) * 44 + 44]
+                for m in range(3)
+            ]
+            pages.append(lines)
+        return (encode_pdf_modern(pages),)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = _synth(docs, "payload binary", make)
     return (
         MM.pdf_pages(with_payload)
         .select(
@@ -9570,8 +8767,6 @@ def q_pdf_encrypted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     authentication or per-object decryption fails the md5; truly
     password-protected or AES documents gate loudly
     (tests/test_pdf.py)."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -9585,36 +8780,20 @@ def q_pdf_encrypted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 103 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, clean):
         from parquet_editor_spark.sources.pdf import encode_pdf_encrypted
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, clean in zip(pdf["doc_id"], pdf["clean"]):
-                i = int(raw)
-                pages = []
-                for p in range(1 + i % 3):
-                    lines = [f"edoc {i} page {p}"] + [
-                        (clean or "")[(p * 3 + m) * 36:(p * 3 + m) * 36 + 36]
-                        for m in range(3)
-                    ]
-                    pages.append(lines)
-                r, bits = (3, 128) if i % 2 == 0 else (2, 40)
-                payloads.append(
-                    encode_pdf_encrypted(pages, r=r, key_bits=bits)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        pages = []
+        for p in range(1 + i % 3):
+            lines = [f"edoc {i} page {p}"] + [
+                (clean or "")[(p * 3 + m) * 36:(p * 3 + m) * 36 + 36]
+                for m in range(3)
+            ]
+            pages.append(lines)
+        r, bits = (3, 128) if i % 2 == 0 else (2, 40)
+        return (encode_pdf_encrypted(pages, r=r, key_bits=bits),)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = _synth(docs, "payload binary", make)
     return (
         MM.pdf_pages(with_payload)
         .select(
@@ -9641,8 +8820,6 @@ def q_pdf_aes_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     authentication, per-object keys (AES salted with b"sAlT" per
     Algorithm 1).  Oracle rebuilds each page arithmetically; AESV3/R6
     and real user passwords gate loudly (tests/test_pdf.py)."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -9656,34 +8833,20 @@ def q_pdf_aes_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 107 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, clean):
         from parquet_editor_spark.sources.pdf import encode_pdf_encrypted
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, clean in zip(pdf["doc_id"], pdf["clean"]):
-                i = int(raw)
-                pages = []
-                for p in range(1 + i % 3):
-                    lines = [f"adoc {i} page {p}"] + [
-                        (clean or "")[(p * 3 + m) * 36:(p * 3 + m) * 36 + 36]
-                        for m in range(3)
-                    ]
-                    pages.append(lines)
-                cfm = "/AESV2" if i % 2 == 0 else "/V2"
-                payloads.append(encode_pdf_encrypted(pages, cfm=cfm))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        pages = []
+        for p in range(1 + i % 3):
+            lines = [f"adoc {i} page {p}"] + [
+                (clean or "")[(p * 3 + m) * 36:(p * 3 + m) * 36 + 36]
+                for m in range(3)
+            ]
+            pages.append(lines)
+        cfm = "/AESV2" if i % 2 == 0 else "/V2"
+        return (encode_pdf_encrypted(pages, cfm=cfm),)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = _synth(docs, "payload binary", make)
     return (
         MM.pdf_pages(with_payload)
         .select(
@@ -9709,8 +8872,6 @@ def q_pdf_aesv3_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the production walk.  Oracle rebuilds each page
     arithmetically; real user passwords and filter mixes gate loudly
     (tests/test_pdf.py)."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -9724,35 +8885,19 @@ def q_pdf_aesv3_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 109 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, clean):
         from parquet_editor_spark.sources.pdf import encode_pdf_encrypted
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, clean in zip(pdf["doc_id"], pdf["clean"]):
-                i = int(raw)
-                pages = []
-                for p in range(1 + i % 3):
-                    lines = [f"vdoc3 {i} page {p}"] + [
-                        (clean or "")[(p * 3 + m) * 36:(p * 3 + m) * 36 + 36]
-                        for m in range(3)
-                    ]
-                    pages.append(lines)
-                payloads.append(
-                    encode_pdf_encrypted(pages, cfm="/AESV3")
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        pages = []
+        for p in range(1 + i % 3):
+            lines = [f"vdoc3 {i} page {p}"] + [
+                (clean or "")[(p * 3 + m) * 36:(p * 3 + m) * 36 + 36]
+                for m in range(3)
+            ]
+            pages.append(lines)
+        return (encode_pdf_encrypted(pages, cfm="/AESV3"),)
 
-    with_payload = docs.mapInPandas(gen, schema=gen_schema)
+    with_payload = _synth(docs, "payload binary", make)
     return (
         MM.pdf_pages(with_payload)
         .select(
@@ -10084,8 +9229,6 @@ def q_stream_shard_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the member arithmetic."""
     import uuid
 
-    from pyspark.sql import types as T
-
     from parquet_editor_spark import streaming as ST
     from parquet_editor_spark.operators import multimodal as MM
 
@@ -10094,32 +9237,15 @@ def q_stream_shard_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i, text):
         from parquet_editor_spark.sources.tararc import make_tar
 
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads = []
-            for raw, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(raw)
-                members = [
-                    (f"shard/{i}/{j}.txt", text or "")
-                    for j in range(2 + i % 3)
-                ]
-                payloads.append(
-                    make_tar(members, mtime=i, gzip_compress=i % 2 == 1)
-                )
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        members = [
+            (f"shard/{i}/{j}.txt", text or "") for j in range(2 + i % 3)
+        ]
+        return (make_tar(members, mtime=i, gzip_compress=i % 2 == 1),)
 
-    members = MM.tar_members(docs.mapInPandas(gen, schema=gen_schema))
+    members = MM.tar_members(_synth(docs, "payload binary", make))
     rolled = members.groupBy(
         (F.col("doc_id") % 8).cast("long").alias("bucket")
     ).agg(
@@ -11119,8 +10245,6 @@ def q_png_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec defect fails the row loudly.  The oracle recomputes every
     column arithmetically from doc_id, so the differential checks the
     whole Spark-side codec path against closed-form truth."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -11129,44 +10253,30 @@ def q_png_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 17 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         from parquet_editor_spark.sources.png import encode_png
 
-        for pdf in batches:
-            ids = list(pdf["doc_id"])
-            pdf = pdf.copy()
-            payloads = []
-            for i in ids:
-                # r6: cycle the stored depth through 8/16/1/2/4 so the
-                # fixture exercises every decode path the codec claims;
-                # sub-byte depths are grayscale-only per the spec, and
-                # decode_png's 8-bit view reports channels=1 for them
-                w, h = 3 + i % 13, 2 + i % 11
-                depth = (8, 16, 1, 2, 4)[i % 5]
-                if depth in (1, 2, 4):
-                    ch = 1
-                    maxv = (1 << depth) - 1
-                    px = bytes(
-                        (i * 31 + j * 7) % (maxv + 1) for j in range(w * h)
-                    )
-                else:
-                    ch = 1 + i % 4
-                    px = bytes(
-                        (i * 31 + j * 7) % 256
-                        for j in range(w * h * ch * (depth // 8))
-                    )
-                payloads.append(encode_png(w, h, ch, px, depth=depth))
-            pdf["payload"] = payloads
-            yield pdf[["doc_id", "payload"]]
+        # r6: cycle the stored depth through 8/16/1/2/4 so the
+        # fixture exercises every decode path the codec claims;
+        # sub-byte depths are grayscale-only per the spec, and
+        # decode_png's 8-bit view reports channels=1 for them
+        w, h = 3 + i % 13, 2 + i % 11
+        depth = (8, 16, 1, 2, 4)[i % 5]
+        if depth in (1, 2, 4):
+            ch = 1
+            maxv = (1 << depth) - 1
+            px = bytes(
+                (i * 31 + j * 7) % (maxv + 1) for j in range(w * h)
+            )
+        else:
+            ch = 1 + i % 4
+            px = bytes(
+                (i * 31 + j * 7) % 256
+                for j in range(w * h * ch * (depth // 8))
+            )
+        return (encode_png(w, h, ch, px, depth=depth),)
 
-    payloads = docs.mapInPandas(gen, schema=gen_schema)
+    payloads = _synth(docs, "payload binary", make)
     tagged = MM.attach_payload(
         payloads, "payload", "image", "png"
     )
@@ -11202,8 +10312,6 @@ def q_wav_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes every emitted column arithmetically from
     doc_id (integer floor division both sides), so the differential
     checks the whole codec path against closed-form truth."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -11212,37 +10320,23 @@ def q_wav_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 19 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         from parquet_editor_spark.sources.wav import IEEE_FLOAT, PCM, encode_wav
 
-        for pdf in batches:
-            ids = list(pdf["doc_id"])
-            out = pdf.copy()
-            payloads = []
-            for i in ids:
-                rate = 8000 + (i % 5) * 2000
-                ch = 1 + i % 2
-                n = 50 + i % 97
-                # r6: cycle the sample format through float32 / PCM16 /
-                # PCM24 so the fixture exercises the IEEE-float path
-                # (frames are opaque blocks either way — the format tag
-                # must survive the resample's re-encode)
-                bits, tag = ((32, IEEE_FLOAT), (16, PCM), (24, PCM))[i % 3]
-                pcm = bytes(
-                    (i * 13 + j * 7) % 256 for j in range(n * ch * bits // 8)
-                )
-                payloads.append(encode_wav(rate, ch, bits, pcm, fmt_tag=tag))
-            out["payload"] = payloads
-            yield out[["doc_id", "payload"]]
+        rate = 8000 + (i % 5) * 2000
+        ch = 1 + i % 2
+        n = 50 + i % 97
+        # r6: cycle the sample format through float32 / PCM16 /
+        # PCM24 so the fixture exercises the IEEE-float path
+        # (frames are opaque blocks either way — the format tag
+        # must survive the resample's re-encode)
+        bits, tag = ((32, IEEE_FLOAT), (16, PCM), (24, PCM))[i % 3]
+        pcm = bytes(
+            (i * 13 + j * 7) % 256 for j in range(n * ch * bits // 8)
+        )
+        return (encode_wav(rate, ch, bits, pcm, fmt_tag=tag),)
 
-    payloads = docs.mapInPandas(gen, schema=gen_schema)
+    payloads = _synth(docs, "payload binary", make)
     tagged = MM.attach_payload(
         payloads, "payload", "audio", "wav"
     )
@@ -11279,8 +10373,6 @@ def q_y4m_frames_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse + frame walk; the oracle recomputes them arithmetically
     (frame checksums are additionally pinned by pytest against real
     frame bytes — md5 of generated YUV is not SQL-expressible)."""
-    from pyspark.sql import types as T
-
     from parquet_editor_spark.operators import multimodal as MM
 
     docs = (
@@ -11289,34 +10381,20 @@ def q_y4m_frames_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 23 == 0)
     )
 
-    gen_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches):
+    def make(i):
         from parquet_editor_spark.sources.y4m import encode_y4m
 
-        for pdf in batches:
-            ids = list(pdf["doc_id"])
-            out = pdf.copy()
-            payloads = []
-            for i in ids:
-                w = 2 * (1 + i % 5)
-                h = 2 * (1 + i % 3)
-                n = 3 + i % 7
-                fb = w * h * 3 // 2
-                frames = [
-                    bytes((i * 17 + f * 5 + j) % 256 for j in range(fb))
-                    for f in range(n)
-                ]
-                payloads.append(encode_y4m(w, h, (30, 1), frames))
-            out["payload"] = payloads
-            yield out[["doc_id", "payload"]]
+        w = 2 * (1 + i % 5)
+        h = 2 * (1 + i % 3)
+        n = 3 + i % 7
+        fb = w * h * 3 // 2
+        frames = [
+            bytes((i * 17 + f * 5 + j) % 256 for j in range(fb))
+            for f in range(n)
+        ]
+        return (encode_y4m(w, h, (30, 1), frames),)
 
-    payloads = docs.mapInPandas(gen, schema=gen_schema)
+    payloads = _synth(docs, "payload binary", make)
     tagged = MM.attach_payload(
         payloads, "payload", "video", "y4m"
     )

@@ -188,9 +188,10 @@ def _map_records(
 
         for pdf in batches:
             rows = []
-            for (_, row), codec in zip(pdf.iterrows(), codecs(pdf)):
-                p = row[payload_col]
-                base = [row[c] for c in keep_names]
+            carried = [pdf[c] for c in keep_names]
+            for p, codec, *base in zip(
+                pdf[payload_col], codecs(pdf), *carried
+            ):
                 recs = (
                     [null_rec] if p is None else per_payload(bytes(p), codec)
                 )
@@ -1274,10 +1275,9 @@ def shard_webdataset(
         from parquet_editor_spark.sources.tararc import make_tar
 
         members = []
-        for _, row in pdf.iterrows():
-            key = row[key_col]
-            for ext, col in components.items():
-                v = row[col]
+        cols = [pdf[c] for c in components.values()]
+        for key, *vals in zip(pdf[key_col], *cols):
+            for ext, v in zip(components, vals):
                 if v is None:
                     v = b""
                 elif isinstance(v, str):

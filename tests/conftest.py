@@ -90,6 +90,15 @@ def persisted_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
+def persisted_rdd_ids(spark) -> set[int]:
+    """The ids of the RDDs the SparkContext holds persisted. A test that
+    follows its own pin by id does not see the ContextCleaner unpersist
+    an earlier test's unreachable RDD (a dropped ``stage_boundary``
+    frame's localCheckpoint) between two counts."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in rdds.keySet().toArray()}
+
+
 @pytest.fixture(scope="session")
 def spark():
     from parquet_editor_spark.session import get_spark

@@ -8,6 +8,8 @@ import ast
 import os
 from pathlib import Path
 
+import pytest
+
 ENTRY = Path(__file__).resolve().parent.parent / "__spark_entry__.py"
 
 
@@ -152,3 +154,83 @@ def test_every_query_has_oracle_or_is_known_rows_only():
         "approx_stats",
         "embedding_ivf_topk",
     }, f"unexpected rows-only queries: {qs - osql}"
+
+
+def test_entry_worker_calls_only_in_synth():
+    """The entry module's Python-worker bodies go through ``_synth`` or
+    the ``multimodal`` helpers: one raw worker call, inside ``_synth``,
+    and no hand-written generator, generator schema or sample
+    decoder."""
+    tree = ast.parse(ENTRY.read_text())
+    worker = {"mapInPandas", "applyInPandas", "mapInArrow"}
+    owners = [
+        top.name
+        for top in tree.body
+        if isinstance(top, ast.FunctionDef)
+        for c in ast.walk(top)
+        if isinstance(c, ast.Call) and getattr(c.func, "attr", None) in worker
+    ]
+    assert owners == ["_synth"]
+    hand_written = [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.FunctionDef) and n.name in ("gen", "decode_samples")
+        or isinstance(n, ast.Name) and n.id == "gen_schema"
+    ]
+    assert not hand_written, f"hand-written worker bodies at {hand_written}"
+
+
+@pytest.mark.parametrize(
+    "rows, keep, fields, make, want_schema, want_rows",
+    [
+        # the keep columns, then the fields, in order
+        (
+            [(1, 10, "a"), (2, 20, "bb")],
+            ("doc_id", "n"),
+            "payload binary, codec string",
+            lambda i, n, t: (t.encode(), f"c{n}"),
+            [("doc_id", "bigint"), ("n", "int"), ("payload", "binary"),
+             ("codec", "string")],
+            [(1, 10, b"a", "c10"), (2, 20, b"bb", "c20")],
+        ),
+        # a maker's None is a null
+        (
+            [(1, 10, "a"), (2, 20, None)],
+            ("doc_id",),
+            "payload binary, codec string",
+            lambda i, n, t: (None, t),
+            [("doc_id", "bigint"), ("payload", "binary"), ("codec", "string")],
+            [(1, None, "a"), (2, None, None)],
+        ),
+        # empty input: no rows, the declared schema
+        (
+            [],
+            ("doc_id",),
+            "payload binary",
+            lambda i, n, t: (t.encode(),),
+            [("doc_id", "bigint"), ("payload", "binary")],
+            [],
+        ),
+        # the maker reads text, which is not carried
+        (
+            [(1, 10, "abc"), (2, 20, "de")],
+            ("doc_id",),
+            "n_chars int",
+            lambda i, n, t: (len(t) * n,),
+            [("doc_id", "bigint"), ("n_chars", "int")],
+            [(1, 30), (2, 40)],
+        ),
+    ],
+    ids=["keep_then_fields", "none_is_null", "empty", "uncarried_read"],
+)
+def test_synth(spark, rows, keep, fields, make, want_schema, want_rows):
+    import sys
+
+    sys.path.insert(0, str(ENTRY.parent))
+    import __spark_entry__ as M
+
+    docs = spark.createDataFrame(rows, "doc_id bigint, n int, text string")
+    out = M._synth(docs, fields, make, keep=keep)
+    got = [(f.name, f.dataType.simpleString()) for f in out.schema.fields]
+    assert got == want_schema
+    assert sorted(tuple(r) for r in out.collect()) == want_rows

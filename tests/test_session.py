@@ -4,7 +4,7 @@ load/save/pivot entry points."""
 
 import pandas as pd
 import pytest
-from conftest import persisted_rdds
+from conftest import persisted_rdd_ids, persisted_rdds
 
 from parquet_editor_spark.session import EditorSession
 
@@ -60,13 +60,15 @@ def test_preview_tracks_undo_redo(sess, sf_dir):
 
 def test_drop_table_releases_rid_cache(sess, sf_dir):
     """Regression (ADVICE r4): drop_table() must release the ordinal
-    pin a view took, not just the catalog entry."""
-    before = persisted_rdds(sess.spark)
+    pin a view took, not just the catalog entry. The pin is followed by
+    RDD id: the ContextCleaner may unpersist another RDD meanwhile."""
+    before = persisted_rdd_ids(sess.spark)
     sess.load("t", f"{sf_dir}/region.parquet")
     sess.preview("t", n=3)  # pins the binding's ordinals
-    assert persisted_rdds(sess.spark) == before + 1
+    pin = persisted_rdd_ids(sess.spark) - before
+    assert len(pin) == 1
     sess.drop_table("t")
-    assert persisted_rdds(sess.spark) == before
+    assert not pin & persisted_rdd_ids(sess.spark)
 
 
 def test_drop_table_releases_every_ordinal_pin(sess, sf_dir):
