@@ -25,9 +25,16 @@ Scale design (SURVEY.md §4 "custom work"):
 * ``ordered_rid`` (rank by key columns) range-partitions first —
   Spark's sampled range partitioner — then applies the same offset
   trick, so even a total order never serializes through one task.
-* Row deletes and paste splices re-rank by ordinal arithmetic that
-  binds the incoming ``__rid`` once (``_rerank``), so a page filter
-  pushed through k uncompacted re-ranks grows linearly in k.
+* A row delete has two halves: ``drop_rows`` filters the rows out
+  and the survivors keep their ``__rid``, leaving gaps; ``close_gaps``
+  re-ranks the survivors dense by ordinal arithmetic that binds the
+  incoming ``__rid`` once (``_rerank``). ``delete_rows`` is both.
+  ``EditorSession`` runs only the drop half per delete and keeps the
+  gap list on the driver, so its page views filter the pinned leaf's
+  own ``__rid``; it closes the gaps with one ``_rerank`` where dense
+  ordinals leave the session. Paste splices re-rank through the same
+  ``_rerank``, so a page filter pushed through k uncompacted re-ranks
+  grows linearly in k.
 * Point edits compose as ``when()`` projections (an edit OVERLAY).
   Chained edits deepen the plan, not the data; ``compact()``
   checkpoints the overlay into a materialized DataFrame when the
@@ -243,27 +250,49 @@ def _rerank(fn) -> Column:
     return F.transform(F.array(F.col(RID)), fn)[0]
 
 
-def delete_rows(df: DataFrame, rids: Iterable[int]) -> DataFrame:
-    """Positional delete (main.pyc:122-126) + dense re-rank.
-
-    Re-rank is ordinal arithmetic (rid minus deleted-below count, from
-    a broadcast array literal + higher-order filter), not a re-sort:
-    no shuffle, stays a narrow projection. The literal renders as ONE
-    SQL expression (litexpr: one Py4J round-trip per edit batch)."""
+def row_positions(rids: Iterable[int]) -> list[int]:
+    """Sorted distinct row positions. A negative one raises
+    ``IndexError`` before anything is planned: the ordinal arithmetic
+    would shift every row instead of deleting one."""
     rids = sorted(set(int(r) for r in rids))
-    if not rids:
+    if rids and rids[0] < 0:
+        raise IndexError(f"row position {rids[0]} is negative")
+    return rids
+
+
+def drop_rows(df: DataFrame, rids: Iterable[int]) -> DataFrame:
+    """The drop half of a delete: rows whose ``__rid`` is in ``rids``
+    go, and the survivors keep theirs, gaps and all."""
+    rids = row_positions(rids)
+    return df.filter(~F.col(RID).isin(rids)) if rids else df
+
+
+def close_gaps(df: DataFrame, gaps: Sequence[int]) -> DataFrame:
+    """The close-gaps half: ``__rid`` becomes dense again, each minus
+    the number of ``gaps`` (the dropped ids, sorted) below it.
+
+    Ordinal arithmetic from an array literal + higher-order filter,
+    not a re-sort: no shuffle, stays a narrow projection. The literal
+    renders as ONE SQL expression (litexpr: one Py4J round-trip)."""
+    if not gaps:
         return df
-    kept = df.filter(~F.col(RID).isin(rids))
-    gone = lit_longs(rids)
-    return kept.withColumn(
+    gone = lit_longs(gaps)
+    return df.withColumn(
         RID, _rerank(lambda r: r - F.size(F.filter(gone, lambda x: x < r)))
     )
+
+
+def delete_rows(df: DataFrame, rids: Iterable[int]) -> DataFrame:
+    """Positional delete (main.pyc:122-126) + dense re-rank: the drop
+    half, then the close-gaps half over the same ids."""
+    rids = row_positions(rids)
+    return close_gaps(drop_rows(df, rids), rids)
 
 
 def cut_rows(df: DataFrame, rids: Iterable[int]) -> tuple[DataFrame, DataFrame]:
     """Cut = clipboard extract + delete (main.py:53-56). The clipboard
     is just another DataFrame (re-ranked 0..k-1 in cut order)."""
-    rids = sorted(set(int(r) for r in rids))
+    rids = row_positions(rids)
     clip = (
         df.filter(F.col(RID).isin(rids))
         .withColumn(
@@ -282,6 +311,8 @@ def paste_rows(df: DataFrame, clip: DataFrame, pos: int) -> DataFrame:
     first lands at ordinal ``pos`` — pandas' concat+reset_index as
     ordinal arithmetic + ``unionByName``. No sort, no shuffle; the
     order is carried by ``__rid`` values, not physical layout."""
+    if pos < 0:
+        raise IndexError(f"paste position {pos} is negative")
     k = clip.count()
     if k == 0:
         return df

@@ -15,9 +15,10 @@ DataFrame. That single design decision buys:
 
 from __future__ import annotations
 
+import bisect
 import os
 import weakref
-from typing import Iterable, Optional
+from typing import Iterable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -147,9 +148,17 @@ class EditorSession:
     but unimplemented capability (readme.md:12, SURVEY.md §0.2).
 
     One ordinal path: views, line plots and positional edits read the
-    binding through ``with_rid``, the one place the session pins. The
-    session trusts only a ``__rid`` it made: ``with_rid`` re-ranks any
-    other. History owns the pins: see ``_release``.
+    binding through its pinned ordinals (``_pinned``), the one place
+    the session pins. The session trusts only a ``__rid`` it made; any
+    other is re-ranked. History owns the pins: see ``_release``.
+
+    A delete only drops rows: the survivors keep their pinned ``__rid``
+    and the session keeps, per binding, the sorted ids dropped since
+    its ordinals were last dense (its gaps). Views and cell edits map
+    positions to pinned ids on the driver (``_pinned_id``), so a page
+    view filters the pinned leaf's own column. The gaps are closed by
+    one re-rank only where dense ordinals leave the session: ``get``,
+    ``with_rid``, the line plot, cut and paste, and auto-compaction.
     """
 
     #: point edits before the overlay is checkpointed (SURVEY.md §4
@@ -175,9 +184,12 @@ class EditorSession:
         self._edit_depth: dict[str, int] = {}
         self._clipboard: Optional[DataFrame] = None
         # frames whose __rid the session made, mapped to whether
-        # with_rid pinned them; a __rid from anywhere else (a frame
+        # _pinned pinned them; a __rid from anywhere else (a frame
         # built from get() or SQL) may have gaps and is re-ranked
         self._ordinal: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+        # trusted frames with gaps, mapped to the sorted pinned __rid
+        # values their deletes dropped since the ordinals were dense
+        self._gaps: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
         EditorSession._live.add(self)
 
     # -- catalog -----------------------------------------------------
@@ -185,7 +197,8 @@ class EditorSession:
         return sorted(self._tables)
 
     def get(self, name: str) -> DataFrame:
-        return self._tables[name]
+        """The table; a ``__rid`` the session made is dense 0..n-1."""
+        return self._dense(self._tables[name])
 
     def bind(self, name: str, df: DataFrame, *, undoable: bool = True) -> DataFrame:
         """Rebind ``name`` to ``df``; previous binding goes on the undo
@@ -199,7 +212,8 @@ class EditorSession:
             self._undo.setdefault(name, []).append(self._tables[name])
             depth = self._edit_depth.get(name, 0) + 1
             if depth >= self.COMPACT_EVERY:
-                df, edited = E.compact(df), df
+                # the dense view is checkpointed: the gaps restart empty
+                df, edited = E.compact(self._dense(df)), df
                 if edited in self._ordinal:  # a checkpoint keeps the ordinals
                     self._ordinal[df] = False
                 depth = 0
@@ -207,7 +221,7 @@ class EditorSession:
         elif name not in self._tables:
             # a fresh binding starts a new overlay chain
             self._edit_depth[name] = 0
-        # else: a NON-undoable rebind of an existing table (with_rid's
+        # else: a NON-undoable rebind of an existing table (_pinned's
         # ordinal pin) derives from the current binding — the
         # uncompacted overlay chain carries forward, so the depth
         # counter must too.  Resetting here let edit streams that
@@ -219,18 +233,35 @@ class EditorSession:
         self._release(gone)  # the discarded redo stack left history
         return df
 
-    def _edit(self, name: str, df: DataFrame) -> DataFrame:
-        """Bind an edit; an edit of a trusted ``__rid`` stays trusted."""
-        if self._tables[name] in self._ordinal and E.RID in df.columns:
+    def _edit(self, name: str, df: DataFrame, gaps: Optional[Sequence[int]] = None) -> DataFrame:
+        """Bind an edit; an edit of a trusted ``__rid`` stays trusted,
+        with the binding's gaps, or with ``gaps`` where the edit sets
+        them (a delete adds to them, a splice's dense result has none)."""
+        cur = self._tables[name]
+        if cur in self._ordinal and E.RID in df.columns:
             self._ordinal[df] = False
+            gaps = self._gaps.get(cur) if gaps is None else gaps
+            if gaps:
+                self._gaps[df] = tuple(gaps)
         return self.bind(name, df)
+
+    def _dense(self, df: DataFrame) -> DataFrame:
+        """``df`` with its gaps closed by one re-rank, built on demand
+        and never per edit. It is trusted, so binding it back does not
+        re-pin."""
+        gaps = self._gaps.get(df)
+        if not gaps:
+            return df
+        dense = E.close_gaps(df, gaps)
+        self._ordinal[dense] = False
+        return dense
 
     def _register(self, name: str, df: DataFrame) -> None:
         """SQL sees the table as ``save`` writes it, without ``__rid``."""
         E.strip_rid(df).createOrReplaceTempView(name)
 
     def _release(self, gone: list[DataFrame]) -> None:
-        """The one release rule: a pin ``with_rid`` made is unpersisted
+        """The one release rule: a pin ``_pinned`` made is unpersisted
         when its binding leaves history — unless a pin still in history,
         in any table of any session, has the same plan. Spark caches by
         plan, so one file opened as two tables and pinned in both, in
@@ -369,11 +400,11 @@ class EditorSession:
         )
 
     # -- editor mutations (PandasModel.setData et al., SURVEY.md §2.3) --
-    def with_rid(self, name: str) -> DataFrame:
-        """The binding's ordinal view; views and positional edits read
-        through it. A binding whose ``__rid`` the session made is its
-        own. Any other is rebound, not undoably, to a pinned copy with
-        dense ordinals: in scan order, or in the order of a ``__rid`` it
+    def _pinned(self, name: str) -> DataFrame:
+        """The binding with pinned ordinals. A binding whose ``__rid``
+        the session made is its own (with gaps, after deletes). Any
+        other is rebound, not undoably, to a pinned copy with dense
+        ordinals: in scan order, or in the order of a ``__rid`` it
         brings (a frame built from ``get()`` may have gaps in it)."""
         df = self._tables[name]
         if df in self._ordinal:
@@ -382,31 +413,46 @@ class EditorSession:
         self._ordinal[df] = True
         return self.bind(name, df, undoable=False)
 
+    def with_rid(self, name: str) -> DataFrame:
+        """The binding's ordinal view, dense 0..n-1: ``_pinned`` with
+        its gaps closed."""
+        return self._dense(self._pinned(name))
+
     def set_cell(self, name: str, rid: int, column: str, value) -> DataFrame:
         """Typed positional cell write (main.pyc:68-79); overlay
         compaction happens in ``bind`` every COMPACT_EVERY edits."""
-        return self._edit(name, E.set_cell(self.with_rid(name), rid, column, value))
+        df = self._pinned(name)
+        return self._edit(name, E.set_cell(df, _pinned_id(self._gaps.get(df, ()), rid), column, value))
 
     def delete_rows(self, name: str, rids) -> DataFrame:
-        return self._edit(name, E.delete_rows(self.with_rid(name), rids))
+        """Positional delete (main.pyc:122-126): the rows' pinned ids
+        are dropped and join the binding's gaps."""
+        rids = E.row_positions(rids)
+        df = self._pinned(name)
+        gaps = self._gaps.get(df, ())
+        ids = [_pinned_id(gaps, p) for p in rids]
+        return self._edit(name, E.drop_rows(df, ids), sorted((*gaps, *ids)))
 
     def cut_rows(self, name: str, rids) -> DataFrame:
         """Cut to the session clipboard (main.py:53-56)."""
         from parquet_editor_spark.boundary import stage_boundary
 
+        rids = E.row_positions(rids)  # a negative one raises before a pin
         clip, rest = E.cut_rows(self.with_rid(name), rids)
         # snapshot the clip: pasted while still derived from the pre-cut
         # frame, each cut/paste pair would carry that frame twice and
         # the plan would double per pair; a snapshot also outlives the
         # table it was cut from
         self._clipboard = stage_boundary(clip)
-        return self._edit(name, rest)
+        return self._edit(name, rest, ())
 
     def paste_rows(self, name: str, pos: int) -> DataFrame:
         """Paste the clipboard at a position (main.py:58-65)."""
         if self._clipboard is None:
             raise ValueError("clipboard is empty; cut rows first")
-        return self._edit(name, E.paste_rows(self.with_rid(name), self._clipboard, pos))
+        if pos < 0:
+            raise IndexError(f"paste position {pos} is negative")
+        return self._edit(name, E.paste_rows(self.with_rid(name), self._clipboard, pos), ())
 
     def add_column(self, name: str, col: str, dtype: str = "string", pos=None, default=None) -> DataFrame:
         return self._edit(name, E.add_column(self._tables[name], col, dtype, pos, default))
@@ -418,23 +464,35 @@ class EditorSession:
     def preview(self, name: str, n: int = 100, offset: int = 0):
         """Paged display: the reference renders every visible cell via
         ``iloc`` (main.py:25-31); we collect only one page driver-side:
-        the ordinal RANGE ``[offset, offset+n)``, never
-        ``filter(...).limit(n)`` (n arbitrary rows in partition order),
-        its at most ``n`` rows ordered by ``__rid`` on the driver — a
-        Spark ``orderBy`` would add a sampling job and a shuffle."""
-        # EVERY page goes through the ordinal binding — page 0 via
-        # bare limit(n) would take n rows in physical partition order,
-        # which can disagree with the ordinal order after a splice
+        rows ``[offset, offset+n)``, never ``filter(...).limit(n)`` (n
+        arbitrary rows in partition order), its at most ``n`` rows
+        ordered by ``__rid`` on the driver — a Spark ``orderBy`` would
+        add a sampling job and a shuffle."""
+        # EVERY page goes through the pinned ordinals — page 0 via bare
+        # limit(n) would take n rows in physical partition order, which
+        # can disagree with the ordinal order after a splice
         # (union-appended rows carry interleaved rids), duplicating or
-        # dropping rows across page boundaries; the range filter plus
-        # the driver-side sort below is one Spark job
-        page = (
-            self.with_rid(name)
-            .filter(f"__rid >= {offset} AND __rid < {offset + n}")
-            .toPandas()
-        )
+        # dropping rows across page boundaries. The page's first and
+        # last positions map to pinned ids around the gaps, so the
+        # range filter reads the pinned leaf's own column and prunes
+        # its cached batches; with the driver-side sort below it is one
+        # Spark job
+        df = self._pinned(name)
+        gaps = self._gaps.get(df, ())
+        lo, hi = _pinned_id(gaps, offset), _pinned_id(gaps, offset + n - 1)
+        page = df.filter(f"__rid BETWEEN {lo} AND {hi}").toPandas()
         return (
             page.sort_values("__rid")
             .drop(columns="__rid")
             .reset_index(drop=True)
         )
+
+
+def _pinned_id(gaps: Sequence[int], pos: int) -> int:
+    """The pinned ``__rid`` of the row at position ``pos`` once the ids
+    in ``gaps`` (sorted) are gone: the least id with ``pos`` surviving
+    ids below it, found by stepping past the gaps up to it."""
+    rid = pos
+    while (nxt := pos + bisect.bisect_right(gaps, rid)) != rid:
+        rid = nxt
+    return rid

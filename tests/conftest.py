@@ -84,12 +84,6 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.slow)
 
 
-def persisted_rdds(spark) -> int:
-    """The number of RDDs the SparkContext holds persisted: the pin
-    count that lifecycle tests compare before and after a scenario."""
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
 def persisted_rdd_ids(spark) -> set[int]:
     """The ids of the RDDs the SparkContext holds persisted. A test that
     follows its own pin by id does not see the ContextCleaner unpersist
@@ -97,6 +91,13 @@ def persisted_rdd_ids(spark) -> set[int]:
     frame's localCheckpoint) between two counts."""
     rdds = spark.sparkContext._jsc.getPersistentRDDs()
     return {int(k) for k in rdds.keySet().toArray()}
+
+
+def pins_since(spark, before: set[int]) -> set[int]:
+    """The persisted RDDs not in ``before`` (a ``persisted_rdd_ids``
+    result): the pins a lifecycle test made since it took ``before``
+    and still holds."""
+    return persisted_rdd_ids(spark) - before
 
 
 @pytest.fixture(scope="session")

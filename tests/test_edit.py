@@ -6,7 +6,7 @@ the cut/paste splice (main.py:53-65)."""
 
 import pandas as pd
 import pytest
-from conftest import persisted_rdds
+from conftest import persisted_rdd_ids, pins_since
 
 from parquet_editor_spark.operators import edit as E
 
@@ -71,18 +71,18 @@ def test_with_rid_pins_one_frame_released_by_drop_table(spark):
     closing the document releases that one."""
     from parquet_editor_spark.session import EditorSession
 
-    before = persisted_rdds(spark)
+    before = persisted_rdd_ids(spark)
     out = E.with_rid(spark.range(0, 100, 1, 4).toDF("v"))
-    assert persisted_rdds(spark) == before + 1
+    assert len(pins_since(spark, before)) == 1
     assert out.storageLevel.useMemory
     out.unpersist()
-    assert persisted_rdds(spark) == before
+    assert not pins_since(spark, before)
     sess = EditorSession(spark)
     sess.bind("t", spark.range(0, 100, 1, 4).toDF("v"))
     sess.with_rid("t")
-    assert persisted_rdds(spark) == before + 1
+    assert len(pins_since(spark, before)) == 1
     sess.drop_table("t")
-    assert persisted_rdds(spark) == before
+    assert not pins_since(spark, before)
 
 
 def test_ordered_rid_follows_keys(spark, pdf):
@@ -209,12 +209,12 @@ def test_insert_rows_pins_nothing(spark, sdf, pdf):
     """The inserted rows carry driver-side ordinals, so repeated
     inserts add no persisted RDD, and the rows land where they did
     when each call pinned an ordinal copy of the inserted rows."""
-    before = persisted_rdds(spark)
+    before = persisted_rdd_ids(spark)
     rows = [{"i": 70, "f": 7.5, "b": True, "s": "g"}, {"i": 80, "f": None, "b": False, "s": "h"}]
     out = sdf
     for pos in (2, 0, 9):
         out = E.insert_rows(out, rows, pos)
-    assert persisted_rdds(spark) == before
+    assert not pins_since(spark, before)
     want = pdf.astype({"f": "float64"})
     for pos in (2, 0, 9):
         want = pd.concat([want.iloc[:pos], pd.DataFrame(rows), want.iloc[pos:]]).reset_index(drop=True)

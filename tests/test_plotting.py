@@ -2,7 +2,7 @@
 reduction shapes + the gated matplotlib render."""
 
 import pytest
-from conftest import persisted_rdds
+from conftest import persisted_rdd_ids, pins_since
 
 from parquet_editor_spark.operators import plotting as PL
 
@@ -28,7 +28,7 @@ def test_line_series_leaves_nothing_persisted(spark, order):
     """Outside the session, the ordinal line_series builds is released
     once the strided rows are taken: repeated calls on distinct frames
     leave the persisted-RDD count where it was, with the same series."""
-    before = persisted_rdds(spark)
+    before = persisted_rdd_ids(spark)
     for k in range(3):
         df = spark.range(0, 40, 1, 4).selectExpr(f"CAST((39 - id) * {k + 1} AS DOUBLE) AS v")
         got = PL.line_series(df, ["v"], max_points=10, order=order).toPandas()
@@ -36,7 +36,7 @@ def test_line_series_leaves_nothing_persisted(spark, order):
         at = (lambda x: x) if order else (lambda x: 39 - x)
         assert sorted(got["x"]) == list(range(0, 40, 4))
         assert got.sort_values("x")["v"].tolist() == [at(x) * (k + 1.0) for x in range(0, 40, 4)]
-    assert persisted_rdds(spark) == before
+    assert not pins_since(spark, before)
 
 
 def test_line_series_rejects_non_numeric(spark):

@@ -4,7 +4,7 @@ load/save/pivot entry points."""
 
 import pandas as pd
 import pytest
-from conftest import persisted_rdd_ids, persisted_rdds
+from conftest import persisted_rdd_ids, pins_since
 
 from parquet_editor_spark.session import EditorSession
 
@@ -65,7 +65,7 @@ def test_drop_table_releases_rid_cache(sess, sf_dir):
     before = persisted_rdd_ids(sess.spark)
     sess.load("t", f"{sf_dir}/region.parquet")
     sess.preview("t", n=3)  # pins the binding's ordinals
-    pin = persisted_rdd_ids(sess.spark) - before
+    pin = pins_since(sess.spark, before)
     assert len(pin) == 1
     sess.drop_table("t")
     assert not pin & persisted_rdd_ids(sess.spark)
@@ -78,31 +78,31 @@ def test_drop_table_releases_every_ordinal_pin(sess, sf_dir):
     it, and drop_table must release it from there too. Five edits stay
     below COMPACT_EVERY, whose localCheckpoint is not a persist and is
     not released by unpersist."""
-    before = persisted_rdds(sess.spark)
+    before = persisted_rdd_ids(sess.spark)
     sess.load("t", f"{sf_dir}/region.parquet")
     sess.with_rid("t")
     sess.preview("t", n=3)  # a view of the pinned binding itself
     for k in range(5):
         sess.set_cell("t", k, "r_name", f"edit {k}")
     sess.preview("t", n=3)
-    assert persisted_rdds(sess.spark) == before + 1
+    assert len(pins_since(sess.spark, before)) == 1
     sess.drop_table("t")
-    assert persisted_rdds(sess.spark) == before
+    assert not pins_since(sess.spark, before)
 
 
 def test_redo_clear_releases_its_pin(sess, sf_dir):
     """A pinned binding on the redo stack leaves history when a new
     edit discards that stack, and its pin goes with it."""
-    before = persisted_rdds(sess.spark)
+    before = persisted_rdd_ids(sess.spark)
     sess.load("t", f"{sf_dir}/lineitem.parquet")
     sess.pivot("t", "l_returnflag", "l_linestatus", "l_extendedprice", "mean")
     sess.with_rid("t")
-    assert persisted_rdds(sess.spark) == before + 1
+    assert len(pins_since(sess.spark, before)) == 1
     sess.undo("t")
     sess.add_column("t", "note")
-    assert persisted_rdds(sess.spark) == before
+    assert not pins_since(sess.spark, before)
     sess.drop_table("t")
-    assert persisted_rdds(sess.spark) == before
+    assert not pins_since(sess.spark, before)
 
 
 @pytest.mark.parametrize("explicit_with_rid", [False, True], ids=["implicit", "explicit"])
@@ -111,7 +111,7 @@ def test_view_then_edit_keeps_its_pin(sess, sf_dir, explicit_with_rid):
     so an edit that follows, with or without a ``with_rid`` call in
     between, derives from that pin: later views run one job and the
     session holds one persisted RDD."""
-    before = persisted_rdds(sess.spark)
+    before = persisted_rdd_ids(sess.spark)
     sess.load("t", f"{sf_dir}/lineitem.parquet")
     first = sess.preview("t", n=5)
     if explicit_with_rid:
@@ -119,27 +119,27 @@ def test_view_then_edit_keeps_its_pin(sess, sf_dir, explicit_with_rid):
     sess.set_cell("t", 1, "l_returnflag", "E")
     page, jobs = _jobs(sess.spark, f"pes-test-view-first-{explicit_with_rid}", lambda: sess.preview("t", n=5))
     assert jobs == 1
-    assert persisted_rdds(sess.spark) == before + 1
+    assert len(pins_since(sess.spark, before)) == 1
     assert page["l_returnflag"].tolist() == [first["l_returnflag"][0], "E", *first["l_returnflag"][2:]]
     sess.drop_table("t")
-    assert persisted_rdds(sess.spark) == before
+    assert not pins_since(sess.spark, before)
 
 
 def test_identical_plans_share_one_pin(sess, sf_dir):
     """One file opened as two tables and pinned in both shares one
     cache entry; closing one table keeps the other's pin, so its views
     stay one job, and closing both releases it."""
-    before = persisted_rdds(sess.spark)
+    before = persisted_rdd_ids(sess.spark)
     for name in ("a", "b"):
         sess.load(name, f"{sf_dir}/lineitem.parquet")
         sess.with_rid(name)
-    assert persisted_rdds(sess.spark) == before + 1
+    assert len(pins_since(sess.spark, before)) == 1
     sess.drop_table("a")
-    assert persisted_rdds(sess.spark) == before + 1
+    assert len(pins_since(sess.spark, before)) == 1
     _, jobs = _jobs(sess.spark, "pes-test-view-shared", lambda: sess.preview("b", n=5))
     assert jobs == 1
     sess.drop_table("b")
-    assert persisted_rdds(sess.spark) == before
+    assert not pins_since(sess.spark, before)
 
 
 @pytest.mark.parametrize("first", ["a", "b"])
@@ -148,18 +148,18 @@ def test_a_pin_shared_across_sessions_goes_with_its_last_holder(spark, sf_dir, f
     stays while either session still has the table open, in whichever
     order they close it."""
     sessions = {"a": EditorSession(spark), "b": EditorSession(spark)}
-    before = persisted_rdds(spark)
+    before = persisted_rdd_ids(spark)
     try:
         for s in sessions.values():
             s.load("t", f"{sf_dir}/lineitem.parquet")
             s.preview("t", n=5)
-        assert persisted_rdds(spark) == before + 1
+        assert len(pins_since(spark, before)) == 1
         sessions[first].drop_table("t")
-        assert persisted_rdds(spark) == before + 1
+        assert len(pins_since(spark, before)) == 1
         last = sessions["b" if first == "a" else "a"]
         assert len(last.preview("t", n=5)) == 5
         last.drop_table("t")
-        assert persisted_rdds(spark) == before
+        assert not pins_since(spark, before)
     finally:
         for s in sessions.values():
             for name in s.names():
@@ -186,13 +186,13 @@ def test_frame_built_from_the_table_gets_dense_ordinals(sess, sf_dir, pin):
 def test_reload_closes_the_old_history(sess, sf_dir):
     """Loading over an open table replaces it as a new window would:
     the old history, and the pin a view took in it, go."""
-    before = persisted_rdds(sess.spark)
+    before = persisted_rdd_ids(sess.spark)
     sess.load("t", f"{sf_dir}/region.parquet")
     sess.preview("t", n=2)
     sess.load("t", f"{sf_dir}/nation.parquet")
-    assert persisted_rdds(sess.spark) == before
+    assert not pins_since(sess.spark, before)
     assert len(sess.preview("t", n=100)) == 25
-    assert persisted_rdds(sess.spark) == before + 1
+    assert len(pins_since(sess.spark, before)) == 1
     assert not sess.can_undo("t")
 
 
@@ -460,19 +460,94 @@ def test_line_plots_pin_nothing_past_the_binding(sess, spark):
     """Line plots reuse the binding's ordinal view: repeated plots add
     no persisted RDD, and closing the table returns the count to its
     value before the table was opened."""
-    before = persisted_rdds(spark)
+    before = persisted_rdd_ids(spark)
     sess.bind("t", spark.range(0, 50, 1, 4).selectExpr("id * 1.5 AS v"))
     for _ in range(3):
         sess.plot("t", kind="line", cols=["v"])
-    assert persisted_rdds(spark) == before + 1
+    assert len(pins_since(spark, before)) == 1
     sess.preview("t", n=5)
-    assert persisted_rdds(spark) == before + 1
+    assert len(pins_since(spark, before)) == 1
     sess.drop_table("t")
-    assert persisted_rdds(spark) == before
+    assert not pins_since(spark, before)
     sess.bind("u", spark.range(0, 50, 1, 4).selectExpr("id * 1.5 AS v"))
     sess.with_rid("u")
     for _ in range(3):
         sess.plot("u", kind="line", cols=["v"])
-    assert persisted_rdds(spark) == before + 1
+    assert len(pins_since(spark, before)) == 1
     sess.drop_table("u")
-    assert persisted_rdds(spark) == before
+    assert not pins_since(spark, before)
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["delete_rows", "cut_rows", "paste_rows", "session.delete_rows", "session.cut_rows", "session.paste_rows"],
+)
+def test_negative_position_raises_without_a_job(sess, spark, op):
+    """A negative row position raises IndexError before any Spark job.
+    The ordinal arithmetic took -1 for a row below the first: nothing
+    was deleted and every ``__rid`` moved down by one, so row 0 left
+    every page view while it stayed in saves."""
+    from parquet_editor_spark.operators import edit as E
+
+    rows = spark.createDataFrame([(float(i),) for i in range(5)], "v double")
+    sess.bind("t", rows)
+    if op == "session.paste_rows":
+        sess.cut_rows("t", [0])
+    pinned = E.with_rid(rows)
+    call = {
+        "delete_rows": lambda: E.delete_rows(pinned, [-1]),
+        "cut_rows": lambda: E.cut_rows(pinned, [2, -1]),
+        "paste_rows": lambda: E.paste_rows(pinned, pinned, -1),
+        "session.delete_rows": lambda: sess.delete_rows("t", [-1]),
+        "session.cut_rows": lambda: sess.cut_rows("t", [2, -1]),
+        "session.paste_rows": lambda: sess.paste_rows("t", -1),
+    }[op]
+    _, jobs = _jobs(spark, f"pes-test-negative-{op}", lambda: pytest.raises(IndexError, call))
+    assert jobs == 0
+    want = [float(i) for i in range(1 if op == "session.paste_rows" else 0, 5)]
+    assert sess.preview("t")["v"].tolist() == want
+    pinned.unpersist()
+
+
+def _viewed(monkeypatch, sess, name, **kw):
+    """A page view and the frame it collected."""
+    seen = []
+    cls = type(sess.spark.range(1))
+    collect = cls.toPandas
+    with monkeypatch.context() as m:
+        m.setattr(cls, "toPandas", lambda df: seen.append(df) or collect(df))
+        page = sess.preview(name, **kw)
+    return page, seen[-1]
+
+
+def test_page_view_after_deletes_filters_the_pinned_leaf(sess, spark, monkeypatch):
+    """Session deletes only drop rows, so a page view after k of them
+    filters the pinned leaf's own ``__rid``: its optimised plan holds
+    no re-rank lambda, has the same shape for every k apart from the
+    dropped-id predicates, and its ``__rid`` range reaches the cached
+    scan, where it prunes batches."""
+    import re
+
+    shapes = {}
+    for k in (0, 2, 4):
+        sess.bind("t", spark.range(0, 400, 1, 4).toDF("v"))
+        sess.with_rid("t")
+        want = list(range(400))
+        for j in range(k):
+            rids = [3 + j, 50 + 7 * j, 200]
+            sess.delete_rows("t", rids)
+            want = [v for i, v in enumerate(want) if i not in rids]
+        page, frame = _viewed(monkeypatch, sess, "t", n=20, offset=100)
+        assert page["v"].tolist() == want[100:120]
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        assert "lambda" not in plan and "transform" not in plan, plan
+        # expression ids, plan ids and literals aside, the plan drops
+        # only the conjuncts that list each delete's ids
+        shape = re.sub(r"NOT __rid#0L IN \([0,]*\)", "%", re.sub(r"\d+", "0", plan))
+        shapes[k] = re.sub(r"[()]", "", shape).replace("% AND ", "")
+        scan = frame._jdf.queryExecution().executedPlan().toString()
+        assert re.search(
+            r"InMemoryTableScan \[__rid#\d+L, v#\d+L\], \[[^\]]*\(__rid#\d+L >= \d+\), \(__rid#\d+L <=? \d+\)\]", scan
+        ), scan
+        sess.drop_table("t")
+    assert shapes[0] == shapes[2] == shapes[4], shapes
